@@ -85,8 +85,10 @@ object GraftSession {
     // the planner can only prove at runtime (PlanSpec pins it engages)
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "50MB")
-    // engine Catalyst extensions (automatic range-join bucketing —
-    // inert until spark.graft.rangeJoin.binSize is set)
+    // engine Catalyst extensions: the custom function catalog (the only
+    // path by which it reaches a session, newSession() children
+    // included) and automatic range-join bucketing (inert until
+    // spark.graft.rangeJoin.binSize is set)
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
 
@@ -100,16 +102,6 @@ object GraftSession {
   def local(cpus: Int): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.RollingMinHash.register(s)
-    graft.functions.CdcChunks.register(s)
-    graft.functions.SuffixBound.register(s)
-    graft.functions.DotI64.register(s)
-    graft.functions.MinHashAgg.register(s)
-    graft.functions.MinKAgg.register(s)
-    graft.functions.TopKByAgg.register(s)
-    graft.functions.SimHashAgg.register(s)
-    graft.functions.FreqSketch.register(s)
-    graft.functions.QuantileSketch.register(s)
     s
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
-import graft.artifacts.{Artifacts, RunResult}
+import graft.artifacts.{Artifacts, Json, RunResult}
 import graft.core._
 import graft.exec.{Compiler, Materializer, RelationStore, Runner, RunOptions, Sources}
 import graft.graph.Linker
@@ -333,20 +333,19 @@ object Main {
             val keys = flags.get("output-keys").map(_.split(",").toSeq)
               .getOrElse(Seq("name", "package_name", "depends_on", "tags",
                 "config", "resource_type", "original_file_path", "unique_id"))
-            def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-            def arr(xs: Seq[String]) = xs.map(js).mkString("[", ",", "]")
+            def arr(xs: Seq[String]) = xs.map(Json.quote).mkString("[", ",", "]")
             ids.flatMap(byId.get).map { n =>
               val fields: Seq[(String, String)] = Seq(
-                "name" -> js(n.name),
-                "package_name" -> js(n.packageName),
+                "name" -> Json.quote(n.name),
+                "package_name" -> Json.quote(n.packageName),
                 "depends_on" -> s"""{"nodes":${arr(n.dependsOn)}}""",
                 "tags" -> arr(n.tags),
-                "config" -> s"""{"materialized":${js(n.config.materialized.toString)},"enabled":${n.config.enabled}}""",
-                "resource_type" -> js(n.resourceType.toString),
-                "original_file_path" -> js(pathOf(n)),
-                "unique_id" -> js(n.uniqueId))
+                "config" -> s"""{"materialized":${Json.quote(n.config.materialized.toString)},"enabled":${n.config.enabled}}""",
+                "resource_type" -> Json.quote(n.resourceType.toString),
+                "original_file_path" -> Json.quote(pathOf(n)),
+                "unique_id" -> Json.quote(n.uniqueId))
               fields.filter(f => keys.contains(f._1))
-                .map { case (k, v) => s"${js(k)}:$v" }.mkString("{", ",", "}")
+                .map { case (k, v) => s"${Json.quote(k)}:$v" }.mkString("{", ",", "}")
             }
           case other =>
             throw new IllegalArgumentException(s"invalid --output: $other")

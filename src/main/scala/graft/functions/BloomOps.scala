@@ -52,9 +52,6 @@ object BloomOps {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Membership probe against a driver-held serialized filter (the
     * binary is a Literal → constant-folded and shipped with the plan).
     */

@@ -61,9 +61,6 @@ object CountMin {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   def cmsSketch(item: Column, w: Int = DefaultWidth): Column =
     call_function("cms_sketch", item, lit(w))
 

@@ -57,9 +57,6 @@ object FreqSketch {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   def freqSketch(item: Column, k: Int = DefaultK): Column =
     call_function("freq_sketch", item, lit(k))
 }

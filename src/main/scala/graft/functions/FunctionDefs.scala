@@ -1,22 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Central catalog of the engine's custom Catalyst functions.
   *
-  * Functions registered imperatively into one session's
-  * `functionRegistry` do NOT exist in `newSession()` children — a
-  * session-per-job server sweeping operators that spell `dot_i64`/
-  * `minhash_sig`/`knn_topk` in SQL text would fail name resolution on
-  * every job session (caught by the resident-cache session sweep once
-  * it exercised a registry-based operator). The catalog is therefore
-  * injected through [[graft.plans.GraftExtensions]], which Spark
-  * applies to EVERY session built over the context (children
-  * included); [[registerAll]] remains for sessions constructed without
-  * the extensions conf.
+  * The catalog reaches sessions by ONE path: injection through
+  * [[graft.plans.GraftExtensions]] (`spark.sql.extensions`, set by
+  * [[graft.GraftSession]]), which Spark applies to EVERY session built
+  * over the context, `newSession()` children included. Functions
+  * registered imperatively into one session's `functionRegistry` would
+  * not exist in those children — a session-per-job server sweeping
+  * operators that spell `dot_i64`/`minhash_sig`/`knn_topk` in SQL text
+  * would fail name resolution on every job session.
   */
 object FunctionDefs {
   type Desc = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
@@ -30,11 +27,6 @@ object FunctionDefs {
       FreqSketch.descriptions ++ QuantileSketch.descriptions ++
       CountMin.descriptions ++ BloomOps.descriptions ++ HashOps.descriptions ++
       GramStats.descriptions
-
-  def registerAll(spark: SparkSession, ds: Seq[Desc]): Unit =
-    ds.foreach { case (id, info, b) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, b)
-    }
 
   /** Injection hook for [[graft.plans.GraftExtensions]]. */
   def injectAll(e: SparkSessionExtensions): Unit =

@@ -87,9 +87,6 @@ object GramStats {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: `gramStats(w)` → struct<top2, n2, n3, nd3>. */
   def gramStats(w: Column): Column = call_function("gram_stats", w)
 }

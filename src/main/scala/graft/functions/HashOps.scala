@@ -133,9 +133,6 @@ object HashOps {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form of [[md5Long]]. */
   def md5LongCol(c: Column): Column = call_function("md5_long", c)
 

@@ -68,9 +68,6 @@ object MinHashAgg {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: minhash_sig(hashCol) → array<long> of length nPerm. */
   def minhashSig(hashCol: Column, nPerm: Int = DefaultPerms): Column =
     call_function("minhash_sig", hashCol, lit(nPerm))
@@ -82,7 +79,7 @@ object MinHashAgg {
   * ser/de only at shuffle boundaries. Replaces the earlier
   * `Aggregator`+`udaf` formulation, whose per-row encoder round-trip
   * (box input, wrap buffer) cost ~1.7 µs/row — the dominant stage of
-  * the whole LSH pipeline under profiling (tools.Profile).
+  * the whole LSH pipeline in a per-stage profile (OPTIMIZATION_r15.md).
   */
 case class MinHashSig(
     child: Expression,

@@ -51,9 +51,6 @@ object MinKAgg {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: minK(col, k) → array<long>, ascending, size ≤ k. */
   def minK(c: Column, k: Int): Column = call_function("min_k", c, lit(k))
 }

@@ -59,9 +59,6 @@ object QuantileSketch {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: array<struct<v, w>> of sketch support points. */
   def quantileSketch(c: Column, k: Int): Column =
     call_function("quantile_sketch", c, lit(k))

@@ -89,9 +89,6 @@ object RollingMinHash {
       })
     b.result()
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
 }
 
 /** Content-defined chunking (LBFS, Muthitacharoen et al. SOSP'01): cut
@@ -211,7 +208,4 @@ object CdcChunks {
       })
     b.result()
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
 }

@@ -43,9 +43,6 @@ object SimHashAgg {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: `simhashAgg(h)` → BIGINT packed signature. */
   def simhashAgg(h: Column): Column = call_function("simhash_agg", h)
 }

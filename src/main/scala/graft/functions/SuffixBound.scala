@@ -104,9 +104,6 @@ object SuffixBound {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Exact intersection size of two sorted long arrays (linear merge). */
   def intersectCount(a: Array[Long], b: Array[Long]): Long = {
     var i = 0

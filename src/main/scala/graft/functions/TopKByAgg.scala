@@ -56,9 +56,6 @@ object TopKByAgg {
     b.result()
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
-
   /** Column form: `knnTopK(cos, nbr, dot, k)` → array<struct<nbr, dot, cos>>. */
   def knnTopK(cos: Column, nbr: Column, dot: Column, k: Int): Column =
     call_function("knn_topk", cos, nbr, dot, lit(k))

@@ -66,7 +66,4 @@ object DotI64 {
       })
     b.result()
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FunctionDefs.registerAll(spark, descriptions)
 }

@@ -271,7 +271,6 @@ object CurateOps {
     * the realized FPR. Returns (train grams, eval grams, candidates).
     */
   def bloomCandidateGrams(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.BloomOps.register(s)
     val n = 8
     val grams = tokens(s, dir).filter(size(col("w")) >= n)
       .select(col("doc_id"),

@@ -672,11 +672,7 @@ object DedupOps {
     // intersection self-join (hash(h) clusters (doc_id, h), and the
     // self-join's required distribution IS hash(h) — exchange reuse)
     val shc = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      // pinned count: the distinct + intersection self-join downstream
-      // are shingle-volume work AQE's byte estimate under-sizes (see
-      // curateSourceOverlap)
-      .repartition(sh.sparkSession.sparkContext.defaultParallelism, col("h"))
-      .dropDuplicates("doc_id", "h")
+      .repartition(col("h")).dropDuplicates("doc_id", "h")
     val sizes = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = shc.select(col("doc_id").as("doc_a"), col("h"))
     val b = shc.select(col("doc_id").as("doc_b"), col("h"))

@@ -8,8 +8,9 @@ import graft.sources.Tables
 
 /** Relational query battery over the TPC-H-style tables.
   *
-  * Every query here is a `(SparkSession, sfDir) => DataFrame` wired into
-  * [[graft.SparkEntry.queries]] and checked against a DuckDB oracle.
+  * Every query here is a `(SparkSession, sfDir) => DataFrame` registered
+  * in [[graft.SparkEntry.specs]] with its DuckDB oracle (the approximate
+  * `qApproxSketch` with the reason it has none).
   *
   * Numeric discipline (applies to the whole file): any aggregate over a
   * floating-point money column is computed in integer cents

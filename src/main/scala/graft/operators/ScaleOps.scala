@@ -101,7 +101,6 @@ object ScaleOps {
     * .CountMin.DefaultWidth]].
     */
   def qCmsCounts(s: SparkSession, dir: String, w: Int = 16): DataFrame = {
-    graft.functions.CountMin.register(s)
     val toks = Tables.load(s, dir, "documents")
       .select(explode(split(TextOps.normalized(col("text")), " ")).as("t"))
       .filter(col("t") =!= "")

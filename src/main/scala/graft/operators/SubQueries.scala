@@ -21,7 +21,7 @@ import graft.sources.Tables
   * Numeric hygiene: money/average comparisons are integer-exact
   * (cents × counts, never float AVG) so the DuckDB oracle hashes
   * bit-for-bit — a float AVG boundary could flip a row between
-  * engines (see SparkEntry.oracleSql scaladoc).
+  * engines (see the SparkEntry.specs scaladoc).
   */
 object SubQueries {
   private def views(s: SparkSession, dir: String, names: String*): Unit =

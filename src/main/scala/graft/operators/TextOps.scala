@@ -192,7 +192,6 @@ object TextOps {
     * this IS hash-verified despite the custom Expression.
     */
   def txtWinnow(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.RollingMinHash.register(s)
     val fp = docs(s, dir).select(col("doc_id"),
       expr("rolling_min_hash(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ')), 16)").as("fp"))
     val groups = fp.groupBy(col("fp")).agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper"))

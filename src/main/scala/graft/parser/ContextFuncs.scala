@@ -2,6 +2,8 @@ package graft.parser
 
 import scala.jdk.CollectionConverters._
 
+import graft.artifacts.Json
+
 /** The data-shaping context functions of the reference's base context
   * (core/dbt/context/base.py:375-631): `fromjson` / `tojson` /
   * `fromyaml` / `toyaml` / `set` / `set_strict` / `zip` / `zip_strict`.
@@ -127,24 +129,13 @@ object ContextFuncs {
   def toJson(v: Any): String = v match {
     case null => "null"
     case m: Map[_, _] =>
-      m.map { case (k, x) => jsonStr(String.valueOf(k)) + ": " + toJson(x) }
+      m.map { case (k, x) => Json.quote(String.valueOf(k)) + ": " + toJson(x) }
         .mkString("{", ", ", "}")
     case l: Seq[_] => l.map(toJson).mkString("[", ", ", "]")
-    case s: String => jsonStr(s)
+    case s: String => Json.quote(s)
     case b: Boolean => b.toString
     case n => String.valueOf(n)
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   // ---- YAML emission (MiniYaml parses; this is its writing half) ----
 
@@ -161,7 +152,7 @@ object ContextFuncs {
 
   private def scalar(v: Any): String = v match {
     case null => "null"
-    case s: String => if (needsQuote(s)) jsonStr(s) else s
+    case s: String => if (needsQuote(s)) Json.quote(s) else s
     case other => String.valueOf(other)
   }
 

@@ -242,12 +242,20 @@ class CliSpec extends AnyFunSuite {
     aps.linesIterator.filterNot(_.endsWith(".csv")).foreach(l =>
       assert(!l.startsWith("/"), s"absolute path leaked into list output: $l"))
 
+    // a tag holding a literal tab must come out escaped — a raw control
+    // character inside a string makes the line invalid JSON
+    Files.writeString(Paths.get(dir, "dbt_project.yml"),
+      Files.readString(Paths.get(dir, "dbt_project.yml")) +
+        "models:\n  +tags: [\"tab\there\"]\n")
     val (_, json) = run("list", dir,
-      Map("output" -> "json", "output-keys" -> "name,resource_type,unique_id",
-        "select" -> "my_first_model"))
+      Map("output" -> "json", "output-keys" -> "name,resource_type,unique_id,tags",
+        "select" -> "my_first_model", "no-partial-parse" -> ""))
     assert(json.contains("\"unique_id\":\"model.my_project.my_first_model\""), json)
     assert(json.contains("\"resource_type\""), json)
     assert(!json.contains("\"package_name\""), "output-keys must restrict fields")
+    assert(!json.exists(c => c < ' ' && c != '\n' && c != '\r'),
+      s"raw control character in list json: $json")
+    assert(json.contains("\"tags\":[\"tab\\there\"]"), json)
 
     // compile respects --select: only the selected model's SQL lands
     Files.writeString(Paths.get(dir, "models/other_model.sql"),

@@ -830,7 +830,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("count-min: est >= exact for every item, conserves mass, partitioning-invariant") {
     import org.apache.spark.sql.functions._
-    graft.functions.CountMin.register(spark)
     val w = 16
     val toks = graft.sources.Tables.load(spark, sf, "documents")
       .select(explode(split(TextOps.normalized(col("text")), " ")).as("t"))

@@ -902,4 +902,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wins(radius) < wins(topk),
       s"radius has ${wins(radius)} window stages vs top-k ${wins(topk)} — filter tail lost")
   }
+
+  test("a fresh newSession() resolves the whole custom function catalog") {
+    // spark.sql.extensions is the only registration path: every child
+    // session must see every FunctionDefs entry without imperative help
+    val child = spark.newSession()
+    val missing = graft.functions.FunctionDefs.all.map(_._1)
+      .filterNot(child.sessionState.catalog.isRegisteredFunction)
+    assert(missing.isEmpty, s"unresolved in a fresh session: ${missing.mkString(", ")}")
+  }
 }

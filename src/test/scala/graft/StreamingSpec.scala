@@ -931,7 +931,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cms_sketch streams in complete mode and equals the batch sketch exactly") {
-    graft.functions.CountMin.register(spark)
     val store = new RelationStore(spark, s"$work/wh8")
     val w = 16
     val sk = Streaming.eventStream(spark, s"$work/in")
@@ -956,7 +955,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("quantile sketch streams in complete mode within the batch rank bound") {
-    graft.functions.QuantileSketch.register(spark)
     val store = new RelationStore(spark, s"$work/wh_qsk")
     val src = Streaming.eventStream(spark, s"$work/in")
       .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
