@@ -19,8 +19,10 @@ object CurateOps {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadFanout(s, dir, "documents")
 
-  private def tokens(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), split(TextOps.normalized(col("text")), " ").as("w"))
+  private def tokens(s: SparkSession, dir: String): DataFrame = tokensOf(docs(s, dir))
+
+  private def tokensOf(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), split(TextOps.normalized(col("text")), " ").as("w"))
 
   /** Cross-source contamination matrix: for every pair of corpus
     * sources, the 8-gram overlap (|A∩B|, |A|, |B|, Jaccard in integer
@@ -115,10 +117,17 @@ object CurateOps {
   def curateGopherGate(s: SparkSession, dir: String): DataFrame =
     gopherGateOf(tokens(s, dir))
 
+  /** [[gopherGateOf]] over raw (doc_id, text) documents — the
+    * tokenize-then-gate composition that each streaming micro-batch
+    * ([[graft.streaming.Streaming.runAppend]]) and the ingest tick run.
+    * No model artifact at all: the thresholds are the fixed rule set.
+    */
+  def gopherGateOfDocs(documents: DataFrame): DataFrame =
+    gopherGateOf(tokensOf(documents))
+
   /** The gate over any (doc_id, w: array<string>) token set — shared
-    * verbatim by the batch operator and the streaming driver
-    * ([[graft.streaming.Streaming.runGopherGate]]): every signal is
-    * per-document, so stream ≡ batch holds by construction.
+    * verbatim by the batch operator and [[gopherGateOfDocs]]: every
+    * signal is per-document, so stream ≡ batch holds by construction.
     */
   def gopherGateOf(toks: DataFrame): DataFrame = {
     // rules 4-5's counters (top 2-gram multiplicity, 2/3-gram totals,
@@ -214,13 +223,14 @@ object CurateOps {
   /** 8-gram decontamination of ANY train-docs DataFrame against a fixed
     * eval-gram set — the shared core of [[dedupDecontaminate]] and the
     * streaming ingest gate
-    * ([[graft.streaming.Streaming.runDecontaminate]]). Each document's
+    * ([[graft.streaming.Streaming.runAppend]]). Each document's
     * verdict depends only on its own text and the STATIC eval set, so
     * applying this per micro-batch equals the batch sweep by
     * construction. The eval side is suite-bounded → AQE broadcasts the
     * shared-gram join at any corpus scale; compose with the Bloom
     * prefilter ([[dedupDecontaminateBloom]]) when even shipping the
-    * gram strings is too much.
+    * gram strings is too much. Build `evalGrams` ONCE via
+    * [[evalGramsOf]].
     */
   def decontaminateOf(trainDocs: DataFrame, evalGrams: DataFrame): DataFrame = {
     val trainGrams = gramsOf(trainDocs)
@@ -1102,7 +1112,9 @@ object CurateOps {
   /** Score documents under a TRAINED DSIR model — pure stream-safe
     * shape: explode → broadcast model join → one doc-keyed aggregate.
     * Batch and micro-batch run the identical plan
-    * ([[graft.streaming.Streaming.runDsirScore]] drives it per batch).
+    * ([[graft.streaming.Streaming.runAppend]] drives it per batch). The
+    * model tables are bounded (64 weights + 1 normalizer) and broadcast
+    * into each micro-batch's plan, never retrained in the hot path.
     */
   def dsirScore(documents: DataFrame, wtab: DataFrame, norm: DataFrame): DataFrame =
     dsirTokens(documents)

@@ -945,8 +945,11 @@ object DedupOps {
     * exact-Jaccard verify restricted to candidate documents (identical
     * arithmetic to [[dedupMinHashLsh]]: J ≥ 0.2 ⇔ 5|∩| ≥ |∪|). Shared
     * verbatim by the batch operator and the Structured Streaming driver
-    * ([[graft.streaming.Streaming.runIncrementalDedup]]), so
+    * ([[graft.streaming.Streaming.runAppend]]), so
     * stream ≡ batch holds by construction and StreamingSpec proves it.
+    * At scale the index DataFrames are the persisted index tables,
+    * re-read per micro-batch and never recomputed from the corpus, so
+    * per-batch cost stays O(batch).
     */
   def probeAgainstIndex(newDocs: DataFrame, idx: DedupIndex): DataFrame = {
     val nPerm = 32

@@ -118,7 +118,7 @@ object Multimodal {
   /** DataFrame-in payload signature — a SimHash over byte 4-grams of
     * the raw payload. The same signature plan serves the batch
     * operator, index builds, and every streaming micro-batch of
-    * arriving payloads ([[graft.streaming.Streaming.runMmDedup]]).
+    * arriving payloads ([[mmProbeAgainstIndex]]).
     *
     * Gram-vote simhash, not strided-sample aHash: the earlier
     * mean-threshold aHash sampled 64 bytes at fixed strides, which is

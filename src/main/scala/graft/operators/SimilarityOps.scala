@@ -975,9 +975,10 @@ object SimilarityOps {
     * FROZEN centroid — the index-maintenance half of IVF: arriving
     * vectors are cell-assigned against the persisted centroid table
     * ([[persistIvfIndex]]'s `centroids/`) and appended to the
-    * cell-partitioned layout, with NO retraining in the ingest path.
+    * cell-partitioned layout, with NO retraining in the ingest path
+    * (rebuild centroids offline, assign online).
     * DataFrame-in, so the SAME plan serves batch backfill and each
-    * streaming micro-batch ([[graft.streaming.Streaming.runIvfAssign]])
+    * streaming micro-batch ([[graft.streaming.Streaming.runAppend]])
     * — stream ≡ batch by construction. Centroids are nCentroids-bounded
     * → broadcast; the corpus side is one row-parallel pass.
     */
@@ -1306,7 +1307,7 @@ object SimilarityOps {
   /** Query the persisted IVF-PQ index with ARBITRARY probe vectors —
     * the ANN SERVING path: DataFrame-in, so the same plan answers a
     * batch backfill of queries and every streaming micro-batch of
-    * arriving probes ([[graft.streaming.Streaming.runIvfPqQuery]]).
+    * arriving probes ([[graft.streaming.Streaming.runAppend]]).
     * Per batch, the probed cell set is collected (≤ probes × nProbe
     * literals) and pushed down as a partition filter so the code scan
     * reads ONLY those cell directories.
@@ -1351,7 +1352,8 @@ object SimilarityOps {
 
   /** Compact streamed code APPENDS back into the cell-partitioned
     * IVF-PQ layout — the index-maintenance half of the serving story:
-    * [[graft.streaming.Streaming.runIvfPqEncode]] accumulates
+    * [[ivfPqEncodeWith]] streamed through
+    * [[graft.streaming.Streaming.runAppend]] accumulates
     * (vec_id, cell, m, c) rows in an append table; this merges them
     * into `path/codes` touching ONLY the cell directories the delta
     * actually hits (dynamic partition overwrite — at 10⁹ vectors a
@@ -1377,9 +1379,10 @@ object SimilarityOps {
     * against FROZEN centroids and codebook — the ingest half of the
     * persisted IVF-PQ index: arriving vectors become (vec_id, cell,
     * m, c) code rows appended to the cell-partitioned layout, no
-    * retraining in the hot path. DataFrame-in → the same plan serves
+    * retraining in the hot path — the codes, not the vectors, are what
+    * the serving layout stores. DataFrame-in → the same plan serves
     * batch backfill and every streaming micro-batch
-    * ([[graft.streaming.Streaming.runIvfPqEncode]]).
+    * ([[graft.streaming.Streaming.runAppend]]).
     */
   def ivfPqEncodeWith(vectors: DataFrame, centroids: DataFrame,
       codebook: DataFrame): DataFrame = {
@@ -1632,8 +1635,7 @@ object SimilarityOps {
 
   /** The rectangular-block knn-vote core over already-quantized sides
     * — one definition serving the batch operator ([[simKnnClassify]])
-    * and the streaming label-transfer driver
-    * ([[graft.streaming.Streaming.runKnnClassify]]), so the bounded
+    * and streaming label transfer ([[knnClassifyWith]]), so the bounded
     * `knn_topk` aggregate spelling (never a rank window) is pinned for
     * both. `test`/`train`: (vec_id, q, nq); `trainLbl`: (vec_id,
     * label). Output (vec_id, pred_label, votes) — majority label of
@@ -1665,6 +1667,20 @@ object SimilarityOps {
       .select(col("src").as("vec_id"), (-col("top.neg")).as("pred_label"),
         col("top.votes").as("votes"))
   }
+
+  /** Label raw (vec_id, embedding) query rows against a FROZEN labeled
+    * reference (vec_id, embedding, label; persisted, like every frozen
+    * index) through [[knnClassifyCore]] — DataFrame-in, so each
+    * streaming micro-batch ([[graft.streaming.Streaming.runAppend]])
+    * runs the batch core verbatim: a query's top-k depends only on the
+    * query and the reference, so stream ≡ batch. Per-tick cost
+    * O(batch · reference / blocks) scored rows, the same shape the
+    * batch operator pays per test vector.
+    */
+  def knnClassifyWith(queries: DataFrame, reference: DataFrame,
+      k: Int = 5, nBlocks: Int = 8): DataFrame =
+    knnClassifyCore(quantizedOf(queries), quantizedOf(reference),
+      reference.select(col("vec_id"), col("label").cast("long").as("label")), k, nBlocks)
 
   /** Greedy k-center (max-min / farthest-point) diversity selection —
     * Gonzalez's 2-approximation: seed with the lowest vec_id, then k−1

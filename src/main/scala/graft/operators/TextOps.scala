@@ -124,7 +124,7 @@ object TextOps {
 
   /** The per-doc entropy plan over ANY documents DataFrame — stateless
     * and row-local, so the SAME plan serves batch and each streaming
-    * micro-batch ([[graft.streaming.Streaming.runCharEntropy]]):
+    * micro-batch ([[graft.streaming.Streaming.runAppend]]):
     * stream ≡ batch by construction.
     */
   def charEntropyOf(documents: DataFrame): DataFrame = {
@@ -505,6 +505,18 @@ object TextOps {
         .when(col("avg_millibits") <= t2, lit("middle"))
         .otherwise(lit("tail")))
 
+  /** Score and bucket raw (doc_id, text) documents under a FROZEN CCNet
+    * model ([[charLmModel]]'s bits table + the two [[ccnetThresholds]])
+    * — the batch plans verbatim, so each streaming micro-batch
+    * ([[graft.streaming.Streaming.runAppend]]) is stream ≡ batch by
+    * construction. The model is alphabet-bounded (≤ 37² rows + 2
+    * longs) — broadcast into every batch, never retrained in the hot
+    * path.
+    */
+  def ccnetBucketsOf(documents: DataFrame, model: DataFrame, t1: Long, t2: Long): DataFrame =
+    ccnetBucketWith(
+      charLmScoreWith(documents, model).select(col("doc_id"), col("avg_millibits")), t1, t2)
+
   /** Per-LANGUAGE CCNet buckets — what CCNet actually ships (Wenzek
     * et al. 2020 §3.3: perplexity percentiles are computed per
     * language, because a well-formed French page scores "tail" against
@@ -522,8 +534,7 @@ object TextOps {
   }
 
   /** Per-language tercile thresholds — the frozen model the streaming
-    * bucketer applies to new arrivals
-    * ([[graft.streaming.Streaming.runCcnetLangBuckets]]). Langs ×
+    * bucketer applies to new arrivals ([[ccnetLangBucketsOf]]). Langs ×
     * score-domain histogram, driver-resolved (same contract as
     * [[ccnetThresholds]], per group).
     */
@@ -556,6 +567,19 @@ object TextOps {
         when(col("avg_millibits") <= col("t1"), lit("head"))
           .when(col("avg_millibits") <= col("t2"), lit("middle"))
           .otherwise(lit("tail")).as("bucket"))
+
+  /** Score raw (doc_id, lang, text) documents under the frozen char-LM
+    * model and bucket them per language under a frozen
+    * [[ccnetLangThresholds]] table — the one composition the streaming
+    * bucketer ([[graft.streaming.Streaming.runAppend]]) and the ingest
+    * tick share, so stream ≡ batch by construction.
+    */
+  def ccnetLangBucketsOf(documents: DataFrame, model: DataFrame, thr: DataFrame): DataFrame =
+    ccnetLangBucketWith(
+      charLmScoreWith(documents, model)
+        .select(col("doc_id"), col("avg_millibits"))
+        .join(documents.select(col("doc_id"), col("lang")), Seq("doc_id")),
+      thr)
 
   /** Cross-language parallel-text candidate mining (the bitext-mining
     * prefilter of WMT-style pipelines): two documents in DIFFERENT
@@ -926,7 +950,9 @@ object TextOps {
     * ingest runs to tag arriving documents with the nearest canonical
     * exemplar / topic anchor. DataFrame-in with a frozen idf + frozen
     * probe vectors, so the streaming micro-batch plan IS this plan;
-    * per-doc the argmax window sees ≤ |probes| rows. Docs sharing no
+    * per-doc the argmax window sees ≤ |probes| rows. Both model tables
+    * are bounded (vocabulary / 10 probes × their shingles) and never
+    * retrained in the hot path. Docs sharing no
     * nonzero-idf shingle with any probe are dropped (no match — the
     * caller left-joins and treats null as "unrouted").
     */
@@ -1023,7 +1049,7 @@ object TextOps {
   /** The frozen boilerplate model: md5 keys of every segment appearing
     * in ≥ maxDf distinct documents — the small-by-definition artifact
     * a continuous ingest pipeline trains on the existing corpus and
-    * applies to arriving documents ([[graft.streaming.Streaming.runBoilerplateFilter]]).
+    * applies to arriving documents ([[graft.streaming.Streaming.runAppend]]).
     */
   def boilerplateHashes(documents: DataFrame, width: Int = 8,
       maxDf: Int = 3): DataFrame =
@@ -1035,7 +1061,9 @@ object TextOps {
 
   /** Strike the frozen hash set from each document and re-join the
     * survivors in order — DataFrame-in, so the SAME plan serves batch
-    * and each streaming micro-batch (stream ≡ batch by construction).
+    * and each streaming micro-batch (stream ≡ batch by construction:
+    * every document arrives whole, so its per-doc reassembly is
+    * complete within its own micro-batch).
     *
     * No broadcast hint on the strike set: the df ≥ maxDf segment set
     * grows roughly linearly with corpus size (billions of distinct
@@ -1127,7 +1155,7 @@ object TextOps {
 
   /** DataFrame-in form of [[txtTopicTag]] — the lexicon is a fixed
     * literal, so the SAME plan serves batch and each streaming
-    * micro-batch ([[graft.streaming.Streaming.runTopicTag]];
+    * micro-batch ([[graft.streaming.Streaming.runAppend]];
     * StreamingSpec proves stream ≡ batch — every signal is
     * per-document, no corpus-relative state).
     */
@@ -1294,7 +1322,7 @@ object TextOps {
   /** The frozen trigram model: (trigram, bigram, unigram) count tables
     * + corpus token total — the artifact a production pipeline trains
     * once and applies frozen to arriving text
-    * ([[graft.streaming.Streaming.runTrigramLmScore]]).
+    * ([[trigramScoreWith]]).
     * Counts aggregate directly from the gram streams (map-side
     * combine; see [[charLmModel]] for why not via per-doc counts).
     */
@@ -1321,8 +1349,9 @@ object TextOps {
 
   /** Score documents against a FROZEN trigram model — DataFrame-in, so
     * the SAME plan serves batch and every streaming micro-batch
-    * (stream ≡ batch by construction). `bl(x)` = length(bin(x)) =
-    * floor(log2 x)+1 — exact integer arithmetic end to end.
+    * (stream ≡ batch by construction; unseen words hit the OOV floor).
+    * `bl(x)` = length(bin(x)) = floor(log2 x)+1 — exact integer
+    * arithmetic end to end.
     */
   def trigramScoreWith(documents: DataFrame, tri: DataFrame, bi: DataFrame,
       uni: DataFrame, total: DataFrame): DataFrame = {
@@ -1431,7 +1460,7 @@ object TextOps {
 
   /** The mojibake plan over ANY documents DataFrame — row-local, so the
     * SAME plan serves batch and each streaming micro-batch
-    * ([[graft.streaming.Streaming.runMojibake]]): stream ≡ batch by
+    * ([[graft.streaming.Streaming.runAppend]]): stream ≡ batch by
     * construction.
     */
   def mojibakeOf(documents: DataFrame): DataFrame =
@@ -1474,7 +1503,7 @@ object TextOps {
 
   /** The C4 gate over ANY documents DataFrame — row-local, so the SAME
     * plan serves batch and each streaming micro-batch
-    * ([[graft.streaming.Streaming.runC4Gate]]): stream ≡ batch by
+    * ([[graft.streaming.Streaming.runAppend]]): stream ≡ batch by
     * construction.
     */
   def c4GateOf(documents: DataFrame): DataFrame = {

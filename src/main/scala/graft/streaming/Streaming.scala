@@ -13,8 +13,10 @@ import graft.exec.RelationStore
   *  - tumbling windows  = `window(ts, batchSize)` groupBy
   *  - late data         = `withWatermark(ts, lookback)`
   *  - checkpoint        = Spark's own streaming checkpoint dir
-  *  - per-batch commit  = `foreachBatch` → incremental merge into the
-  *    RelationStore (idempotent by key, so retries are safe)
+  *  - per-batch commit  = `foreachBatch` → a per-batchId delta append
+  *    ([[runAppend]]) or a key upsert into the RelationStore (a
+  *    replayed batch skips or rewrites the same content, so retries
+  *    are safe)
   *  - Trigger.AvailableNow = "process everything that has landed, then
   *    stop" — the exact execution contract of a scheduled microbatch
   *    run, but with streaming bookkeeping
@@ -85,21 +87,71 @@ object Streaming {
       store: RelationStore,
       table: String,
       keys: Seq[String],
-      checkpointDir: String): Unit = {
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
+      checkpointDir: String): Unit =
+    drive(agg, checkpointDir, OutputMode.Complete()) { (batch, _) =>
+      upsert(store, table, keys, batch)
+    }
+
+  /** Key upsert of a micro-batch into `table`: landed rows whose key
+    * the batch carries are replaced (anti-join + union), so a retried
+    * batch rewrites the same content.
+    */
+  private def upsert(store: RelationStore, table: String, keys: Seq[String],
+      batch: DataFrame): Unit =
+    if (store.exists(table)) {
+      val kept = store.read(table)
+        .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      store.write(kept.unionByName(batch), table)
+    } else store.write(batch, table)
+
+  /** The one stream loop every driver runs: checkpoint at
+    * `checkpointDir`, `Trigger.AvailableNow` ("process everything that
+    * has landed, then stop"), `f(batch, batchId)` per micro-batch, and
+    * block until the available data is drained.
+    */
+  private def drive(df: DataFrame, checkpointDir: String,
+      mode: OutputMode = OutputMode.Append())(f: (DataFrame, Long) => Unit): Unit =
+    df.writeStream
+      .outputMode(mode)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (store.exists(table)) {
-          val target = store.read(table)
-          val kept = target.join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          store.write(kept.unionByName(batch), table)
-        } else store.write(batch, table)
-      }
+      .foreachBatch(f)
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** The single-table append driver: drains `stream` and lands
+    * `transform(batch)` for each micro-batch as an immutable
+    * per-batchId delta of `table` ([[RelationStore.appendDelta]]).
+    *
+    * Stream ≡ batch by construction: `transform` is the batch operator
+    * itself (`TextOps.mojibakeOf`, `CurateOps.dsirScore(_, wtab, norm)`,
+    * `DedupOps.probeAgainstIndex(_, index)`, …), applied verbatim to
+    * each micro-batch. For a row-local operator, or one that scores
+    * each document against frozen model tables, the union over any
+    * arrival split therefore equals one batch run over all of it. A
+    * frozen table a transform closes over must be persisted/static (a
+    * parquet read of a written artifact): the plan re-evaluates per
+    * micro-batch, so a live plan over the corpus would re-derive it
+    * every tick. A stateful stream (`streamingExactDedup`,
+    * `streamingSourceQuota`) lands its verdicts with the default
+    * identity transform.
+    *
+    * Cost and replay: each tick writes O(batch) bytes, never a rewrite
+    * of the landed table, and every `deltaFoldEvery` landings the live
+    * deltas fold into a base version by a manifest-only commit (no data
+    * bytes, no hard links). foreachBatch is at-least-once: a replayed
+    * batchId finds its delta already committed and lands nothing — the
+    * transform is lazy, so the skipped batch is never even computed,
+    * and landed-state consumers (quota totals) stay exact.
+    */
+  def runAppend(
+      stream: DataFrame,
+      store: RelationStore,
+      table: String,
+      checkpointDir: String)(transform: DataFrame => DataFrame = identity): Unit =
+    drive(stream, checkpointDir) { (batch, batchId) =>
+      store.appendDelta(transform(batch), table, batchId)
+    }
 
   // ---- custom stateful operator: streaming sessionization ----
 
@@ -159,8 +211,8 @@ object Streaming {
   def enrichedDocumentStream(spark: SparkSession, inputDir: String): DataFrame =
     spark.readStream.schema(enrichedDocumentsSchema).parquet(inputDir)
 
-  /** embeddings schema (the vector landing zone — arriving query
-    * vectors for the knn label-transfer driver). */
+  /** embeddings schema (the vector landing zone — arriving vectors
+    * for ANN ingest and serving, and knn label-transfer queries). */
   val embeddingsSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
@@ -169,16 +221,6 @@ object Streaming {
   def vectorStream(spark: SparkSession, inputDir: String): DataFrame =
     spark.readStream.schema(embeddingsSchema).parquet(inputDir)
 
-  /** Streaming exact dedup for corpus ingest: state is ONE keeper id per
-    * content fingerprint (md5 of normalized text), so memory is
-    * O(distinct documents) — the streaming twin of the batch
-    * [[graft.operators.DedupOps.dedupExact]]. Semantics are
-    * first-arrival-wins (a stream cannot retract an already-emitted
-    * keeper): the first batch that introduces a fingerprint elects the
-    * smallest doc_id in that batch; every later duplicate arrives with
-    * keep=0. When all data lands in one AvailableNow batch this equals
-    * the batch operator's min-id-keeper exactly.
-    */
   final case class ThrottleState(lastUs: Long)
   final case class ThrottleVerdict(event_id: Long, user_id: Long,
       event_type: String, ts_us: Long, gap_us: Long)
@@ -255,23 +297,16 @@ object Streaming {
       }
   }
 
-  def runSourceQuota(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String,
-      quota: Long = 1000L): Unit = {
-    val q = streamingSourceQuota(newDocs, quota).toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landAppend(store, table, batch, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
+  /** Streaming exact dedup for corpus ingest: state is ONE keeper id per
+    * content fingerprint (md5 of normalized text), so memory is
+    * O(distinct documents) — the streaming twin of the batch
+    * [[graft.operators.DedupOps.dedupExact]]. Semantics are
+    * first-arrival-wins (a stream cannot retract an already-emitted
+    * keeper): the first batch that introduces a fingerprint elects the
+    * smallest doc_id in that batch; every later duplicate arrives with
+    * keep=0. When all data lands in one AvailableNow batch this equals
+    * the batch operator's min-id-keeper exactly.
+    */
   def streamingExactDedup(docs: DataFrame): Dataset[DedupVerdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -289,225 +324,6 @@ object Streaming {
           ids.iterator.map(id =>
             DedupVerdict(id, fp, keeper, if (id == keeper) 1L else 0L))
       }
-  }
-
-  /** Drive streaming dedup over available data, appending verdicts. */
-  def runExactDedup(
-      docs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    val q = streamingExactDedup(docs).toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landAppend(store, table, batch, batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Score a stream of arriving documents under a PRE-TRAINED DSIR
-    * importance model (graft.operators.CurateOps.dsirModel) — the
-    * stream-static pattern shared with [[runIncrementalDedup]]: the
-    * model tables are bounded artifacts (64 weights + 1 normalizer)
-    * broadcast into each micro-batch's scoring plan, which is the
-    * EXACT batch plan (CurateOps.dsirScore), so stream ≡ batch holds
-    * by construction. Per-batch cost is O(batch); the model is never
-    * retrained in the hot path — the shape continuous corpus
-    * admission runs at ingest time.
-    */
-  /** Shared scaffold for the frozen-model micro-batch scorers:
-    * Append + AvailableNow + foreachBatch applying `transform` (the
-    * batch plan verbatim) and appending the result to `table`. Every
-    * run* driver is this plus its transform, so a change to the
-    * append/write semantics (restart dedup, write mode) lands ONCE.
-    */
-  /** Land an append micro-batch into a store table as an immutable
-    * per-batchId delta directory ([[RelationStore.appendDelta]]). ONE
-    * definition — the scorer scaffold, the ingest tick, and the quota
-    * driver all land through it, so a change to landing semantics has
-    * exactly one home. Two properties the 100 TB ingest loop needs:
-    *
-    *  - O(batch) bytes per tick (never a rewrite of the landed table —
-    *    cumulative I/O is linear in data ingested, with a periodic
-    *    hard-link fold that moves metadata, not data);
-    *  - replay idempotence: foreachBatch is at-least-once, and a
-    *    replayed epoch finds its batchId already committed and lands
-    *    nothing — `df` is lazy, so the skipped transform isn't even
-    *    computed, and landed-state consumers (quota totals) stay exact.
-    */
-  private[streaming] def landAppend(store: RelationStore, table: String,
-      df: DataFrame, batchId: Long): Unit = {
-    store.appendDelta(df, table, batchId)
-    ()
-  }
-
-  private def runAppendScorer(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String)(transform: DataFrame => DataFrame): Unit = {
-    val q = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landAppend(store, table, transform(batch), batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  def runDsirScore(
-      newDocs: DataFrame,
-      wtab: DataFrame,
-      norm: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.CurateOps.dsirScore(batch, wtab, norm)
-    }
-  }
-
-  /** Bucket a stream of arriving documents under a FROZEN CCNet model
-    * (the char-LM bits table + the two tercile thresholds trained by
-    * the batch pass — exactly what [[graft.operators.TextOps.txtCcnetBuckets]]
-    * computes once and a production pipeline persists): per micro-batch
-    * the scoring plan is the batch plan verbatim
-    * (TextOps.charLmScoreWith + ccnetBucketWith), so stream ≡ batch
-    * holds by construction. The model is alphabet-bounded (≤ 37² rows
-    * + 2 longs) — broadcast into every batch, never retrained in the
-    * hot path.
-    */
-  def runCcnetBuckets(
-      newDocs: DataFrame,
-      model: DataFrame,
-      t1: Long,
-      t2: Long,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.ccnetBucketWith(
-          graft.operators.TextOps.charLmScoreWith(batch, model)
-            .select(col("doc_id"), col("avg_millibits")), t1, t2)
-    }
-  }
-
-  /** Route arriving documents to their nearest probe exemplar by
-    * sparse TF-IDF cosine under a FROZEN retrieval model (the idf
-    * table + probe unit vectors the batch pass trains —
-    * graft.operators.TextOps.tfidfIdf / tfidfUnitVecs): per
-    * micro-batch the scoring plan is the batch plan verbatim
-    * (TextOps.tfidfRouteWith), so stream ≡ batch holds by
-    * construction. Both model tables are bounded (vocabulary /
-    * 10 probes × their shingles) — broadcast into every batch, never
-    * retrained in the hot path. The content-routing shape a streaming
-    * ingest uses to tag documents with a topic anchor at arrival.
-    */
-  def runTfidfRoute(
-      newDocs: DataFrame,
-      idf: DataFrame,
-      probes: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.tfidfRouteWith(batch, idf, probes)
-    }
-  }
-
-  /** Apply the Gopher quality gate to arriving documents — every rule
-    * signal is PER-DOCUMENT ([[graft.operators.CurateOps.gopherGateOf]]
-    * is the batch plan verbatim over each micro-batch's tokens), so
-    * stream ≡ batch holds by construction with no model artifact at
-    * all: the thresholds are the operator's fixed rule set. The
-    * quality-admission shape a continuous ingest pipeline runs before
-    * anything corpus-relative (dedup, budgets) sees the document.
-    */
-  def runGopherGate(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.CurateOps.gopherGateOf(
-          batch.select(col("doc_id"),
-            split(graft.operators.TextOps.normalized(col("text")), " ").as("w")))
-    }
-  }
-
-  /** Tag arriving documents with their dominant lexicon topic — the
-    * subject-stratification step at ingest. The lexicon is a fixed
-    * literal ([[graft.operators.TextOps.TopicLexicon]]) and every
-    * signal is per-document, so stream ≡ batch holds by construction
-    * with no trained artifact at all; per micro-batch the plan is
-    * [[graft.operators.TextOps.topicTagWith]] verbatim.
-    */
-  def runTopicTag(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit =
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.topicTagWith(batch.sparkSession, batch)
-    }
-
-  /** Strip corpus-trained boilerplate from arriving documents: the
-    * strike set ([[graft.operators.TextOps.boilerplateHashes]], frozen
-    * from the existing corpus) is a static broadcast table and each
-    * micro-batch runs [[graft.operators.TextOps.boilerplateFilterWith]]
-    * — the batch plan verbatim, so stream ≡ batch holds by
-    * construction (every document arrives whole, so its per-doc
-    * reassembly is complete within its own micro-batch). Per-batch
-    * cost is O(batch): the corpus is touched only at model-training
-    * time, the same frozen-model discipline as the DSIR/CCNet/TF-IDF
-    * streaming scorers.
-    */
-  def runBoilerplateFilter(
-      newDocs: DataFrame,
-      boiler: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.boilerplateFilterWith(batch, boiler)
-    }
-  }
-
-  /** Parquet stream of arriving embedding rows (vec_id, embedding,
-    * label) — the ANN ingest source.
-    */
-  def embeddingStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.IntegerType)))
-    spark.readStream.schema(schema).parquet(inputDir)
-  }
-
-  /** IVF index maintenance over a stream of arriving vectors: each
-    * micro-batch cell-assigns against the FROZEN persisted centroid
-    * table via the exact batch plan
-    * ([[graft.operators.SimilarityOps.ivfAssignWith]]) and appends the
-    * assignments — continuous ANN ingest with NO retraining in the hot
-    * path (the production IVF pattern: rebuild centroids offline,
-    * assign online). Per-batch cost is O(batch)·nCentroids; stream ≡
-    * batch by construction (StreamingSpec proves it).
-    */
-  def runIvfAssign(
-      newVectors: DataFrame,
-      centroids: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newVectors, store, table, checkpointDir) { batch =>
-      graft.operators.SimilarityOps.ivfAssignWith(batch, centroids)
-    }
   }
 
   /** The composed INGEST TICK — the production shape where one stream
@@ -569,89 +385,71 @@ object Streaming {
         "boiler" -> boiler, "centroids" -> centroids, "codebook" -> codebook,
         "cdcRef" -> cdcRef, "edgeRef" -> edgeRef, "spanGrams" -> spanGrams)
         .foreach { case (n, df) => requireFrozen(n, df) }
-    val q = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = batch0.cache()
-        try {
-          // admission FIRST: totals derive from the landed table, so
-          // within a tick the quota verdict must land before anything
-          // else could observe it (ordering is per-table, not global).
-          // Replay safety: prevTotals must be computed from the landed
-          // state BEFORE this batchId — if the quota verdict for this
-          // epoch already landed (crash-replay), recomputing totals
-          // would double-count the batch, so landAppend's batchId skip
-          // keeps the already-landed (correct) verdict and the garbage
-          // recompute is never evaluated (DataFrames are lazy).
-          val quotaTbl = s"${prefix}_quota"
-          // store.read pins its delta-path list at CONSTRUCTION, so
-          // prevTotals sees exactly the pre-tick landed state no matter
-          // when the plan evaluates within this tick
-          val prevTotals =
-            if (store.exists(quotaTbl))
-              store.read(quotaTbl).groupBy(col("source"))
-                .agg(sum(col("n_tokens")).as("tok_prev"))
-            else batch.select(col("source")).where(lit(false))
-              .withColumn("tok_prev", lit(0L))
-          val verdict =
-            if (store.batchLanded(quotaTbl, batchId))
-              // crash-replay of a partially-landed epoch: this epoch's
-              // verdicts are already durable — recomputing them against
-              // totals that now INCLUDE the epoch would flip admissions,
-              // so downstream members reuse the landed rows instead
-              store.read(quotaTbl).join(batch.select(col("doc_id")), Seq("doc_id"))
-            else graft.operators.CurateOps.sourceQuotaWith(batch, prevTotals, quota)
-          landAppend(store, quotaTbl, verdict, batchId)
-          // the admitted CORPUS itself — the eighth table that makes the
-          // tick a complete ingest: quota-admitted documents land with
-          // their full enriched columns, everything else is audit trail
-          landAppend(store, s"${prefix}_corpus",
-            batch.join(verdict.filter(col("admitted") === 1L).select(col("doc_id")),
-              Seq("doc_id"), "left_semi"),
-            batchId)
-          landAppend(store, s"${prefix}_dedup",
-            graft.operators.DedupOps.probeAgainstIndex(batch, index), batchId)
-          landAppend(store, s"${prefix}_gopher",
-            graft.operators.CurateOps.gopherGateOf(
-              batch.select(col("doc_id"),
-                split(graft.operators.TextOps.normalized(col("text")), " ").as("w"))),
-            batchId)
-          landAppend(store, s"${prefix}_ccnet",
-            graft.operators.TextOps.ccnetLangBucketWith(
-              graft.operators.TextOps.charLmScoreWith(batch, charLm)
-                .select(col("doc_id"), col("avg_millibits"))
-                .join(batch.select(col("doc_id"), col("lang")), Seq("doc_id")),
-              langThresholds),
-            batchId)
-          landAppend(store, s"${prefix}_topics",
-            graft.operators.TextOps.topicTagWith(batch.sparkSession, batch), batchId)
-          landAppend(store, s"${prefix}_boiler",
-            graft.operators.TextOps.boilerplateFilterWith(batch, boiler), batchId)
-          landAppend(store, s"${prefix}_mojibake",
-            graft.operators.TextOps.mojibakeOf(batch), batchId)
-          landAppend(store, s"${prefix}_cdc",
-            graft.operators.DedupOps.cdcProbeWith(batch, cdcRef), batchId)
-          landAppend(store, s"${prefix}_edges",
-            graft.operators.DedupOps.edgeProbeWith(batch, edgeRef), batchId)
-          landAppend(store, s"${prefix}_codes",
-            graft.operators.SimilarityOps.ivfPqEncodeWith(
-              batch.select(col("doc_id").as("vec_id"), col("embedding")),
-              centroids, codebook),
-            batchId)
-          // clean-on-ingest span removal: arriving docs drop every span
-          // the frozen corpus already owns (keeper = reference side by
-          // definition) — the twelfth table, and the one that rewrites
-          // content rather than scoring it
-          landAppend(store, s"${prefix}_cleaned",
-            graft.operators.DedupOps.spanRemoveWith(
-              batch.select(col("doc_id"), col("text")), spanGrams),
-            batchId)
-        } finally batch.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+    import graft.operators.{CurateOps, DedupOps, SimilarityOps, TextOps}
+    drive(newDocs, checkpointDir) { (batch0, batchId) =>
+      val batch = batch0.cache()
+      try {
+        // admission FIRST: totals derive from the landed table, so
+        // within a tick the quota verdict must land before anything
+        // else could observe it (ordering is per-table, not global).
+        // Replay safety: prevTotals must be computed from the landed
+        // state BEFORE this batchId — if the quota verdict for this
+        // epoch already landed (crash-replay), recomputing totals
+        // would double-count the batch, so appendDelta's batchId skip
+        // keeps the already-landed (correct) verdict and the garbage
+        // recompute is never evaluated (DataFrames are lazy).
+        val quotaTbl = s"${prefix}_quota"
+        // store.read pins its delta-path list at CONSTRUCTION, so
+        // prevTotals sees exactly the pre-tick landed state no matter
+        // when the plan evaluates within this tick
+        val prevTotals =
+          if (store.exists(quotaTbl))
+            store.read(quotaTbl).groupBy(col("source"))
+              .agg(sum(col("n_tokens")).as("tok_prev"))
+          else batch.select(col("source")).where(lit(false))
+            .withColumn("tok_prev", lit(0L))
+        val verdict =
+          if (store.batchLanded(quotaTbl, batchId))
+            // crash-replay of a partially-landed epoch: this epoch's
+            // verdicts are already durable — recomputing them against
+            // totals that now INCLUDE the epoch would flip admissions,
+            // so downstream members reuse the landed rows instead
+            store.read(quotaTbl).join(batch.select(col("doc_id")), Seq("doc_id"))
+          else CurateOps.sourceQuotaWith(batch, prevTotals, quota)
+        store.appendDelta(verdict, quotaTbl, batchId)
+        // the admitted CORPUS itself — the eighth table that makes the
+        // tick a complete ingest: quota-admitted documents land with
+        // their full enriched columns, everything else is audit trail
+        store.appendDelta(
+          batch.join(verdict.filter(col("admitted") === 1L).select(col("doc_id")),
+            Seq("doc_id"), "left_semi"),
+          s"${prefix}_corpus", batchId)
+        store.appendDelta(DedupOps.probeAgainstIndex(batch, index),
+          s"${prefix}_dedup", batchId)
+        store.appendDelta(CurateOps.gopherGateOfDocs(batch), s"${prefix}_gopher", batchId)
+        store.appendDelta(TextOps.ccnetLangBucketsOf(batch, charLm, langThresholds),
+          s"${prefix}_ccnet", batchId)
+        store.appendDelta(TextOps.topicTagWith(batch.sparkSession, batch),
+          s"${prefix}_topics", batchId)
+        store.appendDelta(TextOps.boilerplateFilterWith(batch, boiler),
+          s"${prefix}_boiler", batchId)
+        store.appendDelta(TextOps.mojibakeOf(batch), s"${prefix}_mojibake", batchId)
+        store.appendDelta(DedupOps.cdcProbeWith(batch, cdcRef), s"${prefix}_cdc", batchId)
+        store.appendDelta(DedupOps.edgeProbeWith(batch, edgeRef), s"${prefix}_edges", batchId)
+        store.appendDelta(
+          SimilarityOps.ivfPqEncodeWith(
+            batch.select(col("doc_id").as("vec_id"), col("embedding")),
+            centroids, codebook),
+          s"${prefix}_codes", batchId)
+        // clean-on-ingest span removal: arriving docs drop every span
+        // the frozen corpus already owns (keeper = reference side by
+        // definition) — the twelfth table, and the one that rewrites
+        // content rather than scoring it
+        store.appendDelta(
+          DedupOps.spanRemoveWith(batch.select(col("doc_id"), col("text")), spanGrams),
+          s"${prefix}_cleaned", batchId)
+      } finally batch.unpersist()
+    }
   }
 
   /** The executable half of the ingest tick's frozen-artifact contract:
@@ -686,23 +484,6 @@ object Streaming {
           s"(persist the artifact and read it back).\n${plan.treeString}")
   }
 
-  /** Multimodal dedup ingest: each micro-batch of arriving payloads
-    * probes the FROZEN bucketed phash index via the exact batch plan
-    * ([[graft.operators.Multimodal.mmProbeAgainstIndex]]) — per-doc
-    * verdicts join only the batch against the index, so stream ≡ batch
-    * by construction and only the O(batch) probe side shuffles.
-    */
-  def runMmDedup(
-      newDocs: DataFrame,
-      indexChunks: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.Multimodal.mmProbeAgainstIndex(batch, indexChunks)
-    }
-  }
-
   /** Streaming near-duplicate PAIR mining at wide hamming radius — the
     * incremental face of the multi-index chunk join
     * ([[graft.operators.DedupOps.hammingPairs]]) rather than a probe
@@ -730,121 +511,29 @@ object Streaming {
       checkpointDir: String,
       maxHamming: Int = 8): Unit = {
     import graft.operators.{DedupOps, Multimodal}
-    val q = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigsB = Multimodal.mmPhashOf(batch)
-          .select(col("doc_id"), col("phash")).cache()
-        try {
-          val nB = sigsB.count()
-          val (seen, nSeen) =
-            if (store.exists(sigTable)) {
-              val t = store.read(sigTable); (Some(t), t.count())
-            } else (None, 0L)
-          val nRows = Some(nSeen + nB)
-          val within = DedupOps.hammingPairs(sigsB, "phash", maxHamming, nRows)
-          val across = seen.map { sg =>
-            DedupOps.hammingPairsAcross(sigsB, sg, "phash", maxHamming, nRows)
-              .select(least(col("doc_new"), col("doc_ref")).as("doc_a"),
-                greatest(col("doc_new"), col("doc_ref")).as("doc_b"),
-                col("hamming"))
-          }
-          val pairs = across.fold(within)(within.unionByName(_))
-          landAppend(store, pairTable, pairs, batchId)
-          landAppend(store, sigTable, sigsB, batchId)
-        } finally sigsB.unpersist()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming knn label transfer: each micro-batch of arriving
-    * vectors is classified against a FROZEN labeled reference table
-    * (persisted parquet, like every frozen index here) through the
-    * EXACT batch core ([[graft.operators.SimilarityOps
-    * .knnClassifyCore]]) — the bounded `knn_topk` hash aggregate, the
-    * rectangular block tiling, never a rank window — so stream ≡ batch
-    * holds by construction (each query's top-k depends only on the
-    * query and the frozen reference). Per-tick cost O(batch ·
-    * reference / blocks) scored rows, the same shape the batch
-    * operator pays per test vector.
-    */
-  def runKnnClassify(
-      newVectors: DataFrame,
-      refVectors: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String,
-      k: Int = 5,
-      nBlocks: Int = 8): Unit = {
-    import graft.operators.SimilarityOps
-    val train = SimilarityOps.quantizedOf(refVectors)
-    val lbl = refVectors.select(col("vec_id"), col("label").cast("long").as("label"))
-    runAppendScorer(newVectors, store, table, checkpointDir) { batch =>
-      SimilarityOps.knnClassifyCore(
-        SimilarityOps.quantizedOf(batch), train, lbl, k, nBlocks)
+    drive(newDocs, checkpointDir) { (batch, batchId) =>
+      val sigsB = Multimodal.mmPhashOf(batch)
+        .select(col("doc_id"), col("phash")).cache()
+      try {
+        val nB = sigsB.count()
+        val (seen, nSeen) =
+          if (store.exists(sigTable)) {
+            val t = store.read(sigTable); (Some(t), t.count())
+          } else (None, 0L)
+        val nRows = Some(nSeen + nB)
+        val within = DedupOps.hammingPairs(sigsB, "phash", maxHamming, nRows)
+        val across = seen.map { sg =>
+          DedupOps.hammingPairsAcross(sigsB, sg, "phash", maxHamming, nRows)
+            .select(least(col("doc_new"), col("doc_ref")).as("doc_a"),
+              greatest(col("doc_new"), col("doc_ref")).as("doc_b"),
+              col("hamming"))
+        }
+        val pairs = across.fold(within)(within.unionByName(_))
+        store.appendDelta(pairs, pairTable, batchId)
+        store.appendDelta(sigsB, sigTable, batchId)
+      } finally sigsB.unpersist()
     }
   }
-
-  /** Streaming char-entropy gate: the per-doc distribution entropy is
-    * row-local (no corpus model), so each micro-batch scores under the
-    * EXACT batch plan ([[graft.operators.TextOps.charEntropyOf]]) —
-    * stream ≡ batch by construction, per-batch cost O(batch chars).
-    */
-  def runCharEntropy(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit =
-    runAppendScorer(newDocs, store, table, checkpointDir)(
-      graft.operators.TextOps.charEntropyOf)
-
-  /** Streaming mojibake gate: the row-local encoding-artifact plan
-    * ([[graft.operators.TextOps.mojibakeOf]]) IS the batch plan, so
-    * stream ≡ batch by construction — the ingest-side guard that stops
-    * a double-encoded source the tick it appears instead of after the
-    * nightly sweep.
-    */
-  def runMojibake(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit =
-    runAppendScorer(newDocs, store, table, checkpointDir)(
-      graft.operators.TextOps.mojibakeOf)
-
-  /** Streaming C4 line-level gate: the row-local page-structure plan
-    * ([[graft.operators.TextOps.c4GateOf]]) IS the batch plan — each
-    * arriving page gets its Raffel §2.2 verdict the tick it lands.
-    */
-  def runC4Gate(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit =
-    runAppendScorer(newDocs, store, table, checkpointDir)(
-      graft.operators.TextOps.c4GateOf)
-
-  /** Streaming eval-set decontamination: every arriving document is
-    * gated against a STATIC eval-suite 8-gram set
-    * ([[graft.operators.CurateOps.decontaminateOf]]) the tick it
-    * lands — contamination never enters the corpus instead of being
-    * swept out later. The verdict depends only on the document and the
-    * fixed eval side, so the union over micro-batches equals the batch
-    * sweep. Build `evalGrams` ONCE via
-    * [[graft.operators.CurateOps.evalGramsOf]] (suite-bounded, AQE
-    * broadcasts it under every tick's join).
-    */
-  def runDecontaminate(
-      newDocs: DataFrame,
-      evalGrams: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit =
-    runAppendScorer(newDocs, store, table, checkpointDir)(
-      b => graft.operators.CurateOps.decontaminateOf(b, evalGrams))
 
   /** Streaming UniMax mixing monitor: each micro-batch sum-merges its
     * per-language token counts into a persisted BOUNDED language grid
@@ -867,29 +556,23 @@ object Streaming {
       checkpointDir: String,
       budget: Long = 30000L,
       epochCap: Long = 2L): Unit = {
-    val q = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!store.lastBatchTag(gridTable).exists(_ >= batchId)) {
-          val delta = batch.select(col("lang"),
-            size(split(graft.operators.TextOps.normalized(col("text")), " "))
-              .cast("long").as("n_tokens"))
-            .groupBy(col("lang")).agg(sum(col("n_tokens")).as("tok_lang"))
-          val merged =
-            if (store.exists(gridTable))
-              store.read(gridTable).unionByName(delta)
-                .groupBy(col("lang")).agg(sum(col("tok_lang")).as("tok_lang"))
-            else delta
-          store.write(merged, gridTable, batchTag = Some(batchId))
-        }
-        store.write(
-          graft.operators.CurateOps.unimaxOf(store.read(gridTable), budget, epochCap),
-          allocTable)
+    drive(newDocs, checkpointDir) { (batch, batchId) =>
+      if (!store.lastBatchTag(gridTable).exists(_ >= batchId)) {
+        val delta = batch.select(col("lang"),
+          size(split(graft.operators.TextOps.normalized(col("text")), " "))
+            .cast("long").as("n_tokens"))
+          .groupBy(col("lang")).agg(sum(col("n_tokens")).as("tok_lang"))
+        val merged =
+          if (store.exists(gridTable))
+            store.read(gridTable).unionByName(delta)
+              .groupBy(col("lang")).agg(sum(col("tok_lang")).as("tok_lang"))
+          else delta
+        store.write(merged, gridTable, batchTag = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
+      store.write(
+        graft.operators.CurateOps.unimaxOf(store.read(gridTable), budget, epochCap),
+        allocTable)
+    }
   }
 
   /** Streaming volume-anomaly monitor: each micro-batch sum-merges its
@@ -907,216 +590,23 @@ object Streaming {
       gridTable: String,
       anomalyTable: String,
       checkpointDir: String): Unit = {
-    val q = newEvents.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // sum-merging is NOT replay-idempotent — a replayed epoch would
-        // double-count its events into the grid. The grid commit carries
-        // the batchId (atomic with the data), so a replay skips the
-        // merge; the anomaly table is a pure function of the grid and is
-        // rewritten unconditionally (idempotent overwrite) so a crash
-        // between the two writes still converges on replay.
-        if (!store.lastBatchTag(gridTable).exists(_ >= batchId)) {
-          val delta = graft.operators.Events.dailyCounts(batch)
-          val merged =
-            if (store.exists(gridTable))
-              store.read(gridTable).unionByName(delta)
-                .groupBy(col("day"), col("event_type")).agg(sum(col("n")).as("n"))
-            else delta
-          store.write(merged, gridTable, batchTag = Some(batchId))
-        }
-        store.write(graft.operators.Events.anomalyOf(store.read(gridTable)), anomalyTable)
+    drive(newEvents, checkpointDir) { (batch, batchId) =>
+      // sum-merging is NOT replay-idempotent — a replayed epoch would
+      // double-count its events into the grid. The grid commit carries
+      // the batchId (atomic with the data), so a replay skips the
+      // merge; the anomaly table is a pure function of the grid and is
+      // rewritten unconditionally (idempotent overwrite) so a crash
+      // between the two writes still converges on replay.
+      if (!store.lastBatchTag(gridTable).exists(_ >= batchId)) {
+        val delta = graft.operators.Events.dailyCounts(batch)
+        val merged =
+          if (store.exists(gridTable))
+            store.read(gridTable).unionByName(delta)
+              .groupBy(col("day"), col("event_type")).agg(sum(col("n")).as("n"))
+          else delta
+        store.write(merged, gridTable, batchTag = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Bucket a stream of arriving documents under the FROZEN per-LANG
-    * CCNet model (char-LM bits table + the per-language tercile
-    * threshold table trained by the batch pass) — the scoring and
-    * assignment are the exact batch plans, so stream ≡ batch.
-    */
-  def runCcnetLangBuckets(
-      newDocs: DataFrame,
-      model: DataFrame,
-      thr: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.ccnetLangBucketWith(
-        graft.operators.TextOps.charLmScoreWith(batch, model)
-          .select(col("doc_id"), col("avg_millibits"))
-          .join(batch.select(col("doc_id"), col("lang")), Seq("doc_id")),
-        thr)
-    }
-  }
-
-  /** Score a stream of arriving documents under a FROZEN word-trigram
-    * stupid-backoff model (the three count tables + total trained by
-    * [[graft.operators.TextOps.trigramModel]]) via the exact batch
-    * scoring plan ([[graft.operators.TextOps.trigramScoreWith]]) —
-    * stream ≡ batch by construction; unseen words hit the OOV floor.
-    */
-  def runTrigramLmScore(
-      newDocs: DataFrame,
-      tri: DataFrame,
-      bi: DataFrame,
-      uni: DataFrame,
-      total: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.trigramScoreWith(batch, tri, bi, uni, total)
-    }
-  }
-
-  /** IVF-PQ ingest over a stream of arriving vectors: each micro-batch
-    * cell-assigns AND PQ-encodes against the FROZEN persisted centroids
-    * + codebook via the exact batch plan
-    * ([[graft.operators.SimilarityOps.ivfPqEncodeWith]]), appending
-    * (vec_id, cell, m, c) code rows — the codes, not the vectors, are
-    * what the serving layout stores. Stream ≡ batch by construction.
-    */
-  def runIvfPqEncode(
-      newVectors: DataFrame,
-      centroids: DataFrame,
-      codebook: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newVectors, store, table, checkpointDir) { batch =>
-      graft.operators.SimilarityOps.ivfPqEncodeWith(batch, centroids, codebook)
-    }
-  }
-
-  /** ANN serving over a stream of arriving QUERY vectors: each
-    * micro-batch answers its probes against the FROZEN persisted
-    * IVF-PQ index via the exact batch query plan
-    * ([[graft.operators.SimilarityOps.ivfPqQueryWith]]) — per batch
-    * the probed cell literals prune the code scan to nProbe
-    * directories. Per-probe results are batch-independent, so
-    * stream ≡ batch by construction.
-    */
-  def runIvfPqQuery(
-      probeVectors: DataFrame,
-      indexPath: String,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(probeVectors, store, table, checkpointDir) { batch =>
-      graft.operators.SimilarityOps.ivfPqQueryWith(batch.sparkSession, batch, indexPath)
-    }
-  }
-
-  /** Drive incremental (batch-vs-index) dedup over a stream of newly
-    * arriving documents: each micro-batch probes a PREBUILT static
-    * index via the exact same [[graft.operators.DedupOps.probeAgainstIndex]]
-    * plan the batch operator uses — the stream-static join pattern, so
-    * stream ≡ batch holds by construction (StreamingSpec proves it).
-    * The index DataFrames are static: at scale they are the persisted
-    * index tables, re-read per micro-batch, never recomputed from the
-    * corpus — per-batch cost stays O(batch), the property that makes
-    * continuous ingest dedup viable at 100 TB corpus size.
-    */
-  def runIncrementalDedup(
-      newDocs: DataFrame,
-      index: graft.operators.DedupOps.DedupIndex,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.DedupOps.probeAgainstIndex(batch, index)
-    }
-  }
-
-  /** CDC shared-span probe over a stream of arriving documents against
-    * a frozen chunk index ([[graft.operators.DedupOps.cdcProbeWith]]):
-    * per-doc verbatim-overlap verdicts at O(batch) per tick via the
-    * same stream-static join pattern as [[runIncrementalDedup]] —
-    * chunking is the codegen'd `cdc_chunks` expression, the index is a
-    * persisted table re-read per micro-batch, never recomputed.
-    */
-  def runCdcProbe(
-      newDocs: DataFrame,
-      refChunks: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.DedupOps.cdcProbeWith(batch, refChunks)
-    }
-  }
-
-  /** Missed-duplicate edge mining over arriving documents against a
-    * frozen rare-shingle postings index
-    * ([[graft.operators.DedupOps.edgeProbeWith]]): each micro-batch
-    * lands its (doc_new, doc_ref, n_rare) topical-overlap edges at
-    * O(batch · maxDf) via the stream-static join pattern — the
-    * incremental maintenance path for the link-prediction/modularity
-    * graph family. `refPostings` must be a PERSISTED/static table
-    * (parquet read), like every frozen index here.
-    */
-  def runEdgeProbe(
-      newDocs: DataFrame,
-      refPostings: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.DedupOps.edgeProbeWith(batch, refPostings)
-    }
-  }
-
-  /** Verbatim-span provenance over arriving documents against a frozen
-    * POSITIONAL gram index ([[graft.operators.DedupOps.spanProbeWith]]):
-    * each micro-batch lands its (doc_new, doc_ref, longest span)
-    * report via the stream-static join pattern. `refPostings` must be
-    * a persisted/static table, like every frozen index here.
-    */
-  def runSpanProbe(
-      newDocs: DataFrame,
-      refPostings: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.DedupOps.spanProbeWith(batch, refPostings)
-    }
-  }
-
-  /** Scored IVF assignment of arriving vectors against FROZEN centroids
-    * — the landing half of the index-drift monitor
-    * ([[graft.operators.SimilarityOps.simIndexDrift]]'s aggregates then
-    * derive from the landed per-vector (cell, cos_ppm) table plus the
-    * index's training-side aggregates, both bounded).
-    */
-  def runDriftAssign(
-      newVectors: DataFrame,
-      centroids: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newVectors, store, table, checkpointDir) { batch =>
-      graft.operators.SimilarityOps.driftAssignWith(batch, centroids)
-    }
-  }
-
-  /** RAKE keyword tagging over arriving documents: the score is
-    * entirely DOC-LOCAL (phrase runs, word deg/freq, top-3 all within
-    * one document), so the streaming gate IS the batch plan per
-    * micro-batch — no frozen artifact, no cross-batch state.
-    */
-  def runRake(
-      newDocs: DataFrame,
-      store: RelationStore,
-      table: String,
-      checkpointDir: String): Unit = {
-    runAppendScorer(newDocs, store, table, checkpointDir) { batch =>
-      graft.operators.TextOps.rakeOf(batch)
+      store.write(graft.operators.Events.anomalyOf(store.read(gridTable)), anomalyTable)
     }
   }
 
@@ -1179,19 +669,8 @@ object Streaming {
       events: DataFrame,
       store: RelationStore,
       table: String,
-      checkpointDir: String): Unit = {
-    val q = sessionize(events).toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (store.exists(table)) {
-          val target = store.read(table)
-          val kept = target.join(batch.select("user_id").distinct(), Seq("user_id"), "left_anti")
-          store.write(kept.unionByName(batch), table)
-        } else store.write(batch, table)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drive(sessionize(events).toDF(), checkpointDir) { (batch, _) =>
+      upsert(store, table, Seq("user_id"), batch)
+    }
 }

@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.exec.RelationStore
+import graft.operators.{CurateOps, DedupOps, Multimodal, SimilarityOps, TextOps}
 import graft.streaming.Streaming
 
 /** Streaming vs batch equivalence: the streaming daily aggregate and
@@ -77,8 +78,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.mode("overwrite").parquet(docsIn)
 
-    Streaming.runExactDedup(Streaming.documentStream(spark, docsIn), store,
-      "dedup", s"$work/cp4")
+    Streaming.runAppend(
+      Streaming.streamingExactDedup(Streaming.documentStream(spark, docsIn)).toDF(),
+      store, "dedup", s"$work/cp4")()
     val streamed = store.read("dedup").select("doc_id", "fp", "keeper", "keep")
     val batch = graft.operators.DedupOps.dedupExact(spark, "/root/testdata/sf0.001")
       .select("doc_id", "fp", "keeper", "keep")
@@ -92,8 +94,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dupRow = docs.filter(col("doc_id") === 0)
       .withColumn("doc_id", lit(999999L))
     dupRow.coalesce(1).write.mode("append").parquet(docsIn)
-    Streaming.runExactDedup(Streaming.documentStream(spark, docsIn), store,
-      "dedup", s"$work/cp4")
+    Streaming.runAppend(
+      Streaming.streamingExactDedup(Streaming.documentStream(spark, docsIn)).toDF(),
+      store, "dedup", s"$work/cp4")()
     val late = store.read("dedup").filter(col("doc_id") === 999999L)
     assert(late.count() == 1)
     val r = late.first()
@@ -139,12 +142,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // land the new docs in TWO files: stream sees two arrivals; each
     // micro-batch probes the same static index
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runIncrementalDedup(Streaming.documentStream(spark, newIn), index,
-      store, "inc_dedup", s"$work/cp_inc")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "inc_dedup", s"$work/cp_inc")(DedupOps.probeAgainstIndex(_, index))
     val afterFirst = store.read("inc_dedup").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runIncrementalDedup(Streaming.documentStream(spark, newIn), index,
-      store, "inc_dedup", s"$work/cp_inc")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "inc_dedup", s"$work/cp_inc")(DedupOps.probeAgainstIndex(_, index))
     val streamed = store.read("inc_dedup")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // per-doc verdicts are batch-independent (each probe only joins the
@@ -161,12 +164,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val newIn = s"$work/rakedocs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runRake(Streaming.documentStream(spark, newIn),
-      store, "rake_tags", s"$work/cp_rake")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "rake_tags", s"$work/cp_rake")(TextOps.rakeOf)
     val afterFirst = store.read("rake_tags").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runRake(Streaming.documentStream(spark, newIn),
-      store, "rake_tags", s"$work/cp_rake")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "rake_tags", s"$work/cp_rake")(TextOps.rakeOf)
     val streamed = store.read("rake_tags")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // RAKE is doc-local, so the union over arrivals == the batch op
@@ -186,12 +189,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.write(graft.operators.DedupOps.cdcChunkIndexOf(docs.filter(!isNew)), "cdc_idx")
     val ref = store.read("cdc_idx")
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runCdcProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "cdc_probe", s"$work/cp_cdc")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "cdc_probe", s"$work/cp_cdc")(DedupOps.cdcProbeWith(_, ref))
     val afterFirst = store.read("cdc_probe").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runCdcProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "cdc_probe", s"$work/cp_cdc")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "cdc_probe", s"$work/cp_cdc")(DedupOps.cdcProbeWith(_, ref))
     val streamed = store.read("cdc_probe")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // per-doc verdicts join only the batch against the frozen index, so
@@ -213,12 +216,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.DedupOps.shinglePostingsIndexOf(docs.filter(!isNew)), "edge_idx")
     val ref = store.read("edge_idx")
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runEdgeProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "edge_cands", s"$work/cp_edges")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "edge_cands", s"$work/cp_edges")(DedupOps.edgeProbeWith(_, ref))
     val afterFirst = store.read("edge_cands").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runEdgeProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "edge_cands", s"$work/cp_edges")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "edge_cands", s"$work/cp_edges")(DedupOps.edgeProbeWith(_, ref))
     val streamed = store.read("edge_cands")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // edges pair the batch against the frozen index only (never batch
@@ -239,12 +242,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.DedupOps.spanPostingsIndexOf(docs.filter(!isNew)), "span_idx")
     val ref = store.read("span_idx")
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runSpanProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "span_report", s"$work/cp_spans")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "span_report", s"$work/cp_spans")(DedupOps.spanProbeWith(_, ref))
     val afterFirst = store.read("span_report").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runSpanProbe(Streaming.documentStream(spark, newIn), ref,
-      store, "span_report", s"$work/cp_spans")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "span_report", s"$work/cp_spans")(DedupOps.spanProbeWith(_, ref))
     val streamed = store.read("span_report")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // span islands are (new doc, ref doc)-local and documents arrive
@@ -268,12 +271,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.write(SimilarityOps.driftCentroids(spark, sf), "drift_centroids")
     val centroids = store.read("drift_centroids")
     emb.filter(isNew && col("vec_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runDriftAssign(Streaming.embeddingStream(spark, newIn), centroids,
-      store, "drift_assign", s"$work/cp_drift")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "drift_assign", s"$work/cp_drift")(SimilarityOps.driftAssignWith(_, centroids))
     val afterFirst = store.read("drift_assign").count()
     emb.filter(isNew && col("vec_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runDriftAssign(Streaming.embeddingStream(spark, newIn), centroids,
-      store, "drift_assign", s"$work/cp_drift")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "drift_assign", s"$work/cp_drift")(SimilarityOps.driftAssignWith(_, centroids))
     val streamed = store.read("drift_assign")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = SimilarityOps.driftAssignWith(emb.filter(isNew), centroids)
@@ -301,12 +304,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // model trained ONCE on the already-ingested slice (the artifact)
     val (wtab, norm) = graft.operators.CurateOps.dsirModel(docs.filter(!isNew))
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runDsirScore(Streaming.documentStream(spark, newIn), wtab, norm,
-      store, "dsir_scores", s"$work/cp_dsir")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "dsir_scores", s"$work/cp_dsir")(CurateOps.dsirScore(_, wtab, norm))
     val afterFirst = store.read("dsir_scores").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runDsirScore(Streaming.documentStream(spark, newIn), wtab, norm,
-      store, "dsir_scores", s"$work/cp_dsir")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "dsir_scores", s"$work/cp_dsir")(CurateOps.dsirScore(_, wtab, norm))
     val streamed = store.read("dsir_scores")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // scoring is per-document under a FIXED model, so the union over
@@ -326,12 +329,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // containing words the model never saw hits the OOV floor
     val (tri, bi, uni, total) = graft.operators.TextOps.trigramModelOf(docs.filter(!isNew))
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runTrigramLmScore(Streaming.documentStream(spark, newIn), tri, bi, uni,
-      total, store, "tri_scores", s"$work/cp_tri")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "tri_scores", s"$work/cp_tri")(TextOps.trigramScoreWith(_, tri, bi, uni, total))
     val afterFirst = store.read("tri_scores").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runTrigramLmScore(Streaming.documentStream(spark, newIn), tri, bi, uni,
-      total, store, "tri_scores", s"$work/cp_tri")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "tri_scores", s"$work/cp_tri")(TextOps.trigramScoreWith(_, tri, bi, uni, total))
     val streamed = store.read("tri_scores")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // per-doc scoring under a FIXED model — union over arrivals equals
@@ -365,12 +368,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("doc_id"), col("avg_millibits"))
     val (t1, t2) = graft.operators.TextOps.ccnetThresholds(batchScored)
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runCcnetBuckets(Streaming.documentStream(spark, newIn), model, t1, t2,
-      store, "ccnet_buckets", s"$work/cp_ccnet")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "ccnet_buckets", s"$work/cp_ccnet")(TextOps.ccnetBucketsOf(_, model, t1, t2))
     val afterFirst = store.read("ccnet_buckets").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runCcnetBuckets(Streaming.documentStream(spark, newIn), model, t1, t2,
-      store, "ccnet_buckets", s"$work/cp_ccnet")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "ccnet_buckets", s"$work/cp_ccnet")(TextOps.ccnetBucketsOf(_, model, t1, t2))
     val streamed = store.read("ccnet_buckets")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // scoring + bucketing are per-document under the frozen artifacts,
@@ -389,12 +392,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // doc_id-ordered arrivals (the ingest contract): two batches split
     // on the id axis
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runSourceQuota(Streaming.documentStream(spark, newIn), store,
-      "quota", s"$work/cp_quota", quota = 300L)
+    Streaming.runAppend(
+      Streaming.streamingSourceQuota(Streaming.documentStream(spark, newIn), 300L).toDF(),
+      store, "quota", s"$work/cp_quota")()
     val afterFirst = store.read("quota").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runSourceQuota(Streaming.documentStream(spark, newIn), store,
-      "quota", s"$work/cp_quota", quota = 300L)
+    Streaming.runAppend(
+      Streaming.streamingSourceQuota(Streaming.documentStream(spark, newIn), 300L).toDF(),
+      store, "quota", s"$work/cp_quota")()
     val streamed = store.read("quota")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // the per-source counter carries across micro-batches, so the
@@ -542,12 +547,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Multimodal.persistMmPhashIndexOf(docs.filter(!isNew), store, "mmidx")
     val idx = store.read("mmidx_chunks")
     docs.filter(isNew && col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runMmDedup(Streaming.documentStream(spark, newIn), idx,
-      store, "mm_verdicts", s"$work/cp_mmdedup")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "mm_verdicts", s"$work/cp_mmdedup")(Multimodal.mmProbeAgainstIndex(_, idx))
     val afterFirst = store.read("mm_verdicts").count()
     docs.filter(isNew && col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runMmDedup(Streaming.documentStream(spark, newIn), idx,
-      store, "mm_verdicts", s"$work/cp_mmdedup")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "mm_verdicts", s"$work/cp_mmdedup")(Multimodal.mmProbeAgainstIndex(_, idx))
     val streamed = store.read("mm_verdicts")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = Multimodal.mmProbeAgainstIndex(docs.filter(isNew), idx)
@@ -608,12 +613,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val newIn = s"$work/knn_queries"
     val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
     queries.filter(col("vec_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runKnnClassify(Streaming.vectorStream(spark, newIn), ref,
-      store, "knn_preds", s"$work/cp_knncls")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "knn_preds", s"$work/cp_knncls")(SimilarityOps.knnClassifyWith(_, ref))
     val afterFirst = store.read("knn_preds").count()
     queries.filter(col("vec_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runKnnClassify(Streaming.vectorStream(spark, newIn), ref,
-      store, "knn_preds", s"$work/cp_knncls")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "knn_preds", s"$work/cp_knncls")(SimilarityOps.knnClassifyWith(_, ref))
     val streamed = store.read("knn_preds")
       .select(col("vec_id"), col("pred_label"), col("votes"))
     val batch = SimilarityOps.simKnnClassify(spark, sf)
@@ -654,12 +659,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runCharEntropy(Streaming.documentStream(spark, newIn), store,
-      "entropy", s"$work/cp_entropy")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "entropy", s"$work/cp_entropy")(TextOps.charEntropyOf)
     val afterFirst = store.read("entropy").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runCharEntropy(Streaming.documentStream(spark, newIn), store,
-      "entropy", s"$work/cp_entropy")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "entropy", s"$work/cp_entropy")(TextOps.charEntropyOf)
     val streamed = store.read("entropy")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // row-local scoring → union over arrivals equals the batch operator
@@ -675,18 +680,34 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runMojibake(Streaming.documentStream(spark, newIn), store,
-      "mojibake", s"$work/cp_mojibake")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "mojibake", s"$work/cp_mojibake")(TextOps.mojibakeOf)
     val afterFirst = store.read("mojibake").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runMojibake(Streaming.documentStream(spark, newIn), store,
-      "mojibake", s"$work/cp_mojibake")
+    def secondArrival(cp: String): Unit =
+      Streaming.runAppend(Streaming.documentStream(spark, newIn),
+        store, "mojibake", cp)(TextOps.mojibakeOf)
+    secondArrival(s"$work/cp_mojibake")
     val streamed = store.read("mojibake")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.TextOps.txtMojibake(spark, sf)
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
+
+    // crash-replay: a fresh checkpoint dir (un-committed offsets)
+    // re-runs the arrivals under an already-landed batchId, so the
+    // append must land nothing — no new delta, no base rewrite
+    def contents(): Seq[org.apache.spark.sql.Row] = {
+      val df = store.read("mojibake")
+      df.orderBy(df.columns.toSeq.map(col): _*).collect().toSeq
+    }
+    val landed = store.landedBatchIds("mojibake")
+    val snapshot = contents()
+    secondArrival(s"$work/cp_mojibake_replay")
+    assert(store.landedBatchIds("mojibake") == landed, "replay must not land a new delta")
+    assert(store.versions("mojibake").isEmpty, "replay must not rewrite the landed table")
+    assert(contents() == snapshot, "content must be identical after replay")
   }
 
   test("streaming c4 gate equals the batch operator across two arrivals") {
@@ -695,12 +716,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runC4Gate(Streaming.documentStream(spark, newIn), store,
-      "c4", s"$work/cp_c4")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "c4", s"$work/cp_c4")(TextOps.c4GateOf)
     val afterFirst = store.read("c4").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runC4Gate(Streaming.documentStream(spark, newIn), store,
-      "c4", s"$work/cp_c4")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "c4", s"$work/cp_c4")(TextOps.c4GateOf)
     val streamed = store.read("c4")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.TextOps.txtC4Gate(spark, sf)
@@ -719,12 +740,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       docs.filter(pmod(col("doc_id"), lit(20)) === 0))
     val train = docs.filter(pmod(col("doc_id"), lit(20)) =!= 0)
     train.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runDecontaminate(Streaming.documentStream(spark, newIn), evalGrams,
-      store, "decon", s"$work/cp_decon")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "decon", s"$work/cp_decon")(CurateOps.decontaminateOf(_, evalGrams))
     val afterFirst = store.read("decon").count()
     train.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runDecontaminate(Streaming.documentStream(spark, newIn), evalGrams,
-      store, "decon", s"$work/cp_decon")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "decon", s"$work/cp_decon")(CurateOps.decontaminateOf(_, evalGrams))
     val streamed = store.read("decon")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // per-doc verdicts against the fixed eval side → union over
@@ -783,12 +804,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     val thr = graft.operators.TextOps.ccnetLangThresholds(batchScored)
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runCcnetLangBuckets(Streaming.documentStream(spark, newIn), model, thr,
-      store, "ccnetl_buckets", s"$work/cp_ccnetl")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "ccnetl_buckets", s"$work/cp_ccnetl")(TextOps.ccnetLangBucketsOf(_, model, thr))
     val afterFirst = store.read("ccnetl_buckets").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runCcnetLangBuckets(Streaming.documentStream(spark, newIn), model, thr,
-      store, "ccnetl_buckets", s"$work/cp_ccnetl")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "ccnetl_buckets", s"$work/cp_ccnetl")(TextOps.ccnetLangBucketsOf(_, model, thr))
     val streamed = store.read("ccnetl_buckets")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.TextOps.txtCcnetLangBuckets(spark, sf)
@@ -809,12 +830,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("doc_id") < 10)
       .selectExpr("doc_id as probe_id", "term", "u as pu")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runTfidfRoute(Streaming.documentStream(spark, newIn), idf, probes,
-      store, "tfidf_route", s"$work/cp_tfidf")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "tfidf_route", s"$work/cp_tfidf")(TextOps.tfidfRouteWith(_, idf, probes))
     val afterFirst = store.read("tfidf_route").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runTfidfRoute(Streaming.documentStream(spark, newIn), idf, probes,
-      store, "tfidf_route", s"$work/cp_tfidf")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "tfidf_route", s"$work/cp_tfidf")(TextOps.tfidfRouteWith(_, idf, probes))
     val streamed = store.read("tfidf_route")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // a doc's unit vector depends only on its own shingles + the frozen
@@ -832,12 +853,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sfDir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runGopherGate(Streaming.documentStream(spark, newIn),
-      store, "gopher_verdicts", s"$work/cp_gopher")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "gopher_verdicts", s"$work/cp_gopher")(CurateOps.gopherGateOfDocs)
     val afterFirst = store.read("gopher_verdicts").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runGopherGate(Streaming.documentStream(spark, newIn),
-      store, "gopher_verdicts", s"$work/cp_gopher")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "gopher_verdicts", s"$work/cp_gopher")(CurateOps.gopherGateOfDocs)
     val streamed = store.read("gopher_verdicts")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.CurateOps.curateGopherGate(spark, sfDir)
@@ -1059,12 +1080,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sfDir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runTopicTag(Streaming.documentStream(spark, newIn),
-      store, "topics", s"$work/cp_topic")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "topics", s"$work/cp_topic")(b => TextOps.topicTagWith(b.sparkSession, b))
     val afterFirst = store.read("topics").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runTopicTag(Streaming.documentStream(spark, newIn),
-      store, "topics", s"$work/cp_topic")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "topics", s"$work/cp_topic")(b => TextOps.topicTagWith(b.sparkSession, b))
     val streamed = store.read("topics")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.TextOps.txtTopicTag(spark, sfDir)
@@ -1083,12 +1104,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val boiler = graft.operators.TextOps.boilerplateHashes(docs).cache()
     assert(boiler.count() > 0, "corpus should train a non-empty strike set")
     docs.filter(col("doc_id") < 250).write.mode("overwrite").parquet(newIn)
-    Streaming.runBoilerplateFilter(Streaming.documentStream(spark, newIn),
-      boiler, store, "clean_docs", s"$work/cp_boiler")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "clean_docs", s"$work/cp_boiler")(TextOps.boilerplateFilterWith(_, boiler))
     val afterFirst = store.read("clean_docs").count()
     docs.filter(col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runBoilerplateFilter(Streaming.documentStream(spark, newIn),
-      boiler, store, "clean_docs", s"$work/cp_boiler")
+    Streaming.runAppend(Streaming.documentStream(spark, newIn),
+      store, "clean_docs", s"$work/cp_boiler")(TextOps.boilerplateFilterWith(_, boiler))
     val streamed = store.read("clean_docs")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     val batch = graft.operators.TextOps.txtBoilerplateRemove(spark, sfDir)
@@ -1111,12 +1132,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two arrivals of "new" vectors
     val isNew = pmod(col("vec_id"), lit(10)) >= 8
     vecs.filter(isNew && col("vec_id") < 300).write.mode("overwrite").parquet(newIn)
-    Streaming.runIvfAssign(Streaming.embeddingStream(spark, newIn), centroids,
-      store, "ivf_assign", s"$work/cp_ivf")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ivf_assign", s"$work/cp_ivf")(SimilarityOps.ivfAssignWith(_, centroids))
     val afterFirst = store.read("ivf_assign").count()
     vecs.filter(isNew && col("vec_id") >= 300).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runIvfAssign(Streaming.embeddingStream(spark, newIn), centroids,
-      store, "ivf_assign", s"$work/cp_ivf")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ivf_assign", s"$work/cp_ivf")(SimilarityOps.ivfAssignWith(_, centroids))
     val streamed = store.read("ivf_assign")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // assignment is per-vector under FROZEN centroids → the union over
@@ -1146,12 +1167,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probe stream = vectors 20..39 arriving in two batches
     val isProbe = col("vec_id") >= 20 && col("vec_id") < 40
     vecs.filter(isProbe && col("vec_id") < 30).write.mode("overwrite").parquet(newIn)
-    Streaming.runIvfPqQuery(Streaming.embeddingStream(spark, newIn), idx,
-      store, "ann_results", s"$work/cp_annq")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ann_results", s"$work/cp_annq") { b =>
+      SimilarityOps.ivfPqQueryWith(b.sparkSession, b, idx)
+    }
     val afterFirst = store.read("ann_results").count()
     vecs.filter(isProbe && col("vec_id") >= 30).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runIvfPqQuery(Streaming.embeddingStream(spark, newIn), idx,
-      store, "ann_results", s"$work/cp_annq")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ann_results", s"$work/cp_annq") { b =>
+      SimilarityOps.ivfPqQueryWith(b.sparkSession, b, idx)
+    }
     val streamed = store.read("ann_results")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals answered")
     // per-probe answers are independent of batching — union over
@@ -1175,12 +1200,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
     val isNew = pmod(col("vec_id"), lit(10)) >= 8
     vecs.filter(isNew && col("vec_id") < 300).write.mode("overwrite").parquet(newIn)
-    Streaming.runIvfPqEncode(Streaming.embeddingStream(spark, newIn), centroids,
-      codebook, store, "ivfpq_codes", s"$work/cp_ivfpq")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ivfpq_codes", s"$work/cp_ivfpq")(
+      SimilarityOps.ivfPqEncodeWith(_, centroids, codebook))
     val afterFirst = store.read("ivfpq_codes").count()
     vecs.filter(isNew && col("vec_id") >= 300).coalesce(1).write.mode("append").parquet(newIn)
-    Streaming.runIvfPqEncode(Streaming.embeddingStream(spark, newIn), centroids,
-      codebook, store, "ivfpq_codes", s"$work/cp_ivfpq")
+    Streaming.runAppend(Streaming.vectorStream(spark, newIn),
+      store, "ivfpq_codes", s"$work/cp_ivfpq")(
+      SimilarityOps.ivfPqEncodeWith(_, centroids, codebook))
     val streamed = store.read("ivfpq_codes")
     assert(afterFirst > 0 && streamed.count() > afterFirst, "two arrivals landed")
     // M=8 code rows per vector, frozen model → union over arrivals
@@ -1191,7 +1218,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batch.exceptAll(streamed).count() == 0)
   }
 
-  test("delta landing: O(batch) per tick, replay-idempotent, hard-link fold, write supersedes") {
+  test("delta landing: O(batch) per tick, replay-idempotent, manifest-only fold, write supersedes") {
     val s = spark
     import s.implicits._
     val store = new RelationStore(spark, s"$work/wh_delta", deltaFoldEvery = 3)
