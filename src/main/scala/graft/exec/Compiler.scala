@@ -132,7 +132,9 @@ object Sources {
     * explicit read schema: no inference pass (CSV/JSON inference is a
     * full extra scan of the data — at 100 TB that matters), and
     * malformed rows surface as nulls under the declared types instead
-    * of silently widening the column.
+    * of silently widening the column. Parquet sources take their schema
+    * from the [[graft.sources.Tables]] metadata memo, so a build or tick
+    * runs no footer-inference job for an unchanged source.
     */
   def registerAll(
       spark: org.apache.spark.sql.SparkSession,
@@ -158,7 +160,7 @@ object Sources {
           case "csv" => reader.csv(loc)
           case "json" => reader.json(loc)
           case "orc" => reader.orc(loc)
-          case _ => reader.parquet(loc)
+          case _ => graft.sources.Tables.parquet(spark, loc, s.options)
         }
       val df = s.filter.fold(df0)(df0.filter)
       df.createOrReplaceTempView(viewName(s))

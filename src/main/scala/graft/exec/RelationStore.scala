@@ -1324,8 +1324,10 @@ final class RelationStore(
     if (liveDeltaIds(name).size >= math.max(2, deltaFoldEvery)) {
       foldDeltas(name)
       // landing-loop auto-OPTIMIZE: bound the file count a scan opens
-      // without operator action; rewrites only under-sized files
-      if (versionEntries(name, currentVersion(name).get).size >= autoCompactMinFiles)
+      // without operator action; rewrites only under-sized files. No
+      // head yet when our fold was a no-op behind a competitor's fold
+      // that is committed but not yet published: nothing to compact.
+      if (currentVersion(name).exists(v => versionEntries(name, v).size >= autoCompactMinFiles))
         compact(name, autoCompactTargetBytes)
     }
     true

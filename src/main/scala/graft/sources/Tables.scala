@@ -1,14 +1,24 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-generated parquet test tables (TESTDATA.md).
+/** Loaders for the driver-generated parquet test tables (TESTDATA.md)
+  * and the dbt parquet sources.
   *
-  * All reads go through `spark.read.parquet` so Catalyst handles column
-  * pruning + predicate pushdown into the scan. At cluster scale the same
-  * API reads a partitioned table directory; nothing here assumes local mode.
+  * Parquet reads take their schema from one metadata memo, keyed by path
+  * (plus reader options), as a metastore serves a table's schema: a
+  * schema-less `spark.read.parquet` runs a footer-reading Spark job
+  * before the plan exists. An entry holds the schema, row count and
+  * fanout targets, stamped with the listing it was inferred from (every
+  * file's length and mtime, from the read's own file index) and the
+  * parquet read settings. A changed stamp — a table rewritten in place,
+  * even under the same file name — re-infers once and replaces the
+  * entry. Only metadata is cached, never rows or plans; Catalyst still
+  * prunes columns and pushes predicates into the scan.
   *
   * `events.ts` has shipped as parquet TIMESTAMP(NANOS) (scanned as a raw
   * long under `spark.sql.legacy.parquet.nanosAsLong=true`) and as
@@ -42,9 +52,69 @@ object Tables {
   val extra: Seq[String] = Seq("events", "documents", "embeddings")
   val all: Seq[String] = tpch ++ extra
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") normalizeEventTs(df) else df
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    loaded(spark, dir, name)._1
+
+  /** [[load]] with the table's memo entry. */
+  private def loaded(spark: SparkSession, dir: String, name: String): (DataFrame, Entry) = {
+    val (df, e) = read(spark, s"$dir/$name.parquet", Map.empty)
+    (if (name == "events") normalizeEventTs(df) else df, e)
+  }
+
+  /** `spark.read.options(options).parquet(path)`, schema served by the memo. */
+  def parquet(spark: SparkSession, path: String,
+      options: Map[String, String] = Map.empty): DataFrame = read(spark, path, options)._1
+
+  /** One source's memoized metadata. `rows` and `fanout` are filled
+    * outside any lock (a rare duplicate probe computes the same value),
+    * so a slow count never blocks loads of other sources.
+    */
+  private[graft] final class Entry(val stamp: String, val schema: StructType) {
+    @volatile var rows: Option[Long] = None
+    val fanout = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Integer]()
+  }
+
+  private[graft] val memo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), Entry]()
+
+  /** The read's own listing — sorted (file, length, mtime) from its file
+    * index, driver-side, no Spark job — plus the parquet read settings
+    * the inferred schema depends on (e.g. `nanosAsLong`).
+    */
+  private def stampOf(spark: SparkSession, df: DataFrame): String = {
+    val files = df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location } match {
+      case Some(ix: PartitioningAwareFileIndex) => ix.allFiles()
+      case other => throw new IllegalStateException(s"not a file-index parquet read: $other")
+    }
+    val conf = spark.conf.getAll.toSeq.collect {
+      case (k, v) if k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
+    }
+    (conf.sorted ++ files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted)
+      .mkString("\n")
+  }
+
+  private def read(spark: SparkSession, path: String,
+      options: Map[String, String]): (DataFrame, Entry) = {
+    val key = (path, options)
+    val hit = Option(memo.get(key)).flatMap { e =>
+      val df = spark.read.options(options).schema(e.schema).parquet(path)
+      if (stampOf(spark, df) == e.stamp) Some((df, e)) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.options(options).parquet(path)
+      val e = new Entry(stampOf(spark, df), df.schema)
+      memo.put(key, e)
+      (df, e)
+    }
+  }
+
+  private def rowsOf(df: DataFrame, e: Entry): Long = e.rows.getOrElse {
+    val n = df.count()
+    e.rows = Some(n)
+    n
   }
 
   /** Source rows per fanout task: 8 k docs × 30–300× explode ≈ 0.25–2 M
@@ -66,47 +136,19 @@ object Tables {
     */
   private[graft] val RowsPerGramFanoutTask = 512L
 
-  /** Memoized fanout decision / row count, keyed by the source's
-    * CONCRETE FILE LISTING (not its path): a table rewritten in place
-    * (ScaleGen regenerating a scratch dir, OPTIMIZE compacting a
-    * store) produces new part-file names, so the rewrite gets a fresh
-    * probe instead of a stale target that would silently drop the
-    * parallelism guard or add a useless shuffle. The probe itself runs
-    * OUTSIDE any map lock (plain get / putIfAbsent — losers of a rare
-    * duplicate race discard an identical deterministic value), so a
-    * slow count can never block concurrent loads of other sources
-    * hashing to the same bin.
-    */
-  private val fanoutTarget =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private val rowCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Memo key = path + hash of the sorted file listing (driver-side
-    * metadata, no Spark job). */
-  private def listingKey(df: DataFrame, dir: String, name: String): String =
-    s"$dir/$name#${java.util.Arrays.hashCode(df.inputFiles.sorted.asInstanceOf[Array[AnyRef]])}"
-
-  /** Concrete-listing fingerprint of a source table — the same
-    * staleness key the fanout/row-count memos use, for operator-side
-    * memos (e.g. the hot-shingle probe) that must re-derive when a
-    * table is rewritten in place.
+  /** SHA-256 of a source table's memo stamp, for operator-side memos
+    * (e.g. the hot-shingle probe) that must re-derive when the table is
+    * rewritten in place.
     */
   private[graft] def listingFingerprint(spark: SparkSession, dir: String,
-      name: String): String = listingKey(load(spark, dir, name), dir, name)
+      name: String): String = java.security.MessageDigest.getInstance("SHA-256")
+    .digest(loaded(spark, dir, name)._2.stamp.getBytes("UTF-8"))
+    .map(b => f"$b%02x").mkString
 
-  /** Row count of a source table, memoized per concrete file listing
-    * (one metadata-cheap parquet count per listing per JVM). */
+  /** Row count of a source table, one parquet count per listing per JVM. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val df = load(spark, dir, name)
-    val key = listingKey(df, dir, name)
-    val cached = rowCounts.get(key)
-    if (cached != null) cached.longValue()
-    else {
-      val n = df.count()
-      rowCounts.putIfAbsent(key, n)
-      n
-    }
+    val (df, e) = loaded(spark, dir, name)
+    rowsOf(df, e)
   }
 
   /** [[load]] + guaranteed scan parallelism for FANOUT consumers. The
@@ -130,23 +172,17 @@ object Tables {
     */
   def loadFanout(spark: SparkSession, dir: String, name: String,
       rowsPerTask: Long = RowsPerFanoutTask): DataFrame = {
-    val df = load(spark, dir, name)
-    val key = s"${listingKey(df, dir, name)}@$rowsPerTask"
-    val cached = fanoutTarget.get(key)
+    val (df, e) = loaded(spark, dir, name)
+    val cached = e.fanout.get(rowsPerTask)
     val target: Int =
       if (cached != null) cached.intValue()
       else {
-        val rows = rowCount(spark, dir, name)
         val t0 = math.min(spark.sparkContext.defaultParallelism.toLong,
-          (rows + rowsPerTask - 1) / rowsPerTask).toInt
+          (rowsOf(df, e) + rowsPerTask - 1) / rowsPerTask).toInt
         val t = if (t0 > 1 && df.rdd.getNumPartitions < t0) t0 else 1
-        fanoutTarget.putIfAbsent(key, t)
+        e.fanout.putIfAbsent(rowsPerTask, t)
         t
       }
     if (target > 1) df.repartition(target) else df
   }
-
-  /** Register every table as a temp view named after itself (for spark.sql paths). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

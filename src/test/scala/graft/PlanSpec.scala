@@ -204,6 +204,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p2.contains("Exchange"), "regex scrub must not shuffle:\n" + p2.take(2000))
   }
 
+  test("a second build of a source-scan query runs zero Spark jobs (memoized schemas)") {
+    // a schema-less parquet read infers its schema with a footer job;
+    // once the source memo holds the schema, building a plan runs none
+    Seq("q6_forecast_revenue", "q_cross_join", "split_assign").foreach { q =>
+      val build = SparkEntry.queries(q)
+      build(spark, sf)
+      val (_, jobs) = JobCount(spark)(build(spark, sf))
+      assert(jobs == 0, s"$q: $jobs Spark job(s) while building its DataFrame")
+    }
+  }
+
   test("cluster assign broadcasts the bounded centroid table") {
     val plan = executedPhysical(CurateOps.embClusterAssign(spark, sf))
     assert(plan.contains("Broadcast"), "centroids should broadcast")
