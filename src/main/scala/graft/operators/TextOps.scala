@@ -1198,11 +1198,11 @@ object TextOps {
     * is the doc itself. The complement of [[txtNgramDiversity]]'s
     * within-doc repetition: this one is corpus-relative.
     *
-    * Scale shape: distinct (doc, gram) then a gram-keyed min — both
-    * map-side combined; the first-doc table joins back on the gram key
-    * (co-partitioned with the min's exchange, one row per distinct
-    * gram regardless of its df), then one doc-keyed count. No windows,
-    * no corpus-wide broadcast.
+    * Scale shape: one gram-keyed exchange. The distinct (gram, doc)
+    * dedup and a per-gram `min(doc_id)` window (the first doc) both run
+    * on that partitioning without another shuffle; then one doc-keyed
+    * count. No join back, no corpus-wide broadcast; a window group
+    * holds one gram's distinct docs, so it grows with that gram's df.
     */
   def txtNovelty(s: SparkSession, dir: String): DataFrame = {
     val n = 8

@@ -9,10 +9,14 @@ import graft.core.FileHash
 /** Partial-parsing gate (reference core/dbt/parser/partial.py:68 +
   * msgpack state manifest.py:778-941): cache the parsed project keyed
   * by every project file's checksum; when nothing changed, reload the
-  * manifest from the cache; when ONLY root-project model .sql bodies
+  * manifest from the cache; when ONLY content edits to root-project
+  * model .sql, singular test .sql, analysis .sql or seed .csv files
   * changed, re-parse just those files into the cached project
-  * ([[ProjectLoader.reparseModelFile]]) — the reference's headline
-  * "edit one model of a 2,000-model project" case.
+  * ([[ProjectLoader.reparseFile]]) — the reference's headline "edit one
+  * model of a 2,000-model project" case. SQL files go through the same
+  * node builder a full parse uses, so a partial parse yields the
+  * manifest a full parse of the same tree would; a seed edit refreshes
+  * the seed's checksum.
   *
   * Anything with cross-file parse effects falls back to a full parse,
   * mirroring partial.py's own conservative scheduling: file adds or
@@ -39,14 +43,16 @@ object PartialParse {
     def hashTree(base: Path, prefix: String): Map[String, String] =
       Files.walk(base).iterator().asScala
         .filter(p => Files.isRegularFile(p))
-        .filter { p =>
-          val s = p.toString
-          (s.endsWith(".sql") || s.endsWith(".yml") || s.endsWith(".yaml") ||
-            s.endsWith(".csv") || s.endsWith(".py")) &&
-            !s.contains("/target/") && !s.contains("/warehouse/")
+        .map(p => (p, base.relativize(p).toString))
+        .filter { case (_, rel) =>
+          // output directories are matched INSIDE the hashed tree: the
+          // tree's own location may lie under a `target` or `warehouse`
+          val r = "/" + rel
+          (r.endsWith(".sql") || r.endsWith(".yml") || r.endsWith(".yaml") ||
+            r.endsWith(".csv") || r.endsWith(".py")) &&
+            !r.contains("/target/") && !r.contains("/warehouse/")
         }
-        .map(p => (prefix + base.relativize(p).toString) ->
-          FileHash.of(Files.readString(p)).checksum)
+        .map { case (p, rel) => (prefix + rel) -> FileHash.of(Files.readString(p)).checksum }
         .toMap
     // local dependency packages may live OUTSIDE the project tree —
     // their edits must invalidate the cache too

@@ -52,41 +52,14 @@ object ProjectLoader {
       cliVars: Map[String, String],
       inheritedMacros: Option[Map[String, Macros.MacroDef]]): Project = {
     val dir = Paths.get(projectDir)
-    val projFile = dir.resolve("dbt_project.yml")
-    val proj: Map[String, Any] =
-      if (Files.exists(projFile)) MiniYaml.parseMap(Files.readString(projFile))
-      else Map("name" -> "graft")
-    val name = proj.getOrElse("name", "graft").toString
-    val projVars: Map[String, String] = proj.get("vars") match {
-      case Some(m: Map[String @unchecked, Any @unchecked]) =>
-        m.map { case (k, v) => k -> String.valueOf(v) }
-      case _ => Map.empty
-    }
-    val vars = projVars ++ cliVars
+    val header = readHeader(dir, cliVars)
+    val Header(proj, name, vars, modelDefaults, flags) = header
 
-    // project-level +config defaults for models (flat subset of the
-    // reference's config hierarchy, config.py merge rules)
-    val modelDefaults: Map[String, Any] = proj.get("models") match {
-      case Some(m: Map[String @unchecked, Any @unchecked]) =>
-        m.collect { case (k, v) if k.startsWith("+") => k.stripPrefix("+") -> v }
-      case _ => Map.empty
-    }
-
-    def files(sub: String, ext: String): Seq[Path] = {
-      val d = dir.resolve(sub)
-      if (!Files.exists(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(p => p.toString.endsWith(ext) && Files.isRegularFile(p))
-        .toSeq.sortBy(_.toString)
-    }
+    def files(sub: String, ext: String): Seq[Path] = filesUnder(dir.resolve(sub), ext)
 
     val nodes = scala.collection.mutable.LinkedHashMap[String, Node]()
     val sources = scala.collection.mutable.LinkedHashMap[String, SourceNode]()
     val unitTests = scala.collection.mutable.LinkedHashMap[String, UnitTestNode]()
-    // model name -> PRE-expansion file text; unit-test macro overrides
-    // (unit_test_definition.py:40-44) re-expand from this with the
-    // overridden macro table
-    val modelOrig = scala.collection.mutable.Map[String, String]()
     var onRunStart = Seq.empty[HookNode]
     var onRunEnd = Seq.empty[HookNode]
 
@@ -147,115 +120,18 @@ object ProjectLoader {
         (fromPkgs ++ fromRoot).toMap
       }
 
-    // Per-node macro dependencies (reference depends_on.macros,
-    // manifest.py build_macro_edges): direct calls found in the
-    // PRE-expansion text, transitively closed through macro bodies so
-    // an edit to a helper a macro calls still selects its users via
-    // state:modified.macros.
-    val macroCallRes: Map[String, Regex] =
-      macroTable.keys.map(k => k -> raw"(?<![\w])${Regex.quote(k)}\s*\(".r).toMap
-    def directMacroCalls(text: String): Set[String] =
-      macroCallRes.collect { case (k, re) if re.findFirstIn(text).isDefined => k }.toSet
-    val macroClosure: Map[String, Set[String]] = {
-      val direct = macroTable.map { case (k, d) => k -> directMacroCalls(d.body) }
-      def close(seen: Set[String]): Set[String] = {
-        val next = seen ++ seen.flatMap(direct.getOrElse(_, Set.empty))
-        if (next == seen) seen else close(next)
-      }
-      macroTable.keys.map(k => k -> close(Set(k))).toMap
-    }
+    // ---- SQL files: models, snapshots, analyses, singular tests ----
     val macroDeps = scala.collection.mutable.Map[String, Seq[String]]()
-    def recordMacroDeps(uniqueId: String, origText: String): Unit = {
-      val ms = directMacroCalls(origText).flatMap(macroClosure.getOrElse(_, Set.empty))
-      if (ms.nonEmpty) macroDeps(uniqueId) = ms.toSeq.sorted
-    }
-
-    // macro expansion, then parse-time control flow ({% if %}/{% for %};
-    // reference get_rendered — refs inside untaken branches never reach
-    // the DAG, exactly like rendered Jinja)
-    def expandSql(orig: String): String = Macros.expand(orig, macroTable)
-    def renderSql(orig: String): String =
-      ControlFlow.render(expandSql(orig), vars, vars.getOrElse("target", "dev"))
-
-    // project behavior flags (reference ProjectFlags legacy behaviors,
-    // core/dbt/contracts/project.py:318-346 — the `flags:` block)
-    val flags: Map[String, String] = proj.get("flags") match {
-      case Some(m: Map[String @unchecked, Any @unchecked]) =>
-        m.map { case (k, v) => k -> String.valueOf(v) }
-      case _ => Map.empty
-    }
-
-    // per-node var() references, resolved to their CURRENT values —
-    // the comparison basis for `state_modified_compare_vars` (node
-    // checksums cover the macro-expanded but var-UNRENDERED text, so a
-    // var-value change flips state:modified only under the flag,
-    // matching the reference's raw_code-based same_body + the 1.9
-    // behavior flag). Scanned over the EXPANDED text so var() calls a
-    // macro body introduces are captured too.
-    // group 2 (optional): the var() call's default literal — an UNSET
-    // var resolves to its default, so the recorded value must too (the
-    // reference compares resolved values, defaults included)
-    val varRefRe =
-      raw"""(?<![\w])var\(\s*['"]([^'"]+)['"](?:\s*\)|\s*,\s*([^()]*)\))?""".r
     val varsUsed = scala.collection.mutable.Map[String, Map[String, String]]()
-    def stripQuotes(s: String): String =
-      if (s.length >= 2 && ((s.head == '\'' && s.last == '\'') ||
-        (s.head == '"' && s.last == '"'))) s.substring(1, s.length - 1)
-      else s
-    def recordVarsUsed(uniqueId: String, expandedText: String): Unit = {
-      // cheap pre-check: most nodes reference no vars, and the regex
-      // scan over every node's expanded text is the dominant cost of a
-      // large parse — skip it outright when no var( appears
-      if (!expandedText.contains("var(")) return
-      val occ = varRefRe.findAllMatchIn(expandedText)
-        .map(m => (m.group(1), Option(m.group(2)).map(d => stripQuotes(d.trim)))).toSeq
-      if (occ.nonEmpty)
-        varsUsed(uniqueId) = occ.groupBy(_._1).map { case (n, os) =>
-          n -> vars.getOrElse(n, os.flatMap(_._2).headOption.getOrElse(""))
-        }
-    }
-
-    // per-node UNRENDERED config (reference unrendered_config,
-    // parser/base.py:377-388): yml-layer defaults plus the file's
-    // config() call scanned from the macro-expanded but var/control-
-    // flow-UNRENDERED text — the comparison basis for
-    // `state_modified_compare_more_unrendered_values`, under which a
-    // rendering-only difference (var/target drift changing which
-    // config renders) no longer reads as state:modified.
     val unrenderedCfgs = scala.collection.mutable.Map[String, Map[String, String]]()
-    def recordUnrenderedConfig(uniqueId: String, defaults: Map[String, Any],
-        expandedText: String): Unit = {
-      val fileCfg = Template.scan(expandedText).config
-      val merged = defaults ++ fileCfg
-      if (merged.nonEmpty)
-        unrenderedCfgs(uniqueId) = merged.map { case (k, v) => k -> String.valueOf(v) }
-    }
-
-    // ---- models (*.sql under model-paths) ----
-    for (f <- files("models", ".sql")) {
-      val orig = Files.readString(f)
-      val expanded = expandSql(orig)
-      val raw = ControlFlow.render(expanded, vars, vars.getOrElse("target", "dev"))
-      val scan = Template.scan(raw)
-      val mname = f.getFileName.toString.stripSuffix(".sql")
-      modelOrig(mname) = orig
-      val cfg = configFrom(modelDefaults ++ scan.config)
-      val deps =
-        scan.refs.map(r => refId(r, name)) ++
-        scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-      // checksum covers the EXPANDED (but var-unrendered) text: a
-      // macro-body edit changes every caller's compiled SQL and must
-      // register as state:modified (the reference tracks this via
-      // depends_on.macros), while a var-VALUE change only registers
-      // under state_modified_compare_vars (via the varsUsed facet)
-      val node = ModelNode(
-        name = mname, packageName = name, rawCode = raw, config = cfg,
-        dependsOn = deps, refs = scan.refs, sources = scan.sources,
-        path = dir.relativize(f).toString, checksum = FileHash.of(expanded))
-      nodes(node.uniqueId) = node
-      recordMacroDeps(node.uniqueId, orig)
-      recordVarsUsed(node.uniqueId, expanded)
-      recordUnrenderedConfig(node.uniqueId, modelDefaults, expanded)
+    val sqlParser = new SqlFileParser(dir, header, macroTable)
+    for (sub <- SqlDirs; f <- files(sub, ".sql")) {
+      val b = sqlParser.parse(f)
+      val uid = b.node.uniqueId
+      nodes(uid) = b.node
+      if (b.macroDeps.nonEmpty) macroDeps(uid) = b.macroDeps
+      if (b.varsUsed.nonEmpty) varsUsed(uid) = b.varsUsed
+      if (b.unrenderedConfig.nonEmpty) unrenderedCfgs(uid) = b.unrenderedConfig
     }
 
     // ---- python models (models/*.py; reference parser
@@ -300,42 +176,6 @@ object ProjectLoader {
       nodes(node.uniqueId) = node
     }
 
-    // ---- snapshots ----
-    for (f <- files("snapshots", ".sql")) {
-      val orig = Files.readString(f)
-      val expanded = expandSql(orig)
-      val raw = ControlFlow.render(expanded, vars, vars.getOrElse("target", "dev"))
-      val scan = Template.scan(raw)
-      val sname = f.getFileName.toString.stripSuffix(".sql")
-      val cfg = configFrom(scan.config).copy(materialized = Materialized.SnapshotMat)
-      val deps =
-        scan.refs.map(r => refId(r, name)) ++
-        scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-      val node = SnapshotNode(sname, name, raw, cfg, deps, scan.refs, scan.sources,
-        checksum = FileHash.of(expanded))
-      nodes(node.uniqueId) = node
-      recordMacroDeps(node.uniqueId, orig)
-      recordVarsUsed(node.uniqueId, expanded)
-      recordUnrenderedConfig(node.uniqueId, Map.empty, expanded)
-    }
-
-    // ---- analyses (compile-only; reference parser/analysis.py:9) ----
-    for (f <- files("analyses", ".sql") ++ files("analysis", ".sql")) {
-      val orig = Files.readString(f)
-      val expanded = expandSql(orig)
-      val raw = ControlFlow.render(expanded, vars, vars.getOrElse("target", "dev"))
-      val scan = Template.scan(raw)
-      val aname = f.getFileName.toString.stripSuffix(".sql")
-      val deps = scan.refs.map(r => refId(r, name)) ++
-        scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-      val node = AnalysisNode(aname, name, raw, configFrom(scan.config), deps,
-        scan.refs, scan.sources, checksum = FileHash.of(expanded),
-        path = dir.relativize(f).toString)
-      nodes(node.uniqueId) = node
-      recordMacroDeps(node.uniqueId, orig)
-      recordVarsUsed(node.uniqueId, expanded)
-    }
-
     // ---- seeds ----
     for (f <- files("seeds", ".csv")) {
       val sname = f.getFileName.toString.stripSuffix(".csv")
@@ -345,26 +185,8 @@ object ProjectLoader {
       nodes(node.uniqueId) = node
     }
 
-    // ---- singular tests (tests/*.sql; reference singular_test.py) ----
-    for (f <- files("tests", ".sql")) {
-      val orig = Files.readString(f)
-      val expanded = expandSql(orig)
-      val raw = ControlFlow.render(expanded, vars, vars.getOrElse("target", "dev"))
-      val scan = Template.scan(raw)
-      val tname = f.getFileName.toString.stripSuffix(".sql")
-      val cfg = configFrom(scan.config).copy(materialized = Materialized.View)
-      val deps = scan.refs.map(r => refId(r, name)) ++
-        scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-      val node = TestNode(tname, name, raw, cfg, deps, scan.refs,
-        checksum = FileHash.of(expanded), path = dir.relativize(f).toString)
-      nodes(node.uniqueId) = node
-      recordMacroDeps(node.uniqueId, orig)
-      recordVarsUsed(node.uniqueId, expanded)
-    }
-
     // ---- schema YAML: sources, model columns/tests, seeds, unit tests ----
-    for (f <- files("models", ".yml") ++ files("models", ".yaml") ++
-        files("seeds", ".yml") ++ files("snapshots", ".yml")) {
+    for (f <- schemaYmlFiles(dir)) {
       val doc = MiniYaml.parseMap(Files.readString(f))
       // sources
       doc.get("sources") match {
@@ -604,15 +426,18 @@ object ProjectLoader {
             val oVars = ovMap("vars")
             val oEnv = ovMap("env_vars")
             // macro/var overrides change parse-time expansion → bake a
-            // per-test copy of the model body from the original text
+            // per-test copy of the model body from its PRE-expansion
+            // file text
             val overrideCode: Option[String] =
               if (oMacros.isEmpty && oVars.isEmpty) None
-              else modelOrig.get(model).map { orig =>
-                val t2 = macroTable ++ oMacros.map { case (n, v) =>
-                  n -> Macros.MacroDef(n, Nil, v) }
-                val v2 = vars ++ oVars
-                ControlFlow.render(Macros.expand(orig, t2), v2,
-                  v2.getOrElse("target", "dev"))
+              else nodes.get(s"model.$name.$model").collect {
+                case mn: ModelNode if mn.path.endsWith(".sql") =>
+                  val orig = Files.readString(dir.resolve(mn.path))
+                  val t2 = macroTable ++ oMacros.map { case (n, v) =>
+                    n -> Macros.MacroDef(n, Nil, v) }
+                  val v2 = vars ++ oVars
+                  ControlFlow.render(Macros.expand(orig, t2), v2,
+                    v2.getOrElse("target", "dev"))
               }
             val node = UnitTestNode(uname, name, model,
               givens = givenFixtures.collect { case (in, Right(rows)) => in -> rows }.toMap,
@@ -693,7 +518,7 @@ object ProjectLoader {
 
   /** Schema-yml patch for one model entry: declared columns, contract,
     * governance, grants (reference schemas.py patch_node_properties).
-    * Shared by the full parse and [[reparseModelFile]] so both paths
+    * Shared by the full parse and [[reparseFile]] so both paths
     * produce identical nodes.
     */
   private def applyModelYmlEntry(mn: ModelNode, m: Map[String, Any]): ModelNode = {
@@ -744,113 +569,225 @@ object ProjectLoader {
           if (mn.config.persistDocs.nonEmpty) mn.config.persistDocs else ymlPersistDocs))
   }
 
-  /** Fine-grained partial re-parse of ONE changed root-project model
-    * .sql file into an already-loaded project (reference
-    * core/dbt/parser/partial.py:68 — the "schedule only changed files"
-    * half; [[PartialParse]] owns the eligibility gate that falls back
-    * to a full parse for files with cross-file effects). Rebuilds the
-    * node exactly as load0 would — macro expansion with the project's
-    * (unchanged) macro table, parse-time control flow, config merge,
-    * schema-yml patch re-application, macro-dependency closure — then
-    * re-resolves refs (resolveRefs is idempotent: already-resolved
-    * dependsOn ids pass through untouched).
+  /** The `dbt_project.yml` header every parse reads first: the project
+    * name, vars (cli vars override the file's), the `+` model config
+    * defaults (flat subset of the reference's config hierarchy,
+    * config.py merge rules) and the behavior flags (reference
+    * ProjectFlags legacy behaviors, core/dbt/contracts/project.py:
+    * 318-346 — the `flags:` block). `yml` is the whole parsed file,
+    * for the keys only a full parse reads (hooks, query-comment, ...).
     */
-  def reparseModelFile(
-      p: Project,
-      projectDir: String,
-      cliVars: Map[String, String],
-      rel: String): Project = {
-    val dir = Paths.get(projectDir)
+  private final case class Header(
+      yml: Map[String, Any],
+      name: String,
+      vars: Map[String, String],
+      modelDefaults: Map[String, Any],
+      flags: Map[String, String])
+
+  private def readHeader(dir: Path, cliVars: Map[String, String]): Header = {
     val projFile = dir.resolve("dbt_project.yml")
-    val proj: Map[String, Any] =
+    val yml: Map[String, Any] =
       if (Files.exists(projFile)) MiniYaml.parseMap(Files.readString(projFile))
       else Map("name" -> "graft")
-    val name = proj.getOrElse("name", "graft").toString
-    val projVars: Map[String, String] = proj.get("vars") match {
+    def strings(key: String): Map[String, String] = yml.get(key) match {
       case Some(m: Map[String @unchecked, Any @unchecked]) =>
         m.map { case (k, v) => k -> String.valueOf(v) }
       case _ => Map.empty
     }
-    val vars = projVars ++ cliVars
-    val modelDefaults: Map[String, Any] = proj.get("models") match {
+    val modelDefaults: Map[String, Any] = yml.get("models") match {
       case Some(m: Map[String @unchecked, Any @unchecked]) =>
         m.collect { case (k, v) if k.startsWith("+") => k.stripPrefix("+") -> v }
       case _ => Map.empty
     }
-    val macroTable = p.macros
-    val f = dir.resolve(rel)
-    val orig = Files.readString(f)
-    val raw = ControlFlow.render(Macros.expand(orig, macroTable), vars,
-      vars.getOrElse("target", "dev"))
-    val scan = Template.scan(raw)
-    val mname = f.getFileName.toString.stripSuffix(".sql")
-    val cfg = configFrom(modelDefaults ++ scan.config)
-    val deps =
-      scan.refs.map(r => refId(r, name)) ++
-      scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-    var node = ModelNode(
-      name = mname, packageName = name, rawCode = raw, config = cfg,
-      dependsOn = deps, refs = scan.refs, sources = scan.sources,
-      path = dir.relativize(f).toString, checksum = FileHash.of(raw))
-    // re-apply this model's schema-yml patches (yml files are unchanged
-    // under PartialParse's eligibility contract)
-    val ymlFiles = Seq("models", "seeds", "snapshots").flatMap { sub =>
-      val d = dir.resolve(sub)
-      if (!Files.exists(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(pp => (pp.toString.endsWith(".yml") || pp.toString.endsWith(".yaml")) &&
-          Files.isRegularFile(pp))
-        .toSeq.sortBy(_.toString)
-    }
-    for (yf <- ymlFiles) {
-      MiniYaml.parseMap(Files.readString(yf)).get("models") match {
-        case Some(ms: List[Any @unchecked]) =>
-          for (m0 <- ms) {
-            val m = m0.asInstanceOf[Map[String, Any]]
-            if (m("name").toString == mname) node = applyModelYmlEntry(node, m)
-          }
-        case _ =>
-      }
-    }
-    // macro-dependency closure for state:modified.macros (as in load0)
-    val macroCallRes: Map[String, Regex] =
-      macroTable.keys.map(k => k -> raw"(?<![\w])${Regex.quote(k)}\s*\(".r).toMap
-    def direct(text: String): Set[String] =
-      macroCallRes.collect { case (k, re) if re.findFirstIn(text).isDefined => k }.toSet
-    val directTable = macroTable.map { case (k, d) => k -> direct(d.body) }
-    def close(seen: Set[String]): Set[String] = {
-      val next = seen ++ seen.flatMap(directTable.getOrElse(_, Set.empty))
-      if (next == seen) seen else close(next)
-    }
-    val ms = direct(orig).flatMap(k => close(Set(k)))
-    val uid = node.uniqueId
-    val macroDeps2 =
-      if (ms.nonEmpty) p.manifest.macroDeps + (uid -> ms.toSeq.sorted)
-      else p.manifest.macroDeps - uid
-    resolveRefs(p.copy(manifest = p.manifest.copy(
-      nodes = p.manifest.nodes + (uid -> node),
-      macroDeps = macroDeps2)))
+    Header(yml, yml.getOrElse("name", "graft").toString, strings("vars") ++ cliVars,
+      modelDefaults, strings("flags"))
   }
 
-  /** Fine-grained re-parse dispatch (reference partial.py schedules
-    * changed files per file CLASS — models, tests, seeds, analyses each
-    * have their own handler): route a changed file to the matching
-    * single-file re-parser. [[PartialParse]] has already gated
-    * eligibility; anything unrecognized here falls back to the model
-    * path (which PartialParse only feeds model files).
+  /** Per-node macro dependencies (reference depends_on.macros,
+    * manifest.py build_macro_edges): given a macro table, the function
+    * from a node's PRE-expansion text to the macros it calls directly,
+    * transitively closed through macro bodies so an edit to a helper a
+    * macro calls still selects its users via state:modified.macros.
+    */
+  private def macroClosure(macroTable: Map[String, Macros.MacroDef]): String => Seq[String] = {
+    val callRes: Map[String, Regex] =
+      macroTable.keys.map(k => k -> raw"(?<![\w])${Regex.quote(k)}\s*\(".r).toMap
+    def direct(text: String): Set[String] =
+      callRes.collect { case (k, re) if re.findFirstIn(text).isDefined => k }.toSet
+    val directOf = macroTable.map { case (k, d) => k -> direct(d.body) }
+    def close(seen: Set[String]): Set[String] = {
+      val next = seen ++ seen.flatMap(directOf.getOrElse(_, Set.empty))
+      if (next == seen) seen else close(next)
+    }
+    val closed = macroTable.keys.map(k => k -> close(Set(k))).toMap
+    text => direct(text).flatMap(closed).toSeq.sorted
+  }
+
+  // var('name') / var('name', default): group 2 is the default literal
+  private val VarRefRe =
+    raw"""(?<![\w])var\(\s*['"]([^'"]+)['"](?:\s*\)|\s*,\s*([^()]*)\))?""".r
+
+  /** Per-node var() references, resolved to their CURRENT values — the
+    * comparison basis for `state_modified_compare_vars` (node checksums
+    * cover the macro-expanded but var-UNRENDERED text, so a var-value
+    * change flips state:modified only under the flag, matching the
+    * reference's raw_code-based same_body + the 1.9 behavior flag).
+    * Scanned over the EXPANDED text so var() calls a macro body
+    * introduces are captured too. An UNSET var resolves to its
+    * default, so the recorded value must too (the reference compares
+    * resolved values, defaults included).
+    */
+  private def varsUsedIn(expanded: String, vars: Map[String, String]): Map[String, String] = {
+    def stripQuotes(s: String): String =
+      if (s.length >= 2 && ((s.head == '\'' && s.last == '\'') ||
+        (s.head == '"' && s.last == '"'))) s.substring(1, s.length - 1)
+      else s
+    // cheap pre-check: most nodes reference no vars, and the regex scan
+    // over every node's expanded text is the dominant cost of a large
+    // parse — skip it outright when no var( appears
+    if (!expanded.contains("var(")) Map.empty
+    else VarRefRe.findAllMatchIn(expanded)
+      .map(m => (m.group(1), Option(m.group(2)).map(d => stripQuotes(d.trim)))).toSeq
+      .groupBy(_._1).map { case (n, os) =>
+        n -> vars.getOrElse(n, os.flatMap(_._2).headOption.getOrElse(""))
+      }
+  }
+
+  /** The directories whose `.sql` files [[SqlFileParser]] turns into
+    * nodes: models, snapshots, analyses (either spelling; reference
+    * parser/analysis.py:9) and singular tests (reference
+    * singular_test.py).
+    */
+  private val SqlDirs = Seq("models", "snapshots", "analyses", "analysis", "tests")
+
+  /** One parsed SQL file: its node and the node's entries in the
+    * manifest's per-node maps (`macroDeps`, `varsUsed`,
+    * `unrenderedConfigs`); an empty value means no entry.
+    */
+  private final case class SqlFile(
+      node: Node,
+      macroDeps: Seq[String],
+      varsUsed: Map[String, String],
+      unrenderedConfig: Map[String, String])
+
+  /** The one builder of SQL-file nodes, for a full parse and for a
+    * partial re-parse alike (reference partial.py hands changed files
+    * back to the same per-type parsers a full parse runs). The file's
+    * first directory under the project picks the node type (see
+    * [[SqlDirs]]).
+    */
+  private final class SqlFileParser(
+      dir: Path, header: Header, macroTable: Map[String, Macros.MacroDef]) {
+    private val macroDepsOf = macroClosure(macroTable)
+    import header.{name, vars}
+
+    def parse(f: Path): SqlFile = {
+      val rel = dir.relativize(f)
+      val orig = Files.readString(f)
+      // macro expansion, then parse-time control flow ({% if %}/
+      // {% for %}; reference get_rendered — refs inside untaken branches
+      // never reach the DAG, exactly like rendered Jinja)
+      val expanded = Macros.expand(orig, macroTable)
+      val raw = ControlFlow.render(expanded, vars, vars.getOrElse("target", "dev"))
+      val scan = Template.scan(raw)
+      val base = f.getFileName.toString.stripSuffix(".sql")
+      val deps =
+        scan.refs.map(r => refId(r, name)) ++
+        scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
+      // checksum covers the EXPANDED (but var-unrendered) text: a
+      // macro-body edit changes every caller's compiled SQL and must
+      // register as state:modified (the reference tracks this via
+      // depends_on.macros), while a var-VALUE change only registers
+      // under state_modified_compare_vars (via the varsUsed facet)
+      val checksum = FileHash.of(expanded)
+      // node + its UNRENDERED config defaults (reference
+      // unrendered_config, parser/base.py:377-388), where the type has
+      // them: yml-layer defaults plus the file's config() call scanned
+      // from the macro-expanded but var/control-flow-UNRENDERED text —
+      // the comparison basis for
+      // `state_modified_compare_more_unrendered_values`
+      val (node, unrenderedDefaults): (Node, Option[Map[String, Any]]) =
+        rel.getName(0).toString match {
+          case "models" =>
+            (ModelNode(
+              name = base, packageName = name, rawCode = raw,
+              config = configFrom(header.modelDefaults ++ scan.config),
+              dependsOn = deps, refs = scan.refs, sources = scan.sources,
+              path = rel.toString, checksum = checksum),
+              Some(header.modelDefaults))
+          case "snapshots" =>
+            (SnapshotNode(base, name, raw,
+              configFrom(scan.config).copy(materialized = Materialized.SnapshotMat),
+              deps, scan.refs, scan.sources, checksum = checksum),
+              Some(Map.empty))
+          case "analyses" | "analysis" =>
+            (AnalysisNode(base, name, raw, configFrom(scan.config), deps,
+              scan.refs, scan.sources, checksum = checksum, path = rel.toString),
+              None)
+          case "tests" =>
+            (TestNode(base, name, raw,
+              configFrom(scan.config).copy(materialized = Materialized.View),
+              deps, scan.refs, checksum = checksum, path = rel.toString),
+              None)
+          case _ => throw new IllegalArgumentException(s"not a SQL node file: $rel")
+        }
+      SqlFile(node, macroDepsOf(orig), varsUsedIn(expanded, vars),
+        unrenderedDefaults.fold(Map.empty[String, String]) { defaults =>
+          (defaults ++ Template.scan(expanded).config).map { case (k, v) => k -> String.valueOf(v) }
+        })
+    }
+  }
+
+  /** The schema yml files a parse reads, in application order. */
+  private def schemaYmlFiles(dir: Path): Seq[Path] =
+    filesUnder(dir.resolve("models"), ".yml") ++ filesUnder(dir.resolve("models"), ".yaml") ++
+      filesUnder(dir.resolve("seeds"), ".yml") ++ filesUnder(dir.resolve("snapshots"), ".yml")
+
+  /** Fine-grained re-parse of ONE changed root-project file into an
+    * already-loaded project (reference core/dbt/parser/partial.py:68 —
+    * the "schedule only changed files" half; [[PartialParse]] owns the
+    * eligibility gate that falls back to a full parse for files with
+    * cross-file effects). A seed .csv refreshes its checksum; a SQL
+    * file goes through the full parse's [[SqlFileParser]] with the
+    * project's (unchanged) macro table, a model gets its schema-yml
+    * patches re-applied, and the node's entries in the four per-node
+    * manifest maps are replaced. Refs are then re-resolved
+    * (resolveRefs is idempotent: resolved dependsOn ids pass through).
     */
   def reparseFile(
       p: Project,
       projectDir: String,
       cliVars: Map[String, String],
-      rel: String): Project =
-    if (rel.startsWith("seeds/") && rel.endsWith(".csv"))
-      reparseSeedFile(p, projectDir, rel)
-    else if (rel.startsWith("tests/") && rel.endsWith(".sql"))
-      reparseAuxSqlFile(p, projectDir, cliVars, rel, isTest = true)
-    else if ((rel.startsWith("analyses/") || rel.startsWith("analysis/")) && rel.endsWith(".sql"))
-      reparseAuxSqlFile(p, projectDir, cliVars, rel, isTest = false)
-    else reparseModelFile(p, projectDir, cliVars, rel)
+      rel: String): Project = {
+    val dir = Paths.get(projectDir)
+    if (rel.startsWith("seeds/") && rel.endsWith(".csv")) reparseSeedFile(p, dir, rel)
+    else {
+      val b = new SqlFileParser(dir, readHeader(dir, cliVars), p.macros).parse(dir.resolve(rel))
+      // schema-yml patches (yml files are unchanged under PartialParse's
+      // eligibility contract)
+      val node = b.node match {
+        case mn: ModelNode =>
+          schemaYmlFiles(dir).foldLeft(mn) { (n, yf) =>
+            MiniYaml.parseMap(Files.readString(yf)).get("models") match {
+              case Some(ms: List[Any @unchecked]) =>
+                ms.map(_.asInstanceOf[Map[String, Any]])
+                  .filter(_("name").toString == mn.name).foldLeft(n)(applyModelYmlEntry)
+              case _ => n
+            }
+          }
+        case n => n
+      }
+      val uid = node.uniqueId
+      def entry[V <: Iterable[_]](m: Map[String, V], v: V): Map[String, V] =
+        if (v.nonEmpty) m + (uid -> v) else m - uid
+      val m = p.manifest
+      resolveRefs(p.copy(manifest = m.copy(
+        nodes = m.nodes + (uid -> node),
+        macroDeps = entry(m.macroDeps, b.macroDeps),
+        varsUsed = entry(m.varsUsed, b.varsUsed),
+        unrenderedConfigs = entry(m.unrenderedConfigs, b.unrenderedConfig))))
+    }
+  }
 
   /** Seed .csv content edit: the node's identity/config come from the
     * file NAME and schema yml (both unchanged under the eligibility
@@ -858,8 +795,8 @@ object ProjectLoader {
     * `state:modified` misses seed data changes (the reference hashes
     * seed file content into the manifest the same way).
     */
-  private def reparseSeedFile(p: Project, projectDir: String, rel: String): Project = {
-    val f = Paths.get(projectDir).resolve(rel)
+  private def reparseSeedFile(p: Project, dir: Path, rel: String): Project = {
+    val f = dir.resolve(rel)
     val sname = f.getFileName.toString.stripSuffix(".csv")
     val uid = s"seed.${p.name}.$sname"
     p.manifest.nodes.get(uid) match {
@@ -868,67 +805,6 @@ object ProjectLoader {
           (uid -> n.copy(checksum = FileHash.of(Files.readString(f))))))
       case _ => throw new IllegalStateException(s"no seed node for $rel")
     }
-  }
-
-  /** Singular test / analysis .sql content edit: re-render with the
-    * project's (unchanged) macro table, re-scan refs (edits may rewire
-    * the DAG — resolveRefs re-resolves), rebuild the node exactly as
-    * load0 would, and refresh the macro-dependency closure.
-    */
-  private def reparseAuxSqlFile(
-      p: Project,
-      projectDir: String,
-      cliVars: Map[String, String],
-      rel: String,
-      isTest: Boolean): Project = {
-    val dir = Paths.get(projectDir)
-    val projFile = dir.resolve("dbt_project.yml")
-    val proj: Map[String, Any] =
-      if (Files.exists(projFile)) MiniYaml.parseMap(Files.readString(projFile))
-      else Map("name" -> "graft")
-    val name = proj.getOrElse("name", "graft").toString
-    val projVars: Map[String, String] = proj.get("vars") match {
-      case Some(m: Map[String @unchecked, Any @unchecked]) =>
-        m.map { case (k, v) => k -> String.valueOf(v) }
-      case _ => Map.empty
-    }
-    val vars = projVars ++ cliVars
-    val macroTable = p.macros
-    val f = dir.resolve(rel)
-    val orig = Files.readString(f)
-    val raw = ControlFlow.render(Macros.expand(orig, macroTable), vars,
-      vars.getOrElse("target", "dev"))
-    val scan = Template.scan(raw)
-    val bname = f.getFileName.toString.stripSuffix(".sql")
-    val deps = scan.refs.map(r => refId(r, name)) ++
-      scan.sources.map { case (s, t) => s"source.$name.$s.$t" }
-    val node: graft.core.Node =
-      if (isTest)
-        graft.core.TestNode(bname, name, raw,
-          configFrom(scan.config).copy(materialized = Materialized.View),
-          deps, scan.refs, checksum = FileHash.of(raw), path = dir.relativize(f).toString)
-      else
-        graft.core.AnalysisNode(bname, name, raw, configFrom(scan.config),
-          deps, scan.refs, scan.sources, checksum = FileHash.of(raw),
-          path = dir.relativize(f).toString)
-    // macro-dependency closure, as in load0/reparseModelFile
-    val macroCallRes: Map[String, Regex] =
-      macroTable.keys.map(k => k -> raw"(?<![\w])${Regex.quote(k)}\s*\(".r).toMap
-    def direct(text: String): Set[String] =
-      macroCallRes.collect { case (k, re) if re.findFirstIn(text).isDefined => k }.toSet
-    val directTable = macroTable.map { case (k, d) => k -> direct(d.body) }
-    def close(seen: Set[String]): Set[String] = {
-      val next = seen ++ seen.flatMap(directTable.getOrElse(_, Set.empty))
-      if (next == seen) seen else close(next)
-    }
-    val ms = direct(orig).flatMap(k => close(Set(k)))
-    val uid = node.uniqueId
-    val macroDeps2 =
-      if (ms.nonEmpty) p.manifest.macroDeps + (uid -> ms.toSeq.sorted)
-      else p.manifest.macroDeps - uid
-    resolveRefs(p.copy(manifest = p.manifest.copy(
-      nodes = p.manifest.nodes + (uid -> node),
-      macroDeps = macroDeps2)))
   }
 
   /** packages.yml `- local:` entries resolved against `dir` — shared

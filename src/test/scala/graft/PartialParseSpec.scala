@@ -8,31 +8,35 @@ import graft.parser.{PartialParse, ProjectLoader}
 
 class PartialParseSpec extends AnyFunSuite {
   test("cache hit when nothing changed; invalidated on file edit and var change") {
-    val dir = Files.createTempDirectory("pp_proj")
-    val target = dir.resolve("target").toString
-    Files.createDirectories(dir.resolve("models"))
-    Files.writeString(dir.resolve("dbt_project.yml"), "name: pp\n")
-    Files.writeString(dir.resolve("models/m1.sql"), "select 1 as id\n")
+    // the second project lies under a `warehouse` directory: output
+    // directories are skipped by their path INSIDE the project only
+    for (dir <- Seq(Files.createTempDirectory("pp_proj"),
+        Files.createDirectories(Files.createTempDirectory("pp_under").resolve("warehouse/proj")))) {
+      val target = dir.resolve("target").toString
+      Files.createDirectories(dir.resolve("models"))
+      Files.writeString(dir.resolve("dbt_project.yml"), "name: pp\n")
+      Files.writeString(dir.resolve("models/m1.sql"), "select 1 as id\n")
 
-    val (p1, hit1) = PartialParse.loadCached(dir.toString, Map.empty, target)
-    assert(!hit1)
-    assert(p1.manifest.nodes.contains("model.pp.m1"))
+      val (p1, hit1) = PartialParse.loadCached(dir.toString, Map.empty, target)
+      assert(!hit1)
+      assert(p1.manifest.nodes.contains("model.pp.m1"))
 
-    val (p2, hit2) = PartialParse.loadCached(dir.toString, Map.empty, target)
-    assert(hit2)
-    assert(p2.manifest.nodes.keySet == p1.manifest.nodes.keySet)
-    assert(p2.manifest.nodes("model.pp.m1").checksum == p1.manifest.nodes("model.pp.m1").checksum)
+      val (p2, hit2) = PartialParse.loadCached(dir.toString, Map.empty, target)
+      assert(hit2)
+      assert(p2.manifest.nodes.keySet == p1.manifest.nodes.keySet)
+      assert(p2.manifest.nodes("model.pp.m1").checksum == p1.manifest.nodes("model.pp.m1").checksum)
 
-    // a model-body edit is served by the FINE-GRAINED path: the cache is
-    // still used, only the changed file is re-parsed, checksum updates
-    Files.writeString(dir.resolve("models/m1.sql"), "select 2 as id\n")
-    val (p3, out3) = PartialParse.loadCachedDetailed(dir.toString, Map.empty, target)
-    assert(out3 == PartialParse.Partial(Seq("models/m1.sql")))
-    assert(p3.manifest.nodes("model.pp.m1").checksum != p1.manifest.nodes("model.pp.m1").checksum)
+      // a model-body edit is served by the FINE-GRAINED path: the cache is
+      // still used, only the changed file is re-parsed, checksum updates
+      Files.writeString(dir.resolve("models/m1.sql"), "select 2 as id\n")
+      val (p3, out3) = PartialParse.loadCachedDetailed(dir.toString, Map.empty, target)
+      assert(out3 == PartialParse.Partial(Seq("models/m1.sql")))
+      assert(p3.manifest.nodes("model.pp.m1").checksum != p1.manifest.nodes("model.pp.m1").checksum)
 
-    // var change invalidates fully
-    val (_, hit4) = PartialParse.loadCached(dir.toString, Map("x" -> "1"), target)
-    assert(!hit4)
+      // var change invalidates fully
+      val (_, hit4) = PartialParse.loadCached(dir.toString, Map("x" -> "1"), target)
+      assert(!hit4)
+    }
   }
 
   test("fine-grained re-parse equals a from-scratch full parse") {
@@ -40,12 +44,15 @@ class PartialParseSpec extends AnyFunSuite {
     val target = dir.resolve("target").toString
     Files.createDirectories(dir.resolve("models"))
     Files.createDirectories(dir.resolve("macros"))
-    Files.writeString(dir.resolve("dbt_project.yml"), "name: pp\n")
+    Files.createDirectories(dir.resolve("tests"))
+    Files.writeString(dir.resolve("dbt_project.yml"), "name: pp\nvars:\n  lim: 5\n")
     Files.writeString(dir.resolve("macros/lim.sql"),
       "{% macro lim(n) %}limit {{ n }}{% endmacro %}\n")
     Files.writeString(dir.resolve("models/base.sql"), "select 1 as id\n")
     Files.writeString(dir.resolve("models/top.sql"),
       "select * from {{ ref('base') }} {{ lim(3) }}\n")
+    Files.writeString(dir.resolve("tests/t1.sql"),
+      "select * from {{ ref('top') }} where id < 0\n")
     Files.writeString(dir.resolve("models/schema.yml"),
       """models:
         |  - name: top
@@ -66,8 +73,7 @@ class PartialParseSpec extends AnyFunSuite {
 
     // equivalence: a from-scratch full parse of the same tree
     val full = ProjectLoader.resolveRefs(ProjectLoader.load(dir.toString, Map.empty))
-    assert(pp.manifest.nodes == full.manifest.nodes)
-    assert(pp.manifest.macroDeps == full.manifest.macroDeps)
+    assert(pp.manifest == full.manifest)
     // the macro expanded with the new arg, the yml patch re-applied,
     // and the ref resolved
     val top = pp.manifest.nodes("model.pp.top").asInstanceOf[graft.core.ModelNode]
@@ -78,6 +84,25 @@ class PartialParseSpec extends AnyFunSuite {
     // untouched nodes are reused from the cache verbatim
     assert(pp.manifest.nodes("model.pp.base").checksum ==
       full.manifest.nodes("model.pp.base").checksum)
+
+    // edits whose rendered text differs from the expanded text, with a
+    // config() call and a var(): checksum, varsUsed and
+    // unrenderedConfigs must match a full parse too
+    Files.writeString(dir.resolve("models/top.sql"),
+      """{{ config(materialized='table') }}
+        |select id from {{ ref('base') }}
+        |{% if target.name == 'dev' %}where id < {{ var('lim') }}{% endif %}
+        |{{ lim(7) }}
+        |""".stripMargin)
+    Files.writeString(dir.resolve("tests/t1.sql"),
+      "{% set n = 0 %}select * from {{ ref('top') }} where id < {{ n }}\n")
+    val (pp2, out3) = PartialParse.loadCachedDetailed(dir.toString, Map.empty, target)
+    assert(out3 == PartialParse.Partial(Seq("models/top.sql", "tests/t1.sql")))
+    val full2 = ProjectLoader.resolveRefs(ProjectLoader.load(dir.toString, Map.empty))
+    assert(pp2.manifest == full2.manifest)
+    assert(pp2.manifest.varsUsed.get("model.pp.top") == Some(Map("lim" -> "5")))
+    assert(pp2.manifest.unrenderedConfigs.get("model.pp.top") ==
+      Some(Map("materialized" -> "table")))
   }
 
   test("cross-file-effect changes fall back to a full parse") {
@@ -159,8 +184,7 @@ class PartialParseSpec extends AnyFunSuite {
 
     // all three patched states equal a from-scratch full parse
     val full = ProjectLoader.resolveRefs(ProjectLoader.load(dir.toString, Map.empty))
-    assert(p3.manifest.nodes == full.manifest.nodes)
-    assert(p3.manifest.macroDeps == full.manifest.macroDeps)
+    assert(p3.manifest == full.manifest)
 
     // unit-test FIXTURE edits have cross-file effects → full parse
     Files.writeString(dir.resolve("tests/fixtures/fx.csv"), "id\n1\n2\n")
