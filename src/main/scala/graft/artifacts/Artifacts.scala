@@ -427,31 +427,14 @@ object Artifacts {
   }
 
   /** catalog.json (docs generate; reference core/dbt/task/docs/
-    * generate.py:59-122) — column name/type/stats per materialized
-    * relation, from the Spark schema.
+    * generate.py:59-122): per relation, column name/type from the Spark
+    * schema, the persisted docs (persist_docs → relation comment into
+    * metadata.comment, column comments into columns[].comment) and the
+    * node's `stats` map — store health (versions retained, live vs pool
+    * files/bytes, delta backlog), the field adapters fill from warehouse
+    * metadata; the store IS this engine's warehouse.
     */
-  def writeCatalog(targetDir: String, relations: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit =
-    writeCatalogWithComments(targetDir,
-      relations.map { case (n, df) => (n, df, None, Map.empty[String, String]) })
-
-  /** Catalog with persisted docs (reference persist_docs → catalog
-    * comment fields): relation comment into metadata.comment, column
-    * comments into columns[].comment — the fields a catalog browser
-    * renders.
-    */
-  def writeCatalogWithComments(targetDir: String,
-      relations: Seq[(String, org.apache.spark.sql.DataFrame, Option[String], Map[String, String])]): Unit =
-    writeCatalogWithStats(targetDir,
-      relations.map { case (n, df, rc, cc) => (n, df, rc, cc, Map.empty[String, Any]) })
-
-  /** Catalog with per-relation STORE HEALTH in the node's `stats` map
-    * (the dbt catalog field adapters fill from warehouse metadata):
-    * versions retained, live vs pool files/bytes, delta backlog — the
-    * visibility OPTIMIZE/VACUUM decisions need (reference task/docs/
-    * generate.py:59-122 populates stats from the adapter's catalog
-    * query; the store IS this engine's warehouse).
-    */
-  def writeCatalogWithStats(targetDir: String,
+  def writeCatalog(targetDir: String,
       relations: Seq[(String, org.apache.spark.sql.DataFrame, Option[String],
         Map[String, String], Map[String, Any])]): Unit = {
     val doc = Map(

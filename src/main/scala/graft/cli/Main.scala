@@ -479,7 +479,7 @@ object Main {
             // OPTIMIZE/VACUUM visibility a warehouse catalog carries
             (st.sqlName(n), st.read(n), relC, colC, st.health(n))
           })
-        Artifacts.writeCatalogWithStats(targetDir, rels)
+        Artifacts.writeCatalog(targetDir, rels)
         Artifacts.writeManifest(targetDir, project.manifest)
         println(s"catalog with ${rels.size} relations -> $targetDir/catalog.json")
         0

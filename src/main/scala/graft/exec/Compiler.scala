@@ -23,15 +23,11 @@ final class Compiler(
     eventTimeFilter: Option[(java.time.Instant, java.time.Instant)] = None,
     /** --empty: refs compile to LIMIT 0 (reference providers.py:234). */
     empty: Boolean = false,
-    /** defer: ref targets missing locally resolve into this store's
-      * schema (reference RuntimeRefResolver, providers.py:529-647).
-      */
-    deferResolver: Option[String => Option[String]] = None,
-    localExists: String => Boolean = _ => true,
-    /** Schema-aware relation naming (node, identifier) → SQL name; when
-      * set it REPLACES the localExists/deferResolver logic (the Runner
-      * wires per-node-schema stores through it; reference
-      * generate_schema_name, components.py:133).
+    /** Schema-aware relation naming (node, identifier) → SQL name (the
+      * Runner wires per-node-schema stores and defer through it;
+      * reference generate_schema_name, components.py:133, and
+      * RuntimeRefResolver, providers.py:529-647). None ⇒ a ref resolves
+      * to its bare identifier.
       */
     relResolver: Option[(Node, String) => String] = None,
     /** Schema-aware `{{ this }}` name (never deferred). */
@@ -89,13 +85,7 @@ final class Compiler(
           cn
         case other =>
           val ident = other.config.alias.getOrElse(other.name)
-          val resolved = relResolver match {
-            case Some(f) => f(other, ident)
-            case None =>
-              if (localExists(ident)) ident
-              else deferResolver.flatMap(_(ident)).getOrElse(ident)
-          }
-          wrap(resolved, other.config.eventTime)
+          wrap(relResolver.fold(ident)(_(other, ident)), other.config.eventTime)
       }
     }
 

@@ -278,9 +278,8 @@ final class RelationStore(
     * writer still holds its marker is a commit in flight (it may yet be
     * withdrawn on a verification conflict), so readers never resolve
     * it; [[finalizeCommit]] deleting the marker is the publish step.
-    * The `_current` pointer file survives as a legacy floor:
-    * pre-manifest stores have no manifests at all, and their pointer
-    * names the committed legacy version.
+    * The `_current` pointer names a committed version and is the floor
+    * of the search (see [[pointerFloor]]).
     */
   private def currentVersion(name: String): Option[Int] = {
     // POINTER FLOOR: finalizeCommit atomically rewrites the pointer at
@@ -298,20 +297,26 @@ final class RelationStore(
     // committed version. The RAW head used by commit verification
     // ([[rawHeadVersion]]) keeps its own full view for the same
     // reason — linearizability cannot tolerate a missed manifest.
-    val legacy = scala.util.Try(readStr(pointer(name)).trim.toInt).toOption
-    val floor = legacy.getOrElse(-1)
+    val floor = pointerFloor(name)
     val published = physicalVersionDirs(name)
-      .filter(v => v > floor && hasManifest(name, v) && !isReserved(name, v))
-    (published ++ legacy).maxOption
+      .filter(v => v > floor.getOrElse(-1) && hasManifest(name, v) && !isReserved(name, v))
+    (published ++ floor).maxOption
   }
+
+  /** The version the `_current` pointer names: [[finalizeCommit]]
+    * rewrites it at every commit, so it is a committed version and
+    * every head lies at or above it. It is also the file [[list]] finds
+    * tables by.
+    */
+  private def pointerFloor(name: String): Option[Int] =
+    scala.util.Try(readStr(pointer(name)).trim.toInt).toOption
 
   /** The RAW head: highest manifest regardless of markers — what commit
     * VERIFICATION orders against (an in-flight competitor's manifest
     * above ours means our commit would be invisible history).
     */
   private def rawHeadVersion(name: String): Option[Int] =
-    (physicalVersionDirs(name).filter(hasManifest(name, _)) ++
-      scala.util.Try(readStr(pointer(name)).trim.toInt).toOption).maxOption
+    (physicalVersionDirs(name).filter(hasManifest(name, _)) ++ pointerFloor(name)).maxOption
 
   def currentPath(name: String): Option[String] =
     currentVersion(name).map(v => verDir(name, v).toString)
@@ -342,9 +347,9 @@ final class RelationStore(
   private def isReserved(name: String, v: Int): Boolean = fsExists(rsvFile(name, v))
 
   /** Reserve the first free slot ≥ `from`. A slot is free when it has
-    * neither a committed manifest nor a reservation marker (a
-    * marker-less torn dir from a pre-OCC crash is claimable — its junk
-    * is cleaned here). Returns the owned version number.
+    * no manifest, no reservation marker and no `_gutted` tombstone (a
+    * leftover dir without any of the three is junk, cleaned here).
+    * Returns the owned version number.
     */
   private def reserveVersion(name: String, from: Int): Int = {
     // CAPABILITY GATE: concurrent-writer mode is only safe when the
@@ -380,7 +385,7 @@ final class RelationStore(
         else commitCoord.reserve(rsv, java.util.UUID.randomUUID().toString)
       }
       if (won) {
-        deleteRec(verDir(name, n)) // claimable pre-OCC junk
+        deleteRec(verDir(name, n)) // claimable junk
         return n
       }
       n += 1
@@ -488,10 +493,7 @@ final class RelationStore(
       build: (Int, Option[Int]) => Option[(String, Seq[String], Seq[MEntry])]): Option[Int] = {
     def committedBelow(n: Int): Option[Int] =
       physicalVersionDirs(name).filter(v => v < n && hasManifest(name, v))
-        .maxOption orElse {
-          val legacy = scala.util.Try(readStr(pointer(name)).trim.toInt).toOption
-          legacy.filter(_ < n)
-        }
+        .maxOption orElse pointerFloor(name).filter(_ < n)
     var n = firstSlot
     var priorSlots = List.empty[Int] // shadowed slots whose data the final manifest references
     var attempts = 0
@@ -519,8 +521,15 @@ final class RelationStore(
         n = m
       } else {
         val base = committedBelow(n)
-        build(n, base) match {
-          case None =>
+        // a base expiring under a concurrent retention pass reads as
+        // vanished (FileNotFoundException): the next attempt re-resolves
+        // it, like any other conflict
+        val built =
+          try Some(build(n, base))
+          catch { case e: Exception if attempts < 64 && isStaleReadRace(e) => None }
+        built match {
+          case None => ()
+          case Some(None) =>
             // abort. Slots that ever published a manifest — every prior
             // slot, and the current one after a failed verify — may be
             // REFERENCED: a competitor could have carried their entries
@@ -530,7 +539,7 @@ final class RelationStore(
             // committed competitor head ([[demoteSlot]]).
             (n :: priorSlots).foreach(demoteSlot(name, _))
             return None
-          case Some((layout, pby, entries)) =>
+          case Some(Some((layout, pby, entries))) =>
             writeManifestCommit(name, n, layout, pby, entries, base)
             // linearizability check (RAW view): we are the head AND
             // nobody slipped a commit in between our base and our slot —
@@ -563,8 +572,8 @@ final class RelationStore(
       s"commit contention on $schema.$name did not settle in $attempts attempts")
   }
 
-  /** Post-commit bookkeeping: legacy pointer floor (discovery + the
-    * pre-manifest fallback), retention GC, session re-register.
+  /** Post-commit bookkeeping: the `_current` pointer (head-resolution
+    * floor and table discovery), retention GC, session re-register.
     */
   private def finalizeCommit(name: String, n: Int): Unit = {
     commitCoord.release(rsvFile(name, n)) // committed: the slot is no longer in-flight
@@ -584,86 +593,90 @@ final class RelationStore(
     def leafKey: String = ManifestFileIndex.leafKeyOf(rel)
   }
 
-  /** A committed version's manifest. `layout`: "files" (flat),
-    * "partitioned" (entries carry `col=value` leaf keys in their
-    * paths), or "bucketed" (directory-self-contained; no entries
-    * cross-reference into it).
+  /** A committed version's manifest ([[writeManifestCommit]] writes
+    * every field). `layout`: "files" (flat), "partitioned" (entries
+    * carry `col=value` leaf keys in their paths), or "bucketed"
+    * (directory-self-contained, no entries; reads scan the dir).
     */
   private[exec] final case class VersionManifest(
       layout: String, partitionBy: Seq[String], entries: Seq[MEntry],
-      /** The committed version this manifest was built against:
-        * Some(-1) for a first commit (no base), Some(n) otherwise, None
-        * for a pre-base manifest — whose orphans are never adopted,
-        * conservatively.
+      /** The committed version this manifest was built against: -1 for
+        * a first commit, what crash adoption checks against the head.
         */
-      baseVersion: Option[Int] = None,
-      /** Commit wall-clock (epoch ms); None for pre-ts manifests, which
-        * fall back to the manifest file's mtime.
-        */
-      commitTs: Option[Long] = None)
+      baseVersion: Int,
+      /** Commit wall-clock (epoch ms). */
+      commitTs: Long)
 
   private def manifestFile(name: String, v: Int): HPath =
     new HPath(verDir(name, v), "_manifest.json")
 
   private def hasManifest(name: String, v: Int): Boolean = fsExists(manifestFile(name, v))
 
-  /** Whether version dir `v` reads as a COMMITTED version: a manifest
-    * commit, or a LEGACY pre-manifest directory (data, no manifest, no
-    * `_gutted` tombstone, no reservation marker). A gutted dir —
-    * manifest expired, files kept only because newer manifests
-    * reference them — is a data pool, not a version; a RESERVED dir is
-    * an in-flight (or shadowed/crashed) write, never a version.
+  /** Whether version dir `v` is a COMMITTED version: manifest present,
+    * reservation marker gone. A gutted dir (manifest expired, files kept
+    * only because newer manifests reference them) is a data pool; a
+    * RESERVED dir is an in-flight (or shadowed/crashed) write.
     */
   private def isCommitted(name: String, v: Int): Boolean =
-    (hasManifest(name, v) && !isReserved(name, v)) ||
-      (!isReserved(name, v) &&
-        !fsExists(new HPath(verDir(name, v), "_gutted")) &&
-        dataFilesUnder(verDir(name, v)).nonEmpty)
+    hasManifest(name, v) && !isReserved(name, v)
 
+  /** Version `v`'s manifest; None when it is absent (never written, or
+    * swept by a retention pass — exists+read would be TOCTOU).
+    */
   private def manifestOf(name: String, v: Int): Option[VersionManifest] =
-    // exists+read is TOCTOU under a concurrent retention pass: a
-    // manifest swept between the calls reads as the expired version it
-    // just became
-    scala.util.Try(readStr(manifestFile(name, v))).toOption.flatMap(parseManifest(name, v, _))
+    readStrIfExists(manifestFile(name, v)).map(parseManifest(name, v, _))
 
-  private def parseManifest(name: String, v: Int, raw: String): Option[VersionManifest] =
-    graft.artifacts.Json.parse(raw) match {
-      case m: Map[String @unchecked, Any @unchecked] =>
-        val layout = m.getOrElse("layout", "files").toString
-        val files = m.get("files") match {
-          case Some(s: Seq[Any @unchecked]) => s.map(String.valueOf(_))
-          case _ => Nil
-        }
-        val sizes = m.get("sizes") match {
-          case Some(s: Seq[Any @unchecked]) => s.map(x => String.valueOf(x).toDouble.toLong)
-          case _ => files.map(_ => -1L) // pre-size manifests: stat on demand
-        }
-        val pby = m.get("partition_by") match {
-          case Some(s: Seq[Any @unchecked]) => s.map(String.valueOf(_))
-          case _ => Nil
-        }
-        // per-file stats re-type against the version's stored schema;
-        // pre-stats manifests (or a missing schema file) read as
-        // stats-less entries — never skipped, always correct
-        val stats: Seq[Option[FileStats]] = m.get("stats") match {
-          case Some(s: Seq[Any @unchecked]) if s.nonEmpty =>
-            val schemaFile = new HPath(verDir(name, v), "_graft_schema.json")
-            if (!fsExists(schemaFile)) files.map(_ => None)
-            else {
-              val st = org.apache.spark.sql.types.DataType
-                .fromJson(readStr(schemaFile)).asInstanceOf[StructType]
-              s.map(x => if (x == null) None else FileStats.fromJsonValue(x, st))
-            }
-          case _ => files.map(_ => None)
-        }
-        Some(VersionManifest(layout, pby,
-          files.lazyZip(sizes).lazyZip(stats).map {
-            case (f, sz, fst) => MEntry(f, sz, fst)
-          }.toSeq,
-          m.get("base").map(x => String.valueOf(x).toDouble.toInt),
-          m.get("ts").map(x => String.valueOf(x).toDouble.toLong)))
-      case _ => None
+  /** [[manifestOf]] for a version that was resolved as committed: its
+    * absence means the version vanished under a concurrent retention
+    * pass, surfaced as the retryable stale-read race ([[read]]).
+    */
+  private def manifestAt(name: String, v: Int): VersionManifest =
+    manifestOf(name, v).getOrElse {
+      val state = listNames(tableDir(name)).map(_.getPath.getName).sorted
+      throw new java.io.FileNotFoundException(
+        s"$schema.$name v$v vanished during read (concurrent retention); " +
+          s"tableDir=$state pointer=${pointerFloor(name).getOrElse("<none>")}")
     }
+
+  /** Parse a manifest [[writeManifestCommit]] wrote. Every field is
+    * required: content that does not parse, or lacks a field, fails
+    * loudly and names the file (as [[markAt]] does for
+    * `_delta_watermark`) — a guessed default could skip live files or
+    * adopt a conflicted orphan.
+    */
+  private def parseManifest(name: String, v: Int, raw: String): VersionManifest = {
+    val file = manifestFile(name, v)
+    def corrupt(why: String, cause: Throwable = null) = new IllegalStateException(
+      s"corrupt $file: $why — restore it or full-write the table", cause)
+    val m = (try graft.artifacts.Json.parse(raw)
+      catch { case scala.util.control.NonFatal(e) => throw corrupt("not JSON", e) }) match {
+      case m: Map[String @unchecked, Any @unchecked] => m
+      case _ => throw corrupt("not a JSON object")
+    }
+    def field(k: String): Any = m.getOrElse(k, throw corrupt(s"missing field '$k'"))
+    def list(k: String): Seq[Any] = field(k) match {
+      case s: Seq[Any @unchecked] => s
+      case _ => throw corrupt(s"field '$k' is not a list")
+    }
+    def num(k: String, x: Any): Double =
+      try String.valueOf(x).toDouble
+      catch { case e: NumberFormatException => throw corrupt(s"field '$k' is not a number", e) }
+    val files = list("files").map(String.valueOf(_))
+    val sizes = list("sizes").map(num("sizes", _).toLong)
+    val rawStats = list("stats")
+    if (sizes.size != files.size || rawStats.size != files.size)
+      throw corrupt(s"${files.size} files, ${sizes.size} sizes, ${rawStats.size} stats")
+    // per-file stats re-type against the version's stored schema; a
+    // null entry is a file without stats — never skipped
+    lazy val st = org.apache.spark.sql.types.DataType
+      .fromJson(readStr(new HPath(verDir(name, v), "_graft_schema.json"))).asInstanceOf[StructType]
+    val stats = rawStats.map(x => if (x == null) None else FileStats.fromJsonValue(x, st))
+    val layout = String.valueOf(field("layout"))
+    if (!Set("files", "partitioned", "bucketed")(layout)) throw corrupt(s"unknown layout '$layout'")
+    VersionManifest(layout, list("partition_by").map(String.valueOf(_)),
+      files.lazyZip(sizes).lazyZip(stats).map(MEntry(_, _, _)).toSeq,
+      num("base", field("base")).toInt, num("ts", field("ts")).toLong)
+  }
 
   /** Physical data files under a version dir as manifest entries.
     * `statsSchema` turns on per-file column-stats collection — one
@@ -703,39 +716,36 @@ final class RelationStore(
       .collect { case (n, Some(fst)) => n -> fst }.toMap
   }
 
-  /** The `_graft_stats.json` sidecar a delta landing wrote, re-typed
-    * against the fold schema. None ⇒ a pre-sidecar landing.
+  /** Per-file stats from the `_graft_stats.json` sidecar a delta
+    * landing wrote, re-typed against the fold schema. A file the map
+    * lacks has no stats and is never skipped.
     */
-  private def readStatsSidecar(dir: HPath,
-      sc: StructType): Option[Map[String, FileStats]] =
-    scala.util.Try(readStr(new HPath(dir, "_graft_stats.json"))).toOption
-      .flatMap(raw => graft.artifacts.Json.parse(raw) match {
+  private def readStatsSidecar(dir: HPath, sc: StructType): Map[String, FileStats] = {
+    val f = new HPath(dir, "_graft_stats.json")
+    readStrIfExists(f).fold(Map.empty[String, FileStats]) { raw =>
+      graft.artifacts.Json.parse(raw) match {
         case m: Map[String @unchecked, Any @unchecked] =>
-          Some(m.flatMap { case (n, v) =>
-            FileStats.fromJsonValue(v, sc).map(n -> _)
-          })
-        case _ => None
-      })
-
-  /** Data-file entries of version `v`: the manifest's for manifest
-    * versions, the physical listing for legacy/bucketed dirs — either
-    * way, the files a later version may carry by reference.
-    */
-  private def versionEntries(name: String, v: Int): Seq[MEntry] =
-    manifestOf(name, v) match {
-      case Some(m) if m.layout != "bucketed" => m.entries
-      case _ => physicalEntries(name, v)
+          m.flatMap { case (n, v) => FileStats.fromJsonValue(v, sc).map(n -> _) }
+        case _ => throw new IllegalStateException(s"corrupt $f: not a JSON object")
+      }
     }
+  }
+
+  /** Data-file entries of version `v`: the manifest's, or the physical
+    * listing of a bucketed version's dir — the files a later version
+    * may carry by reference.
+    */
+  private def versionEntries(name: String, v: Int): Seq[MEntry] = {
+    val m = manifestAt(name, v)
+    if (m.layout == "bucketed") physicalEntries(name, v) else m.entries
+  }
 
   /** A manifest entry as a Hadoop FileStatus (no filesystem call —
-    * the manifest recorded the size; pre-size manifests stat once).
+    * the manifest recorded the size).
     */
-  private def entryStatus(name: String, e: MEntry): FileStatus = {
-    val p = fs.makeQualified(new HPath(tableDir(name), e.rel))
-    if (e.size >= 0)
-      new FileStatus(e.size, false, 1, 128L << 20, 0L, p)
-    else fs.getFileStatus(p)
-  }
+  private def entryStatus(name: String, e: MEntry): FileStatus =
+    new FileStatus(e.size, false, 1, 128L << 20, 0L,
+      fs.makeQualified(new HPath(tableDir(name), e.rel)))
 
   // ---- reads ----
 
@@ -792,8 +802,8 @@ final class RelationStore(
     val cur = currentVersion(name)
     val (baseVer, live): (Option[Int], Seq[Long]) = asOfVersion match {
       case Some(v) =>
-        // time travel addresses committed versions only: v ≤ pointer AND
-        // manifest present (a dir above the pointer is a torn leftover
+        // time travel addresses committed versions only: v ≤ head AND
+        // manifest present (a dir above the head is a torn leftover
         // from a crashed write; one below without a manifest is a
         // GC-gutted data pool — both would scan partial content)
         if (v > cur.getOrElse(-1) || !isCommitted(name, v))
@@ -815,33 +825,21 @@ final class RelationStore(
       }
     // the base version scans through the manifest index: no directory
     // listing, no stat calls, and partition values/pruning served from
-    // the manifest itself (legacy manifest-less dirs scan as paths)
+    // the manifest itself. A bucketed version (time travel only — the
+    // head reads through its catalog table above) scans its own dir.
     val base: Option[DataFrame] = baseVer.flatMap { v =>
-      manifestOf(name, v) match {
-        case Some(m) if m.layout == "files" || m.layout == "partitioned" =>
-          if (m.entries.isEmpty) None
-          else {
-            val st = stored.getOrElse(throw new IllegalStateException(
-              s"manifest version without stored schema: $schema.$name v$v"))
-            val byLeaf = m.entries.groupBy(_.leafKey).toSeq.sortBy(_._1)
-              .map { case (k, es) =>
-                k -> es.map(e => (entryStatus(name, e), e.stats))
-              }
-            Some(ManifestFileIndex.datasetWithStatsFor(
-              spark, fs.makeQualified(tableDir(name)), st, m.partitionBy, byLeaf))
+      val m = manifestAt(name, v)
+      if (m.layout == "bucketed") Some(spark.read.parquet(verDir(name, v).toString))
+      else if (m.entries.isEmpty) None
+      else {
+        val st = stored.getOrElse(throw new IllegalStateException(
+          s"manifest version without stored schema: $schema.$name v$v"))
+        val byLeaf = m.entries.groupBy(_.leafKey).toSeq.sortBy(_._1)
+          .map { case (k, es) =>
+            k -> es.map(e => (entryStatus(name, e), e.stats))
           }
-        case _ =>
-          // legacy manifest-less dir. If the dir itself is gone, the
-          // head resolution was stale (a concurrent retention pass) —
-          // surface it as the retryable race it is
-          if (!fsExists(verDir(name, v))) {
-            val state = listNames(tableDir(name)).map(_.getPath.getName).sorted
-            throw new java.io.FileNotFoundException(
-              s"$schema.$name v$v vanished during read (concurrent retention); " +
-                s"tableDir=$state pointer=" +
-                scala.util.Try(readStr(pointer(name)).trim).getOrElse("<none>"))
-          }
-          Some(spark.read.parquet(verDir(name, v).toString))
+        Some(ManifestFileIndex.datasetWithStatsFor(
+          spark, fs.makeQualified(tableDir(name)), st, m.partitionBy, byLeaf))
       }
     }
     val deltas: Option[DataFrame] =
@@ -873,12 +871,12 @@ final class RelationStore(
     }
   }
 
-  /** Version directories of a table, ascending: committed ones (those ≤
-    * the current pointer, carrying a manifest) plus any torn leftover
-    * above the pointer from a crashed write (vacuum reclaims those). A
-    * gutted dir below the pointer — manifest expired, files retained
-    * only because newer manifests still reference them — is a data
-    * pool, not a version, and is not listed.
+  /** Version directories of a table, ascending: committed ones (at or
+    * below the head, carrying a manifest) plus any torn leftover above
+    * the head from a crashed write (vacuum reclaims those). A dir below
+    * the head without a manifest — a gutted data pool, files retained
+    * only because newer manifests still reference them — is not a
+    * version and is not listed.
     */
   def versions(name: String): Seq[Int] = {
     val cur = currentVersion(name).getOrElse(-1)
@@ -893,16 +891,12 @@ final class RelationStore(
       else None
     }
 
-  /** Commit wall-clock of a committed version: the manifest's recorded
-    * ts, or (pre-ts manifests / legacy dirs) the manifest file's or
-    * version dir's mtime. None only when the version has vanished.
+  /** Commit wall-clock of a version: its manifest's recorded `ts`.
+    * None when the version has no manifest (never committed, or
+    * vanished).
     */
   def commitTimestamp(name: String, v: Int): Option[Long] =
-    manifestOf(name, v).flatMap(_.commitTs)
-      .orElse(scala.util.Try(
-        fs.getFileStatus(manifestFile(name, v)).getModificationTime).toOption)
-      .orElse(scala.util.Try(
-        fs.getFileStatus(verDir(name, v)).getModificationTime).toOption)
+    manifestOf(name, v).map(_.commitTs)
 
   /** Resolve "as of this wall-clock instant" to a committed version:
     * the NEWEST committed version whose commit timestamp is at or
@@ -994,7 +988,7 @@ final class RelationStore(
         if isReserved(name, v) && hasManifest(name, v) && !reservedLive(v)) {
       val cur0 = currentVersion(name)
       if (v == cur0.getOrElse(-1) + 1 &&
-          manifestOf(name, v).exists(_.baseVersion.contains(cur0.getOrElse(-1))))
+          manifestOf(name, v).exists(_.baseVersion == cur0.getOrElse(-1)))
         commitCoord.release(rsvFile(name, v))
     }
     val cur = currentVersion(name).getOrElse(return 0)
@@ -1030,13 +1024,13 @@ final class RelationStore(
       // reclaimed versions; an already-gutted data pool does not
       val wasVersion = v > cur || isCommitted(name, v)
       // crash-safe gut ordering: tombstone FIRST, then metadata, then
-      // data. Every crash window then reads as either a still-committed
-      // version (manifest intact, nothing deleted yet) or a cleanly
-      // refused gutted pool — never a manifest-less dir with partial
-      // data that isCommitted() would mistake for a LEGACY version.
-      // (The tombstone is also what tells an expired version apart from
-      // a LEGACY pre-manifest committed dir, which must keep reading as
-      // a version; deleteIfEmptyTree sweeps it once the pool drains.)
+      // data. The tombstone keeps the pool's slot number unclaimable
+      // while files in it may still be referenced by newer manifests:
+      // reserveVersion claims any slot with neither manifest nor marker
+      // and deleteRec's its dir, which would tear those manifests. Every
+      // crash window thus reads as either a still-committed version
+      // (manifest intact, nothing deleted yet) or a tombstoned pool;
+      // deleteIfEmptyTree sweeps the tombstone once the pool drains.
       // every step below is idempotent and tolerates a CONCURRENT GC
       // (two sessions' retention passes sweeping the same expired dir)
       try {
@@ -1327,7 +1321,8 @@ final class RelationStore(
       // without operator action; rewrites only under-sized files. No
       // head yet when our fold was a no-op behind a competitor's fold
       // that is committed but not yet published: nothing to compact.
-      if (currentVersion(name).exists(v => versionEntries(name, v).size >= autoCompactMinFiles))
+      if (currentVersion(name).flatMap(manifestOf(name, _))
+          .exists(_.entries.size >= autoCompactMinFiles))
         compact(name, autoCompactTargetBytes)
     }
     true
@@ -1385,17 +1380,12 @@ final class RelationStore(
         // delta files carry the column stats their LANDING collected
         // (the `_graft_stats.json` sidecar) into the manifest — the
         // fold reads one tiny sidecar per delta and ZERO parquet
-        // footers, and still writes zero data bytes. Pre-sidecar deltas
-        // (older landings) fall back to a one-time footer read.
+        // footers, and still writes zero data bytes
         val deltaEntries = live.flatMap { id =>
           val dir = deltaDirOf(name, id)
-          val sidecar = foldSchema.flatMap(sc => readStatsSidecar(dir, sc))
+          val sidecar = foldSchema.fold(Map.empty[String, FileStats])(readStatsSidecar(dir, _))
           dataFilesIn(dir).map { st =>
-            val stats = sidecar match {
-              case Some(m) => m.get(st.getPath.getName) // absent ⇒ unknown, never skipped
-              case None => foldSchema.flatMap(sc => FileStats.collect(st, sc, hconf))
-            }
-            MEntry(relTo(tableDir(name), st.getPath), st.getLen, stats)
+            MEntry(relTo(tableDir(name), st.getPath), st.getLen, sidecar.get(st.getPath.getName))
           }
         }
         schemaSrc.foreach(s =>
@@ -1555,10 +1545,9 @@ final class RelationStore(
     graft.artifacts.Json.parse(readStr(bucketedFile(name))) match {
       case m: Map[String @unchecked, Any @unchecked] =>
         (m("catalog").toString,
-          m.getOrElse("bucket_by", Nil).asInstanceOf[Seq[Any]].map(String.valueOf(_)),
+          m("bucket_by").asInstanceOf[Seq[Any]].map(String.valueOf(_)),
           m("buckets").toString.toDouble.toInt)
-      // pre-JSON markers stored the bare catalog name
-      case s => (String.valueOf(s), Nil, 0)
+      case _ => throw new IllegalStateException(s"corrupt ${bucketedFile(name)}: not a JSON object")
     }
 
   /** The session catalog is in-memory — a fresh JVM forgets the table
@@ -1721,14 +1710,7 @@ final class RelationStore(
     * untouched row; callers must full-write once to re-layout.
     */
   def isPartitionedLayout(name: String): Boolean =
-    currentVersion(name).exists { v =>
-      manifestOf(name, v) match {
-        case Some(m) => m.layout == "partitioned"
-        case None => // legacy manifest-less dir: physical check
-          listNames(verDir(name, v)).exists(st =>
-            st.isDirectory && st.getPath.getName.contains("="))
-      }
-    }
+    currentVersion(name).exists(manifestAt(name, _).layout == "partitioned")
 
   /** Whether `schema` is byte-identical to the current version's stored
     * schema (the precondition for a partition-scoped commit).
@@ -1808,33 +1790,27 @@ final class RelationStore(
     foldDeltas(name)
     val cur = currentVersion(name).getOrElse(
       throw new IllegalStateException(s"relation not found: $schema.$name"))
-    val m = manifestOf(name, cur)
-    val entries = versionEntries(name, cur)
-    val partitioned = m.exists(_.layout == "partitioned") ||
-      (m.isEmpty && entries.exists(_.leafKey.nonEmpty)) // legacy dir
-    if (partitioned) {
-      val pby = m.map(_.partitionBy).filter(_.nonEmpty).getOrElse(
-        // legacy manifests/dirs: derive the partition columns from a
-        // leaf key's `col=` names (order preserved by the path)
-        entries.head.leafKey.split('/').toSeq.map(_.takeWhile(_ != '=')))
-      compactPartitioned(name, cur, pby, entries, targetBytes, clusterColumns)
-    } else compactFlat(name, cur, entries, targetBytes, clusterColumns)
+    // a head expiring under a concurrent commit's retention pass leaves
+    // nothing to compact: the next trigger re-plans on the fresh head
+    manifestOf(name, cur) match {
+      case None => 0
+      case Some(m) if m.layout == "partitioned" =>
+        compactPartitioned(name, cur, m.partitionBy, m.entries, targetBytes, clusterColumns)
+      case Some(m) => compactFlat(name, cur, m.entries, targetBytes, clusterColumns)
+    }
   }
 
   private def compactFlat(
       name: String, cur: Int, entries: Seq[MEntry], targetBytes: Long,
       clusterColumns: Seq[String]): Int = {
     val td = tableDir(name)
-    val sized = entries.map(e =>
-      if (e.size >= 0) e
-      else e.copy(size = fs.getFileStatus(new HPath(td, e.rel)).getLen))
     // small-file cutoff at HALF the target (the Delta OPTIMIZE
     // convention): coalesce outputs average just UNDER targetBytes, so
     // classifying by `< targetBytes` would re-rewrite prior compaction
     // outputs on every trigger — O(table) per trigger instead of
     // amortizing. Files in [target/2, target) are good enough to keep.
     val smallCutoff = math.max(1L, targetBytes / 2)
-    val (small, big) = sized.partition(_.size < smallCutoff)
+    val (small, big) = entries.partition(_.size < smallCutoff)
     val smallBytes = small.map(_.size).sum
     val ideal = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes)
     if (small.size <= ideal) return 0
@@ -1961,10 +1937,7 @@ final class RelationStore(
   private def compactPartitioned(name: String, cur: Int, partitionBy: Seq[String],
       entries: Seq[MEntry], targetBytes: Long, clusterColumns: Seq[String]): Int = {
     val td = tableDir(name)
-    val sized = entries.map(e =>
-      if (e.size >= 0) e
-      else e.copy(size = fs.getFileStatus(new HPath(td, e.rel)).getLen))
-    val byLeaf = sized.groupBy(_.leafKey)
+    val byLeaf = entries.groupBy(_.leafKey)
     val fragmented = byLeaf.filter { case (_, es) =>
       val ideal = math.max(1L, (es.map(_.size).sum + targetBytes - 1) / targetBytes)
       es.size > ideal
@@ -1998,7 +1971,7 @@ final class RelationStore(
     }
     carryVersionMeta(name, cur, slot)
     // well-sized leaves carry by reference, fragmented ones re-list
-    val carried = sized.filterNot(e => fragmented.contains(e.leafKey))
+    val carried = entries.filterNot(e => fragmented.contains(e.leafKey))
     val outEntries =
       physicalEntries(name, slot, statsSchema = storedSchemaOf(name)) ++ carried
     commitHead(name, slot, { (_, base) =>
@@ -2152,13 +2125,14 @@ final class RelationStore(
       def dirSel(p: String) = s"SELECT * FROM parquet.`$p`"
       val live = liveDeltaIds(name).map(id => dirSel(deltaDirOf(name, id).toString))
       val base: Seq[String] = currentVersion(name).toSeq.flatMap { v =>
-        manifestOf(name, v) match {
-          case Some(m) if m.layout == "files" =>
+        val m = manifestAt(name, v)
+        m.layout match {
+          case "files" =>
             if (m.entries.isEmpty) Nil
             else if (m.entries.forall(_.rel.startsWith(s"v$v/")))
               Seq(dirSel(verDir(name, v).toString)) // self-contained
             else m.entries.map(e => dirSel(new HPath(tableDir(name), e.rel).toString))
-          case Some(m) if m.layout == "partitioned" =>
+          case "partitioned" =>
             // partition columns don't live in the data files: project
             // each entry's leaf values back as typed literals, in the
             // stored column order
@@ -2182,7 +2156,7 @@ final class RelationStore(
               s"SELECT ${cols.mkString(", ")} FROM parquet.`" +
                 s"${new HPath(tableDir(name), e.rel)}`"
             }
-          case _ => Seq(dirSel(verDir(name, v).toString)) // legacy/bucketed dir
+          case _ => Seq(dirSel(verDir(name, v).toString)) // bucketed: self-contained dir
         }
       }
       (base ++ live) match {
@@ -2218,7 +2192,7 @@ final class RelationStore(
       "versions_retained" -> versions(name).size,
       "current_version" -> cur.getOrElse(-1),
       "live_files" -> entries.size,
-      "live_bytes" -> entries.map(e => math.max(0L, e.size)).sum,
+      "live_bytes" -> entries.map(_.size).sum,
       "pool_files" -> pool.size,
       "pool_bytes" -> pool.map(_.getLen).sum,
       "delta_live" -> liveDeltaIdsAt(name, mark).size,
@@ -2280,16 +2254,14 @@ object RelationStore {
     }
 
   /** Serialize merged ranges: `lo-hi` per range, singletons as the bare
-    * id — which makes the PRE-RANGE format (a comma list of single ids)
-    * a valid instance of this one, so old `_delta_absorbed` files parse
-    * unchanged.
+    * id, comma-separated.
     */
   private[graft] def formatRanges(rs: Seq[(Long, Long)]): String =
     rs.map { case (a, b) => if (a == b) a.toString else s"$a-$b" }.mkString(",")
 
-  /** Parse `_delta_absorbed` content (range or legacy single-id form)
-    * into merged ranges. Throws NumberFormatException on malformed
-    * content — the caller surfaces it loudly.
+  /** Parse `_delta_absorbed` content ([[formatRanges]]) into merged
+    * ranges. Throws NumberFormatException on malformed content — the
+    * caller surfaces it loudly.
     */
   private[graft] def parseRanges(raw: String): Seq[(Long, Long)] =
     mergeRanges(raw.trim.split(',').filter(_.nonEmpty).toSeq.map { tok =>

@@ -125,14 +125,12 @@ final class Runner(
     manifest, vars,
     eventTimeFilter = eventWindow,
     empty = opts.empty,
-    // defer (reference RuntimeRefResolver, providers.py:529-647): a ref
-    // whose relation is missing locally resolves to the state
-    // warehouse's storage directly (path for tables, inline subquery
-    // for views) — it lives in another store, so session views won't do
-    deferResolver = opts.deferStore.map(d => (name: String) => d.addressable(name)),
-    localExists = name => store.exists(name),
-    // per-node schema: resolve into the node's schema store; missing
-    // locally → try the defer warehouse's matching schema namespace
+    // per-node schema: resolve into the node's schema store. Defer
+    // (reference RuntimeRefResolver, providers.py:529-647): a ref whose
+    // relation is missing locally resolves to the defer warehouse's
+    // matching schema namespace, addressed by storage (path for tables,
+    // inline subquery for views) — it lives in another store, so
+    // session views won't do
     relResolver = Some { (n: Node, ident: String) =>
       val st = materializer.storeFor(n)
       if (st.exists(ident)) st.sqlName(ident)
@@ -183,29 +181,13 @@ final class Runner(
     val selected = selectedIds()
     val results = new ConcurrentLinkedQueue[RunResult]()
 
-    // on-run-start hooks (reference safe_run_hooks, run.py:605-716):
-    // a failing hook is caught and recorded as an error result, never
-    // a crash; under skip_nodes_if_on_run_start_fails (ProjectFlags,
-    // runnable.py:517) it additionally short-circuits every selected
-    // node to "skipped", otherwise the nodes still execute
-    val hookFailed = manifest.onRunStart.foldLeft(false) { (failed, h) =>
-      // once one hook fails, the REMAINING hooks are recorded as
-      // skipped without executing (reference safe_run_hooks: failures
-      // flip `failed` and later hooks get status Skipped) — a
-      // side-effecting hook must not run after its predecessor failed
-      if (failed) {
-        results.add(RunResult(h.uniqueId, "skipped", 0.0, "previous hook failed"))
-        true
-      }
-      else try { spark.sql(renderHook(h.rawCode)); false }
-      catch {
-        case e: Exception =>
-          results.add(RunResult(h.uniqueId, "error", 0.0,
-            Option(e.getMessage).getOrElse("").take(300)))
-          true
-      }
-    }
-    val skipAll = hookFailed && manifest.flag("skip_nodes_if_on_run_start_fails")
+    // a failing on-run-start hook is an error result; under
+    // skip_nodes_if_on_run_start_fails (ProjectFlags, runnable.py:517)
+    // it additionally short-circuits every selected node to "skipped",
+    // otherwise the nodes still execute
+    val startResults = safeRunHooks(manifest.onRunStart)
+    startResults.foreach(results.add)
+    val skipAll = startResults.nonEmpty && manifest.flag("skip_nodes_if_on_run_start_fails")
     if (skipAll)
       selected.toSeq.sorted.foreach { id =>
         events.nodeFinished(RunResult(id, "skipped", 0.0, "on-run-start hook failed"))
@@ -252,7 +234,7 @@ final class Runner(
     latch.await(24, TimeUnit.HOURS)
     pool.shutdown()
 
-    manifest.onRunEnd.foreach(h => spark.sql(renderHook(h.rawCode)))
+    safeRunHooks(manifest.onRunEnd).foreach(results.add)
 
     val elapsed = (System.nanoTime() - t0) / 1e9
     val out = results.toArray(Array.empty[RunResult]).toSeq
@@ -261,6 +243,25 @@ final class Runner(
     events.commandCompleted(opts.cmd,
       !out.exists(r => Set("error", "fail").contains(r.status)), elapsed)
     out
+  }
+
+  /** Run project hooks in order (reference safe_run_hooks, run.py:605-716).
+    * A failing hook is recorded as an error result, never a crash out
+    * of the task, and every hook after it is recorded as skipped without
+    * running: a side-effecting hook must not run after its predecessor
+    * failed. Returns the error and skipped results (empty ⇒ all passed).
+    */
+  private def safeRunHooks(hooks: Seq[HookNode]): Seq[RunResult] = {
+    var failed = false
+    hooks.flatMap { h =>
+      if (failed) Some(RunResult(h.uniqueId, "skipped", 0.0, "previous hook failed"))
+      else try { spark.sql(renderHook(h.rawCode)); None }
+      catch {
+        case e: Exception =>
+          failed = true
+          Some(RunResult(h.uniqueId, "error", 0.0, Option(e.getMessage).getOrElse("").take(300)))
+      }
+    }
   }
 
   private def warnKindOf(id: String): String = manifest.get(id) match {
@@ -739,27 +740,8 @@ final class Runner(
     // source_freshness_run_project_hooks the hooks are SKIPPED with a
     // deprecation warning)
     val runHooks = manifest.flag("source_freshness_run_project_hooks")
-    // a failing hook is an error RESULT, not a crash out of the task —
-    // the same safe_run_hooks discipline execute() applies, with the
-    // same skip-the-rest-after-a-failure ordering
-    val hookResults = scala.collection.mutable.ArrayBuffer[RunResult]()
-    if (runHooks) {
-      manifest.onRunStart.foldLeft(false) { (failed, h) =>
-        if (failed) {
-          hookResults += RunResult(h.uniqueId, "skipped", 0.0, "previous hook failed")
-          true
-        }
-        else try { spark.sql(renderHook(h.rawCode)); false }
-        catch {
-          case e: Exception =>
-            hookResults += RunResult(h.uniqueId, "error", 0.0,
-              Option(e.getMessage).getOrElse("").take(300))
-            true
-        }
-      }
-      ()
-    }
-    else if (manifest.onRunStart.nonEmpty || manifest.onRunEnd.nonEmpty)
+    val startResults = if (runHooks) safeRunHooks(manifest.onRunStart) else Nil
+    if (!runHooks && (manifest.onRunStart.nonEmpty || manifest.onRunEnd.nonEmpty))
       System.err.println("[graft] WARNING: project hooks are not run during " +
         "source freshness; set flags.source_freshness_run_project_hooks to opt in")
     val rows = manifest.sources.values.toSeq
@@ -796,18 +778,11 @@ final class Runner(
               Option(e.getMessage).getOrElse("").take(300)))
         }
       }
-    if (runHooks) manifest.onRunEnd.foreach { h =>
-      try spark.sql(renderHook(h.rawCode))
-      catch {
-        case e: Exception =>
-          hookResults += RunResult(h.uniqueId, "error", 0.0,
-            Option(e.getMessage).getOrElse("").take(300))
-      }
-    }
+    val endResults = if (runHooks) safeRunHooks(manifest.onRunEnd) else Nil
     // persist sources.json — the input to `source_status:fresher`
     Artifacts.writeSources(opts.targetDir,
       rows.map { case (loadedAt, r) => (r.uniqueId, loadedAt, r.status) })
-    hookResults.toSeq ++ rows.map(_._2).map(r =>
+    startResults ++ endResults ++ rows.map(_._2).map(r =>
       if (r.status == "warn") applyWarnPolicy(r, "SourceFreshnessWarn") else r)
   }
 

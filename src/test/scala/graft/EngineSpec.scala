@@ -1380,8 +1380,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // catalog surfaces the persisted comments in the v1 fields a
     // catalog browser reads
     val catDir = dp.resolve("target").toString
-    Artifacts.writeCatalogWithComments(catDir,
-      Seq(("fact", stp.read("fact"), relC, colC)))
+    Artifacts.writeCatalog(catDir,
+      Seq(("fact", stp.read("fact"), relC, colC, Map.empty[String, Any])))
     val cat = Files.readString(dp.resolve("target/catalog.json"))
     assert(cat.contains("\"comment\":\"The central fact table\"") ||
       cat.contains("\"comment\": \"The central fact table\""), cat.take(800))
@@ -2054,27 +2054,34 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"""name: flagdemo
            |on-run-start:
            |  - "SELECT definitely_broken FROM nowhere_at_all"
+           |on-run-end:
+           |  - "SELECT also_broken FROM nowhere_either"
            |${if (flagOn) "flags:\n  skip_nodes_if_on_run_start_fails: true\n" else ""}""".stripMargin)
       w("models/simple.sql", "SELECT 1 AS x")
       val p = ProjectLoader.resolveRefs(ProjectLoader.load(d.toString))
       val st = new RelationStore(spark, d.resolve("wh").toString)
       (new Runner(spark, p, st, RunOptions(cmd = "run", threads = 1,
-        targetDir = d.resolve("target").toString)).execute(), st)
+        targetDir = d.resolve("target").toString)).execute(), st, d)
     }
     // flag ON (reference runnable.py:517): the hook failure is an error
     // result and every selected node is marked skipped, never executed
-    val (rOn, stOn) = run(true)
+    val (rOn, stOn, _) = run(true)
     assert(rOn.exists(r => r.uniqueId.startsWith("operation.") && r.status == "error"),
       rOn.mkString("\n"))
     assert(rOn.exists(r => r.uniqueId == "model.flagdemo.simple" && r.status == "skipped"),
       rOn.mkString("\n"))
     assert(!stOn.exists("simple"), "skipped node must not materialize")
     // flag OFF (the default): the hook failure is recorded but nodes run
-    val (rOff, stOff) = run(false)
+    val (rOff, stOff, dOff) = run(false)
     assert(rOff.exists(r => r.uniqueId.startsWith("operation.") && r.status == "error"))
     assert(rOff.exists(r => r.uniqueId == "model.flagdemo.simple" && r.status == "success"),
       rOff.mkString("\n"))
     assert(stOff.exists("simple"))
+    // a failing on-run-end hook is an error result too, and the run's
+    // artifacts are still written
+    assert(rOff.exists(r => r.uniqueId == "operation.flagdemo.flagdemo-on-run-end-0" &&
+      r.status == "error"), rOff.mkString("\n"))
+    assert(Files.exists(dOff.resolve("target/run_results.json")))
   }
 
   test("flags: source_freshness_run_project_hooks gates project hooks around freshness") {

@@ -460,35 +460,27 @@ class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.read("t_ret", Some(1)).collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 
-  test("legacy pre-manifest versions survive GC, read as committed, upgrade in place") {
-    // a store written BEFORE the manifest format: committed version
-    // dirs with data but no _manifest.json. GC must treat them as
-    // committed (they are below the pointer and not gutted) — the
-    // failure mode being pinned: reference-counted GC seeing "no
-    // manifest" and reclaiming the LIVE current version's data files
-    val lw = new graft.exec.RelationStore(spark,
-      java.nio.file.Files.createTempDirectory("legacy_wh").toString, retainVersions = 10)
-    lw.write(df(Seq((1L, "v0"))), "t_legacy")
-    lw.write(df(Seq((1L, "v1"), (2L, "v1"))), "t_legacy")
-    val table = java.nio.file.Paths.get(lw.currentPath("t_legacy").get).getParent
-    Seq("v0", "v1").foreach(v =>
-      java.nio.file.Files.delete(table.resolve(v).resolve("_manifest.json")))
-    assert(lw.versions("t_legacy") == Seq(0, 1))
-    assert(lw.read("t_legacy").count() == 2, "legacy dir must scan as the current version")
-    assert(lw.read("t_legacy", Some(0)).first().getString(1) == "v0")
-    // wide-retention vacuum reclaims NOTHING and data stays whole
-    assert(lw.vacuum("t_legacy", keepLast = 5) == 0)
-    assert(lw.read("t_legacy").count() == 2)
-    // tight retention reclaims only the OLD legacy version
-    assert(lw.vacuum("t_legacy", keepLast = 1) == 1)
-    assert(lw.versions("t_legacy") == Seq(1))
-    assert(lw.read("t_legacy").count() == 2)
-    // upgrade in place: a new (manifest) commit coexists with the
-    // legacy version under the same retention accounting
-    lw.write(df(Seq((3L, "v2"))), "t_legacy")
-    assert(lw.versions("t_legacy") == Seq(1, 2))
-    assert(lw.read("t_legacy").first().getString(1) == "v2")
-    assert(lw.read("t_legacy", Some(1)).count() == 2)
+  test("a manifest missing a required field fails the read and names the file") {
+    // the store reads only the manifest shape it writes: a stripped
+    // field is corruption to surface, never a value to guess
+    val root = java.nio.file.Files.createTempDirectory("strict_wh").toString
+    new graft.exec.RelationStore(spark, root).write(df(Seq((1L, "a"), (2L, "b"))), "t_strict")
+    val fresh = new graft.exec.RelationStore(spark, root)
+    val mf = java.nio.file.Paths.get(fresh.currentPath("t_strict").get).resolve("_manifest.json")
+    val raw = java.nio.file.Files.readString(mf)
+    val fields = graft.artifacts.Json.parse(raw).asInstanceOf[Map[String, Any]]
+    // rewritten outside Hadoop: drop the checksum sibling so the read
+    // sees the edited content, not a checksum mismatch
+    java.nio.file.Files.deleteIfExists(mf.resolveSibling("._manifest.json.crc"))
+    for (k <- Seq("sizes", "ts")) {
+      assert(fields.contains(k), raw)
+      java.nio.file.Files.writeString(mf, graft.artifacts.Json.write(fields - k))
+      val err = intercept[IllegalStateException](fresh.read("t_strict"))
+      assert(err.getMessage.contains(mf.toString) && err.getMessage.contains(s"'$k'"),
+        err.getMessage)
+    }
+    java.nio.file.Files.writeString(mf, raw)
+    assert(fresh.read("t_strict").count() == 2)
   }
 
   test("vacuum reclaims torn (uncommitted) versions, never committed history") {
@@ -508,6 +500,24 @@ class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tv.vacuum("t_torn", keepLast = 5) == 1)
     assert(tv.versions("t_torn") == Seq(0, 1))
     assert(tv.read("t_torn", Some(0)).first().getString(1) == "a")
+    // a committed version whose manifest is gone is no version either:
+    // v0's files are unreferenced, v1's are carried by the fold's head
+    // v2. Neither lists nor time-travels, vacuum reclaims both as
+    // versions (v0's dir entirely), and the head still reads whole
+    assert(tv.appendDelta(df(Seq((2L, "c"))), "t_torn", 0L))
+    assert(tv.foldDeltas("t_torn") == 1)
+    val table = torn.getParent
+    Seq("v0", "v1").foreach(v =>
+      java.nio.file.Files.delete(table.resolve(v).resolve("_manifest.json")))
+    assert(tv.versions("t_torn") == Seq(2))
+    Seq(0, 1).foreach { v =>
+      val gone = intercept[IllegalStateException](tv.read("t_torn", Some(v)))
+      assert(gone.getMessage.contains(s"version $v of main.t_torn not found"), gone.getMessage)
+    }
+    tv.vacuum("t_torn", keepLast = 5)
+    assert(!java.nio.file.Files.exists(table.resolve("v0")), "manifest-less v0 must be reclaimed")
+    assert(tv.versions("t_torn") == Seq(2))
+    assert(tv.read("t_torn").collect().map(_.getString(1)).sorted.toSeq == Seq("b", "c"))
   }
 
   test("failed commit leaves the previous version current and readable") {
