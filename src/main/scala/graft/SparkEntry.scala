@@ -1212,21 +1212,7 @@ object SparkEntry {
     // base hash, the SAME affine permutation constants (MinHashAgg.A/B,
     // interpolated below), band keys, bucket join, exact-Jaccard verify
     QuerySpec("dedup_minhash_lsh", DedupOps.dedupMinHashLsh _, DuckDb {
-      val al = graft.functions.MinHashAgg.A.take(32)
-        .map(a => s"$a::HUGEINT").mkString("[", ",", "]")
-      val mask = (BigInt(1) << 64) - 1
-      val bl = graft.functions.MinHashAgg.B.take(32)
-        .map(b => s"${BigInt(b) & mask}::HUGEINT").mkString("[", ",", "]")
-      val bandKey = (0 until 8).map { b =>
-        val str = s"CAST($b AS VARCHAR) || ',' || " + (1 to 4).map(r =>
-          s"CAST(sig[${4 * b + r}] AS VARCHAR)").mkString(" || ',' || ")
-        // same 8-byte band key the Spark side shuffles on (md5Hash64:
-        // signed hi32 * 2^32 + lo32 — sign-correct, cannot overflow)
-        val hi = s"('0x' || substr(md5($str), 1, 8))::BIGINT"
-        s"($hi - CASE WHEN $hi >= 2147483648 THEN 4294967296 ELSE 0 END)" +
-          s" * 4294967296 + ('0x' || substr(md5($str), 9, 8))::BIGINT"
-      }.map(k => s"SELECT doc_id, $k AS bk FROM sigs")
-        .mkString("\n        UNION ALL ")
+      val (al, bl, bandKey) = minhashLshSql
       s"""
       WITH toks AS (
         SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS w
@@ -3766,6 +3752,31 @@ object SparkEntry {
       s" * 4294967296 + ('0x' || substr(md5($x), 9, 8))::BIGINT)"
   }
 
+  /** The MinHash-LSH oracle constants, built once for every oracle
+    * that replays the pipeline: MinHashAgg's first 32 affine
+    * permutation multipliers and offsets as DuckDB HUGEINT list
+    * literals, and the 8-band x 4-row band keys over `sigs` as a
+    * `UNION ALL` of (doc_id, bk) selects.
+    */
+  private lazy val minhashLshSql: (String, String, String) = {
+    val al = graft.functions.MinHashAgg.A.take(32)
+      .map(a => s"$a::HUGEINT").mkString("[", ",", "]")
+    val mask = (BigInt(1) << 64) - 1
+    val bl = graft.functions.MinHashAgg.B.take(32)
+      .map(b => s"${BigInt(b) & mask}::HUGEINT").mkString("[", ",", "]")
+    val bandKey = (0 until 8).map { b =>
+      val str = s"CAST($b AS VARCHAR) || ',' || " + (1 to 4).map(r =>
+        s"CAST(sig[${4 * b + r}] AS VARCHAR)").mkString(" || ',' || ")
+      // same 8-byte band key the Spark side shuffles on (md5Hash64:
+      // signed hi32 * 2^32 + lo32 — sign-correct, cannot overflow)
+      val hi = s"('0x' || substr(md5($str), 1, 8))::BIGINT"
+      s"($hi - CASE WHEN $hi >= 2147483648 THEN 4294967296 ELSE 0 END)" +
+        s" * 4294967296 + ('0x' || substr(md5($str), 9, 8))::BIGINT"
+    }.map(k => s"SELECT doc_id, $k AS bk FROM sigs")
+      .mkString("\n        UNION ALL ")
+    (al, bl, bandKey)
+  }
+
   private lazy val RecallEvalSql: String = recallEvalSql("TRUE")
 
   /** Sampled variant: same evaluation restricted to the seeded
@@ -3781,19 +3792,7 @@ object SparkEntry {
   }
 
   private def recallEvalSql(docPred: String): String = {
-    val al = graft.functions.MinHashAgg.A.take(32)
-      .map(a => s"$a::HUGEINT").mkString("[", ",", "]")
-    val mask = (BigInt(1) << 64) - 1
-    val bl = graft.functions.MinHashAgg.B.take(32)
-      .map(b => s"${BigInt(b) & mask}::HUGEINT").mkString("[", ",", "]")
-    val bandKey = (0 until 8).map { b =>
-      val str = s"CAST($b AS VARCHAR) || ',' || " + (1 to 4).map(r =>
-        s"CAST(sig[${4 * b + r}] AS VARCHAR)").mkString(" || ',' || ")
-      val hi = s"('0x' || substr(md5($str), 1, 8))::BIGINT"
-      s"($hi - CASE WHEN $hi >= 2147483648 THEN 4294967296 ELSE 0 END)" +
-        s" * 4294967296 + ('0x' || substr(md5($str), 9, 8))::BIGINT"
-    }.map(k => s"SELECT doc_id, $k AS bk FROM sigs")
-      .mkString("\n        UNION ALL ")
+    val (al, bl, bandKey) = minhashLshSql
     val theoryVals = graft.operators.DedupOps.lshTheoryPpm(8, 4)
       .map { case (b, t) => s"($b, $t)" }.mkString(", ")
     s"""
@@ -3854,19 +3853,7 @@ object SparkEntry {
   }
 
   private def minhashProbeSql(probePred: String, indexPred: String): String = {
-    val al = graft.functions.MinHashAgg.A.take(32)
-      .map(a => s"$a::HUGEINT").mkString("[", ",", "]")
-    val mask = (BigInt(1) << 64) - 1
-    val bl = graft.functions.MinHashAgg.B.take(32)
-      .map(b => s"${BigInt(b) & mask}::HUGEINT").mkString("[", ",", "]")
-    val bandKey = (0 until 8).map { b =>
-      val str = s"CAST($b AS VARCHAR) || ',' || " + (1 to 4).map(r =>
-        s"CAST(sig[${4 * b + r}] AS VARCHAR)").mkString(" || ',' || ")
-      val hi = s"('0x' || substr(md5($str), 1, 8))::BIGINT"
-      s"($hi - CASE WHEN $hi >= 2147483648 THEN 4294967296 ELSE 0 END)" +
-        s" * 4294967296 + ('0x' || substr(md5($str), 9, 8))::BIGINT"
-    }.map(k => s"SELECT doc_id, $k AS bk FROM sigs")
-      .mkString("\n        UNION ALL ")
+    val (al, bl, bandKey) = minhashLshSql
     s"""
       WITH toks AS (
         SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS w

@@ -3,6 +3,7 @@ package graft.exec
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -294,14 +295,17 @@ object ManifestFileIndex {
     * columns from the parquet files, partition columns (possibly none)
     * from the manifest's typed values. `files` carry the manifest's
     * recorded sizes and column bounds — no filesystem metadata calls
-    * on the read path.
+    * on the read path. With `bucketSpec` the scan is bucketed: Spark
+    * reads each file's bucket id from its name, so a join or
+    * aggregate on the bucket keys needs no Exchange.
     */
   def datasetWithStatsFor(
       spark: SparkSession,
       table: HPath,
       storedSchema: StructType,
       partitionBy: Seq[String],
-      filesByLeaf: Seq[(String, Seq[(FileStatus, Option[FileStats])])]): DataFrame = {
+      filesByLeaf: Seq[(String, Seq[(FileStatus, Option[FileStats])])],
+      bucketSpec: Option[BucketSpec] = None): DataFrame = {
     def nullable(st: StructType): StructType =
       StructType(st.map(f => f.copy(nullable = true)))
     val partitionSchema = nullable(StructType(partitionBy.map(n => storedSchema(n))))
@@ -313,7 +317,7 @@ object ManifestFileIndex {
     }
     val index = new ManifestFileIndex(table, partitionSchema, entries)
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      None, new ParquetFileFormat(), Map.empty[String, String])(spark)
+      bucketSpec, new ParquetFileFormat(), Map.empty[String, String])(spark)
     org.apache.spark.sql.graft.Bridge.ofRows(spark,
       LogicalRelation(relation, isStreaming = false))
   }

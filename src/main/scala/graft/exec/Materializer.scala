@@ -119,23 +119,16 @@ final class Materializer(spark: SparkSession, store: RelationStore) {
   /** Full rebuild (CTAS + atomic version swap). `bucket_by`+`buckets`
     * lays the table out bucketed (clustered) so downstream joins on the
     * bucket key are shuffle-free — see RelationStore.writeBucketed.
+    * Either way the constraint pass runs over the staged files before
+    * the commit.
     */
   def table(node: Node, df: DataFrame): Unit = {
     enforceContract(node, df)
-    if (node.config.bucketBy.nonEmpty && node.config.buckets > 0) {
-      // bucketed writes stage through the catalog — run the constraint
-      // pass on the input plan instead of the written files; cache so
-      // the model plan executes once, not once for validation and
-      // again for the CTAS
-      val validator = constraintValidator(node)
-      val input = if (validator.isDefined) df.cache() else df
-      try {
-        validator.foreach(_(input))
-        storeFor(node).writeBucketed(input, relName(node), node.config.bucketBy, node.config.buckets)
-      } finally if (validator.isDefined) input.unpersist()
-    } else
-      storeFor(node).write(df, relName(node), node.config.partitionBy,
-        validate = constraintValidator(node))
+    val validate = constraintValidator(node)
+    if (node.config.bucketBy.nonEmpty && node.config.buckets > 0)
+      storeFor(node).writeBucketed(df, relName(node), node.config.bucketBy,
+        node.config.buckets, validate)
+    else storeFor(node).write(df, relName(node), node.config.partitionBy, validate = validate)
   }
 
   /** materialized_view (reference §2.1 + on_configuration_change,

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Relation
@@ -29,11 +30,14 @@ import graft.core.Relation
   * coordinator. Same-JVM writers additionally arbitrate on a process
   * lock.
   *
-  * A committed FLAT version is a MANIFEST (`_manifest.json` listing
-  * table-relative data-file paths), not a directory of copies: data
-  * files live where they were first written (a full write's own version
-  * dir, or a streaming delta dir) and later versions reference them.
-  * Consequences:
+  * Every committed version is a MANIFEST (`_manifest.json` listing
+  * table-relative data-file paths with their sizes and column stats),
+  * not a directory of copies: data files live where they were first
+  * written (a full write's own version dir, or a streaming delta dir)
+  * and later versions reference them. The manifests are the store's
+  * only state — no session-catalog table mirrors a version. Every
+  * non-view read, head or time travel, with or without live deltas,
+  * is one [[ManifestFileIndex]] scan. Consequences:
   *
   *  - a materialization can read the current version of its own target
   *    while writing the next (incremental merge = read + join + write,
@@ -56,6 +60,11 @@ import graft.core.Relation
   * therefore CARRIES untouched partitions by reference: zero data
   * bytes, zero hard links, on any filesystem. Reads also never list
   * directories or stat files — the manifest records sizes.
+  *
+  * BUCKETED layouts are manifests too: the manifest lists the files
+  * the bucketed writer named by bucket id and records `bucket_by` and
+  * `buckets`, and the read hands that spec to the scan's relation, so
+  * two relations bucketed alike join with zero Exchange.
   *
   * Views are stored as SQL text (`<name>.view.sql`) and re-registered as
   * session temp views on attach — mirroring `CREATE OR REPLACE VIEW`.
@@ -210,9 +219,13 @@ final class RelationStore(
 
   private def deleteRec(p: HPath): Unit = if (fs.exists(p)) fs.delete(p, true)
 
-  /** Data files (non-meta regular files) directly inside `dir`. */
+  /** Data files (non-meta regular files) directly inside `dir`. Throws
+    * FileNotFoundException when `dir` is gone: a landed delta swept
+    * under a read is the retryable stale-read race, never an empty
+    * delta.
+    */
   private def dataFilesIn(dir: HPath): Seq[FileStatus] =
-    listNames(dir).filter { st =>
+    fs.listStatus(dir).toSeq.filter { st =>
       val fn = st.getPath.getName
       st.isFile && !fn.startsWith("_") && !fn.startsWith(".")
     }
@@ -454,9 +467,10 @@ final class RelationStore(
     * the full file or nothing — the rename is the commit.
     */
   private def writeManifestCommit(name: String, v: Int, layout: String,
-      partitionBy: Seq[String], entries: Seq[MEntry], base: Option[Int]): Unit = {
+      partitionBy: Seq[String], entries: Seq[MEntry], base: Option[Int],
+      bucketing: Option[BucketSpec]): Unit = {
     val tmp = new HPath(verDir(name, v), "._manifest.json.tmp")
-    writeStr(tmp, graft.artifacts.Json.write(Map(
+    val fields = Map(
       "layout" -> layout,
       "partition_by" -> partitionBy,
       // commit wall-clock — what timestamp time travel ([[readAsOf]])
@@ -471,7 +485,9 @@ final class RelationStore(
       "base" -> base.getOrElse(-1),
       "files" -> entries.map(_.rel),
       "sizes" -> entries.map(_.size),
-      "stats" -> entries.map(_.stats.map(FileStats.toJsonValue).orNull))))
+      "stats" -> entries.map(_.stats.map(FileStats.toJsonValue).orNull))
+    writeStr(tmp, graft.artifacts.Json.write(bucketing.fold(fields)(b =>
+      fields ++ Map("bucket_by" -> b.bucketColumnNames, "buckets" -> b.numBuckets))))
     fctx.rename(tmp, manifestFile(name, v), Options.Rename.OVERWRITE)
   }
 
@@ -486,11 +502,13 @@ final class RelationStore(
     * letting ours stand would silently drop it from the history — we
     * withdraw, re-slot above the new head (data stays put, the manifest
     * re-references it cross-dir), and rebuild against the new base.
+    * `bucketing` is recorded in the manifest of a bucketed write.
     *
     * @return the committed head version, or None when `build` aborted
     */
   private def commitHead(name: String, firstSlot: Int,
-      build: (Int, Option[Int]) => Option[(String, Seq[String], Seq[MEntry])]): Option[Int] = {
+      build: (Int, Option[Int]) => Option[(String, Seq[String], Seq[MEntry])],
+      bucketing: Option[BucketSpec] = None): Option[Int] = {
     def committedBelow(n: Int): Option[Int] =
       physicalVersionDirs(name).filter(v => v < n && hasManifest(name, v))
         .maxOption orElse pointerFloor(name).filter(_ < n)
@@ -540,7 +558,7 @@ final class RelationStore(
             (n :: priorSlots).foreach(demoteSlot(name, _))
             return None
           case Some(Some((layout, pby, entries))) =>
-            writeManifestCommit(name, n, layout, pby, entries, base)
+            writeManifestCommit(name, n, layout, pby, entries, base, bucketing)
             // linearizability check (RAW view): we are the head AND
             // nobody slipped a commit in between our base and our slot —
             // otherwise our carried state is stale (lost update) and
@@ -596,7 +614,7 @@ final class RelationStore(
   /** A committed version's manifest ([[writeManifestCommit]] writes
     * every field). `layout`: "files" (flat), "partitioned" (entries
     * carry `col=value` leaf keys in their paths), or "bucketed"
-    * (directory-self-contained, no entries; reads scan the dir).
+    * (entry file names carry bucket ids; `bucketing` is the spec).
     */
   private[exec] final case class VersionManifest(
       layout: String, partitionBy: Seq[String], entries: Seq[MEntry],
@@ -605,7 +623,8 @@ final class RelationStore(
         */
       baseVersion: Int,
       /** Commit wall-clock (epoch ms). */
-      commitTs: Long)
+      commitTs: Long,
+      bucketing: Option[BucketSpec])
 
   private def manifestFile(name: String, v: Int): HPath =
     new HPath(verDir(name, v), "_manifest.json")
@@ -639,10 +658,12 @@ final class RelationStore(
     }
 
   /** Parse a manifest [[writeManifestCommit]] wrote. Every field is
-    * required: content that does not parse, or lacks a field, fails
-    * loudly and names the file (as [[markAt]] does for
-    * `_delta_watermark`) — a guessed default could skip live files or
-    * adopt a conflicted orphan.
+    * required (`bucket_by` and `buckets` for a bucketed layout):
+    * content that does not parse, or lacks a field, fails loudly and
+    * names the file (as [[markAt]] does for `_delta_watermark`) — a
+    * guessed default could skip live files or adopt a conflicted
+    * orphan, and a bucketed version read as entry-less would let GC
+    * reclaim the files it scans.
     */
   private def parseManifest(name: String, v: Int, raw: String): VersionManifest = {
     val file = manifestFile(name, v)
@@ -673,9 +694,15 @@ final class RelationStore(
     val stats = rawStats.map(x => if (x == null) None else FileStats.fromJsonValue(x, st))
     val layout = String.valueOf(field("layout"))
     if (!Set("files", "partitioned", "bucketed")(layout)) throw corrupt(s"unknown layout '$layout'")
+    val bucketing = if (layout != "bucketed") None else {
+      val keys = list("bucket_by").map(String.valueOf(_))
+      val n = num("buckets", field("buckets")).toInt
+      if (keys.isEmpty || n <= 0) throw corrupt(s"bucket spec $keys into $n buckets")
+      Some(BucketSpec(n, keys, keys))
+    }
     VersionManifest(layout, list("partition_by").map(String.valueOf(_)),
       files.lazyZip(sizes).lazyZip(stats).map(MEntry(_, _, _)).toSeq,
-      num("base", field("base")).toInt, num("ts", field("ts")).toLong)
+      num("base", field("base")).toInt, num("ts", field("ts")).toLong, bucketing)
   }
 
   /** Physical data files under a version dir as manifest entries.
@@ -731,13 +758,15 @@ final class RelationStore(
     }
   }
 
-  /** Data-file entries of version `v`: the manifest's, or the physical
-    * listing of a bucketed version's dir — the files a later version
-    * may carry by reference.
+  /** Entries of landed delta `id`: its data files, with the column
+    * stats its landing recorded in the sidecar (none without `sc`).
     */
-  private def versionEntries(name: String, v: Int): Seq[MEntry] = {
-    val m = manifestAt(name, v)
-    if (m.layout == "bucketed") physicalEntries(name, v) else m.entries
+  private def deltaEntries(name: String, id: Long, sc: Option[StructType]): Seq[MEntry] = {
+    val dir = deltaDirOf(name, id)
+    val sidecar = sc.fold(Map.empty[String, FileStats])(readStatsSidecar(dir, _))
+    dataFilesIn(dir).map { st =>
+      MEntry(relTo(tableDir(name), st.getPath), st.getLen, sidecar.get(st.getPath.getName))
+    }
   }
 
   /** A manifest entry as a Hadoop FileStatus (no filesystem call —
@@ -794,11 +823,6 @@ final class RelationStore(
       require(asOfVersion.isEmpty, s"$schema.$name is a view; views have no version history")
       return spark.sql(readStr(viewFile(name)))
     }
-    if (isBucketed(name) && asOfVersion.isEmpty)
-      // the catalog relation carries the bucket spec; a raw path read
-      // would lose it and joins would re-shuffle
-      return spark.table(ensureBucketedRegistered(name))
-
     val cur = currentVersion(name)
     val (baseVer, live): (Option[Int], Seq[Long]) = asOfVersion match {
       case Some(v) =>
@@ -818,57 +842,25 @@ final class RelationStore(
           throw new IllegalStateException(s"relation not found: $schema.$name")
         (cur, l)
     }
-    val schemaDirs = baseVer.map(verDir(name, _)).toSeq ++ live.map(deltaDirOf(name, _))
-    val stored = schemaDirs.map(d => new HPath(d, "_graft_schema.json"))
-      .find(fsExists).map { f =>
-        org.apache.spark.sql.types.DataType.fromJson(readStr(f)).asInstanceOf[StructType]
-      }
-    // the base version scans through the manifest index: no directory
-    // listing, no stat calls, and partition values/pruning served from
-    // the manifest itself. A bucketed version (time travel only — the
-    // head reads through its catalog table above) scans its own dir.
-    val base: Option[DataFrame] = baseVer.flatMap { v =>
-      val m = manifestAt(name, v)
-      if (m.layout == "bucketed") Some(spark.read.parquet(verDir(name, v).toString))
-      else if (m.entries.isEmpty) None
-      else {
-        val st = stored.getOrElse(throw new IllegalStateException(
-          s"manifest version without stored schema: $schema.$name v$v"))
-        val byLeaf = m.entries.groupBy(_.leafKey).toSeq.sortBy(_._1)
-          .map { case (k, es) =>
-            k -> es.map(e => (entryStatus(name, e), e.stats))
-          }
-        Some(ManifestFileIndex.datasetWithStatsFor(
-          spark, fs.makeQualified(tableDir(name)), st, m.partitionBy, byLeaf))
-      }
-    }
-    val deltas: Option[DataFrame] =
-      if (live.isEmpty) None
-      else {
-        val reader = stored.fold(spark.read)(st => spark.read.schema(st))
-        Some(reader.parquet(live.map(id => deltaDirOf(name, id).toString): _*))
-      }
-    val df = (base, deltas) match {
-      case (Some(b), Some(d)) => b.unionByName(d)
-      case (Some(b), None) => b
-      case (None, Some(d)) => d
-      case (None, None) =>
-        // zero data files (empty table / empty epoch landings only):
-        // an empty frame in the exact stored schema
-        return spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          stored.getOrElse(throw new IllegalStateException(
-            s"relation $schema.$name has no data and no stored schema")))
-    }
-    // restore the exact written schema (column order + types): the
-    // manifest index serves stored types already, so for manifest
-    // versions the casts collapse to column reordering
-    stored match {
-      case Some(st) =>
-        df.select(st.fields.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)): _*)
-      case None => df
-    }
+    val stored = schemaIn(baseVer.map(verDir(name, _)).toSeq ++ live.map(deltaDirOf(name, _)))
+      .getOrElse(throw new IllegalStateException(s"relation $schema.$name has no stored schema"))
+    // ONE manifest-index scan over the base version's entries plus the
+    // live deltas' files: no directory listing of the base, no stat
+    // calls, partition values/pruning and per-file skipping served from
+    // the manifest itself
+    val m = baseVer.map(manifestAt(name, _))
+    val byLeaf = (m.toSeq.flatMap(_.entries) ++ live.flatMap(deltaEntries(name, _, Some(stored))))
+      .groupBy(_.leafKey).toSeq.sortBy(_._1)
+      .map { case (k, es) => k -> es.map(e => (entryStatus(name, e), e.stats)) }
+    // delta files carry no bucket ids: a bucketed base with deltas
+    // landed past it (a landing that raced the bucketed commit) scans
+    // unbucketed rather than fail
+    val bucketing = m.flatMap(_.bucketing).filter(_ => live.isEmpty)
+    val df = ManifestFileIndex.datasetWithStatsFor(spark, fs.makeQualified(tableDir(name)),
+      stored, m.fold(Seq.empty[String])(_.partitionBy), byLeaf, bucketing)
+    // restore the written column order (the index serves the stored
+    // types, with partition columns last)
+    df.select(stored.fieldNames.toSeq.map(org.apache.spark.sql.functions.col): _*)
   }
 
   /** Version directories of a table, ascending: committed ones (at or
@@ -1001,12 +993,7 @@ final class RelationStore(
       minKeepTs.fold(Set.empty[Int])(ts =>
         committed.filter(v => commitTimestamp(name, v).exists(_ >= ts)).toSet)
     val referenced: Set[String] =
-      retained.flatMap(v => manifestOf(name, v) match {
-        // bucketed versions are directory-self-contained; nothing
-        // cross-references into them
-        case Some(m) if m.layout != "bucketed" => m.entries.map(_.rel)
-        case _ => Nil
-      })
+      retained.flatMap(v => manifestOf(name, v).toSeq.flatMap(_.entries.map(_.rel)))
     var reclaimed = 0
     // NEVER gut a PUBLISHED manifest above this pass's head snapshot
     // (manifest, marker gone): it is a commit that landed while we were
@@ -1069,8 +1056,10 @@ final class RelationStore(
     }
     // absorbed deltas (id ≤ watermark, or in the above-gap absorbed
     // set) are reclaimable only when no retained manifest references a
-    // file inside them
-    val mark = currentMark(name)
+    // file inside them. Absorbed as of THIS pass's head: a fold that
+    // commits during the pass absorbs deltas its new manifest
+    // references, which `referenced` (retained ≤ cur) never saw
+    val mark = markAt(name, Some(cur))
     listNames(deltaRoot(name)).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("b") && n.drop(1).forall(_.isDigit) &&
@@ -1212,9 +1201,9 @@ final class RelationStore(
 
   /** Land one micro-batch as an immutable delta directory. Returns false
     * (and evaluates NOTHING — `df` stays lazy) when `batchId` already
-    * landed. Refuses bucketed/partitioned-layout bases: deltas are flat
-    * parquet dirs unioned into the read, which would silently discard a
-    * bucket spec or partition columns.
+    * landed. Refuses bucketed/partitioned-layout bases: delta files are
+    * scanned with the base's, and carry neither partition values in
+    * their paths nor bucket ids in their names.
     */
   def appendDelta(df: DataFrame, name: String, batchId: Long): Boolean = {
     // replay guard FIRST: an epoch that already landed must skip
@@ -1236,10 +1225,8 @@ final class RelationStore(
           "concurrentWriters=false if exactly one writer process lands here, " +
           "or supply an external CommitCoordinator.")
     require(!isView(name), s"cannot land deltas into view $schema.$name")
-    require(!isBucketed(name),
-      s"cannot land deltas into bucketed relation $schema.$name")
-    require(currentVersion(name).isEmpty || !isPartitionedLayout(name),
-      s"cannot land deltas into partitioned-layout relation $schema.$name")
+    headLayout(name).foreach(l =>
+      require(l == "files", s"cannot land deltas into $l-layout relation $schema.$name"))
     // same column names + types as the landed content — the read path
     // unions the files, so drift would surface as torn schemas later
     storedSchemaOf(name).foreach { stored =>
@@ -1372,7 +1359,7 @@ final class RelationStore(
           w = above.head._2
           above = above.tail
         }
-        val prevEntries = base.toSeq.flatMap(v => versionEntries(name, v))
+        val prevEntries = base.toSeq.flatMap(manifestAt(name, _).entries)
         val schemaSrc = (base.map(verDir(name, _)).toSeq ++ live.map(deltaDirOf(name, _)))
           .map(d => new HPath(d, "_graft_schema.json")).find(fsExists)
         val foldSchema = schemaSrc.map(s =>
@@ -1381,13 +1368,7 @@ final class RelationStore(
         // (the `_graft_stats.json` sidecar) into the manifest — the
         // fold reads one tiny sidecar per delta and ZERO parquet
         // footers, and still writes zero data bytes
-        val deltaEntries = live.flatMap { id =>
-          val dir = deltaDirOf(name, id)
-          val sidecar = foldSchema.fold(Map.empty[String, FileStats])(readStatsSidecar(dir, _))
-          dataFilesIn(dir).map { st =>
-            MEntry(relTo(tableDir(name), st.getPath), st.getLen, sidecar.get(st.getPath.getName))
-          }
-        }
+        val landed = live.flatMap(deltaEntries(name, _, foldSchema))
         schemaSrc.foreach(s =>
           writeStr(new HPath(verDir(name, n), "_graft_schema.json"), readStr(s)))
         writeStr(new HPath(verDir(name, n), "_delta_watermark"), w.toString)
@@ -1398,7 +1379,7 @@ final class RelationStore(
         // belt-and-braces: never list one physical file twice even if
         // a future base/watermark skew slips through
         val prevRels = prevEntries.map(_.rel).toSet
-        Some(("files", Nil, prevEntries ++ deltaEntries.filterNot(e => prevRels(e.rel))))
+        Some(("files", Nil, prevEntries ++ landed.filterNot(e => prevRels(e.rel))))
       }
     }).fold(0)(_ => folded)
   }
@@ -1406,19 +1387,22 @@ final class RelationStore(
   /** The stored schema of the current landed content (base version's, or
     * the oldest live delta's for a delta-only table).
     */
-  private def storedSchemaOf(name: String): Option[StructType] = {
-    val candidates = currentVersion(name).map(verDir(name, _)).toSeq ++
-      liveDeltaIds(name).map(deltaDirOf(name, _))
-    candidates.map(d => new HPath(d, "_graft_schema.json")).find(fsExists).map { f =>
+  private def storedSchemaOf(name: String): Option[StructType] =
+    schemaIn(currentVersion(name).map(verDir(name, _)).toSeq ++
+      liveDeltaIds(name).map(deltaDirOf(name, _)))
+
+  /** The `_graft_schema.json` of the first of `dirs` that has one. */
+  private def schemaIn(dirs: Seq[HPath]): Option[StructType] =
+    dirs.map(d => new HPath(d, "_graft_schema.json")).find(fsExists).map { f =>
       org.apache.spark.sql.types.DataType.fromJson(readStr(f)).asInstanceOf[StructType]
     }
-  }
 
   /** Write a new version and commit it (stage into a reserved slot,
     * publish the manifest, verify headship — [[commitHead]]).
     * `partitionBy` lays the version out as partitioned parquet dirs —
     * on a cluster that's what makes event-time `replaceWhere` windows
     * and partition-pruned scans O(touched partitions), not O(table).
+    * `bucketing` lays it out bucketed instead ([[writeBucketed]]).
     */
   def write(df: DataFrame, name: String, partitionBy: Seq[String] = Nil,
       /** Pre-commit validation over the WRITTEN files (constraint
@@ -1433,13 +1417,31 @@ final class RelationStore(
         * A replayed foreachBatch epoch checks [[lastBatchTag]] ≥ its id
         * and skips the non-idempotent merge.
         */
-      batchTag: Option[Long] = None): Unit = {
+      batchTag: Option[Long] = None,
+      bucketing: Option[BucketSpec] = None): Unit = {
+    require(partitionBy.isEmpty || bucketing.isEmpty,
+      s"write($name): a version is either partitioned or bucketed")
     val slot = reserveVersion(name, currentVersion(name).getOrElse(-1) + 1)
     val dest = verDir(name, slot)
     try withStagingHeartbeat(name, slot) {
       val writer = df.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(dest.toString)
+      bucketing match {
+        case Some(b) =>
+          // the catalog CTAS is the one Spark writer that names files
+          // by bucket id. It stages under a name unique to this slot
+          // (external table: the drop is metadata only), so the
+          // catalog holds nothing once the write returns
+          val staging = s"graft_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+          try writer
+            .bucketBy(b.numBuckets, b.bucketColumnNames.head, b.bucketColumnNames.tail: _*)
+            .sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*)
+            .option("path", dest.toString)
+            .saveAsTable(staging)
+          finally spark.sql(s"DROP TABLE IF EXISTS $staging")
+        case None =>
+          (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+            .parquet(dest.toString)
+      }
       // leading "_" files are invisible to parquet FileIndex (like _SUCCESS)
       writeStr(new HPath(dest, "_graft_schema.json"), df.schema.json)
       batchTag.foreach(t => writeStr(new HPath(dest, "_graft_batch"), t.toString))
@@ -1448,8 +1450,8 @@ final class RelationStore(
       validate.foreach(v => v(spark.read.parquet(dest.toString)))
     } catch { case e: Throwable => releaseSlot(name, slot); throw e }
     val entries = physicalEntries(name, slot, statsSchema = Some(df.schema))
-    val layout = if (partitionBy.nonEmpty) "partitioned" else "files"
-    dropBucketing(name)
+    val layout =
+      if (bucketing.isDefined) "bucketed" else if (partitionBy.nonEmpty) "partitioned" else "files"
     commitHead(name, slot, { (n, base) =>
       // a full write REPLACES the table's content: every delta landed
       // up to the commit moment is superseded — re-derived per attempt
@@ -1466,7 +1468,7 @@ final class RelationStore(
       if (supersededWm >= 0)
         writeStr(new HPath(verDir(name, n), "_delta_watermark"), supersededWm.toString)
       Some((layout, partitionBy, entries))
-    })
+    }, bucketing)
   }
 
   /** Batch tag recorded by the current version's commit, if any. */
@@ -1477,125 +1479,23 @@ final class RelationStore(
     }
 
   /** Bucketed CTAS (reference: warehouse clustering/bucketing DDL the
-    * adapters render; Spark-side this is `CLUSTERED BY … INTO n BUCKETS`).
-    * The version directory is identical to [[write]]'s, but the commit
-    * ALSO records a session-catalog table whose metadata carries the
-    * bucket spec — Spark only honors bucketing through the catalog, a
-    * path read silently discards it. Two relations bucketed on the same
-    * keys into the same bucket count join with ZERO Exchange (and zero
-    * Sort, thanks to sortBy): at 100 TB that deletes the dominant
+    * adapters render; Spark-side this is `CLUSTERED BY … INTO n BUCKETS`):
+    * a [[write]] whose version is bucketed and sorted on `bucketBy`.
+    * Two relations bucketed on the same keys into the same bucket count
+    * join with ZERO Exchange: at 100 TB that deletes the dominant
     * shuffle of every recurring fact-to-fact join on the bucket key.
     */
-  def writeBucketed(df: DataFrame, name: String, bucketBy: Seq[String], buckets: Int): Unit = {
+  def writeBucketed(df: DataFrame, name: String, bucketBy: Seq[String], buckets: Int,
+      validate: Option[DataFrame => Unit] = None): Unit = {
     require(bucketBy.nonEmpty && buckets > 0, "bucketed write needs keys and a bucket count")
-    val slot = reserveVersion(name, currentVersion(name).getOrElse(-1) + 1)
-    val dest = verDir(name, slot)
-    val cat = catalogName(name)
-    // Stage through a scratch catalog name: the LIVE table stays intact
-    // until the data write has fully succeeded — same
-    // failed-writes-never-corrupt discipline as write().
-    val staging = cat + "__staging"
-    try withStagingHeartbeat(name, slot) {
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-      df.write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, bucketBy.head, bucketBy.tail: _*)
-        .sortBy(bucketBy.head, bucketBy.tail: _*)
-        .option("path", dest.toString)
-        .saveAsTable(staging)
-      writeStr(new HPath(dest, "_graft_schema.json"), df.schema.json)
-      spark.sql(s"DROP TABLE IF EXISTS $staging") // metadata only (external)
-    } catch { case e: Throwable => releaseSlot(name, slot); throw e }
-    // a bucketed version is directory-self-contained (the catalog
-    // relation points at ITS dir), so it cannot re-slot by manifest
-    // reference — a concurrent commit racing a bucketed CTAS aborts
-    // cleanly (staged slot demoted, LIVE table and its catalog/marker
-    // untouched) and asks for a rerun
-    val committed = commitHead(name, slot, { (n, _) =>
-      if (n != slot) None
-      else {
-        // bucketed CTAS refuses re-slots, so the base is whatever the
-        // published head says; supersede every delta live against it
-        val headMark = currentMark(name)
-        val supersededWm =
-          (headMark.maxAbsorbed +: liveDeltaIdsAt(name, headMark): Seq[Long]).max
-        if (supersededWm >= 0)
-          writeStr(new HPath(verDir(name, n), "_delta_watermark"), supersededWm.toString)
-        Some(("bucketed", Nil, Nil))
-      }
-    })
-    if (committed.isEmpty)
-      throw new IllegalStateException(
-        s"concurrent commit raced bucketed CTAS of $schema.$name — rerun the model")
-    // the version is committed: NOW swap the catalog metadata (doing it
-    // pre-commit would leave a dropped catalog + a marker pointing at
-    // an uncommitted slot if the commit aborted)
-    spark.sql(s"DROP TABLE IF EXISTS $cat")
-    writeStr(bucketedFile(name), graft.artifacts.Json.write(Map(
-      "catalog" -> cat, "bucket_by" -> bucketBy, "buckets" -> buckets)))
-    registerCatalog(cat, dest, bucketBy, buckets)
-    registerView(name) // re-register through the (new) bucketed path
+    write(df, name, validate = validate, bucketing = Some(BucketSpec(buckets, bucketBy, bucketBy)))
   }
 
-  private def bucketedFile(name: String): HPath = new HPath(tableDir(name), "_bucketed")
+  /** Whether the head version is bucketed (its manifest's layout). */
+  def isBucketed(name: String): Boolean = headLayout(name).contains("bucketed")
 
-  def isBucketed(name: String): Boolean = fsExists(bucketedFile(name))
-
-  /** Catalog name + spec recorded by the last bucketed commit. */
-  private def bucketSpec(name: String): (String, Seq[String], Int) =
-    graft.artifacts.Json.parse(readStr(bucketedFile(name))) match {
-      case m: Map[String @unchecked, Any @unchecked] =>
-        (m("catalog").toString,
-          m("bucket_by").asInstanceOf[Seq[Any]].map(String.valueOf(_)),
-          m("buckets").toString.toDouble.toInt)
-      case _ => throw new IllegalStateException(s"corrupt ${bucketedFile(name)}: not a JSON object")
-    }
-
-  /** The session catalog is in-memory — a fresh JVM forgets the table
-    * even though marker + files survive. Recreate the external bucketed
-    * table over the current version on demand (CLUSTERED BY metadata;
-    * the bucket ids live in the file names, so re-registration is pure
-    * metadata).
-    */
-  private def ensureBucketedRegistered(name: String): String = {
-    val (cat, keys, n) = bucketSpec(name)
-    if (!spark.catalog.tableExists(cat)) {
-      val p = currentPath(name).getOrElse(
-        throw new IllegalStateException(s"bucketed relation without version: $schema.$name"))
-      registerCatalog(cat, new HPath(p), keys, n)
-    }
-    cat
-  }
-
-  private def registerCatalog(cat: String, dest: HPath, keys: Seq[String], n: Int): Unit = {
-    val stored = org.apache.spark.sql.types.DataType
-      .fromJson(readStr(new HPath(dest, "_graft_schema.json")))
-      .asInstanceOf[StructType]
-    val keyList = keys.mkString(", ")
-    spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $cat (${stored.toDDL}) USING parquet
-         |CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO $n BUCKETS
-         |LOCATION '${dest.toString}'""".stripMargin)
-  }
-
-  /** A relation that stops being bucketed (config removed, or an
-    * incremental path writes it) must not keep serving the stale
-    * catalog table — clear marker + metadata before the new commit.
-    */
-  private def dropBucketing(name: String): Unit =
-    if (isBucketed(name)) {
-      spark.sql(s"DROP TABLE IF EXISTS ${bucketSpec(name)._1}")
-      fs.delete(bucketedFile(name), false)
-    }
-
-  /** Session-catalog identifier for a bucketed relation — root-hashed so
-    * stores over different warehouse dirs (parallel tests, defer stores)
-    * never collide in the shared catalog.
-    */
-  private def catalogName(name: String): String = {
-    val rootTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_${rootTag}_${schema}__$name".replaceAll("[^A-Za-z0-9_]", "_")
-  }
+  private def headLayout(name: String): Option[String] =
+    currentVersion(name).map(manifestAt(name, _).layout)
 
   /** Partition-scoped commit: `df` holds the FULL replacement content of
     * the partitions it touches (and nothing else); every leaf partition
@@ -1650,7 +1550,6 @@ final class RelationStore(
         val ne = physicalEntries(name, slot, statsSchema = Some(df.schema))
         (ne, ne.map(_.leafKey).toSet, dr)
       } catch { case e: Throwable => releaseSlot(name, slot); throw e }
-    dropBucketing(name)
     commitHead(name, slot, { (_, base) =>
       // carry every BASE entry whose leaf was neither re-written
       // (present among the new physical files) nor touched-to-empty —
@@ -1662,7 +1561,7 @@ final class RelationStore(
             throw new IllegalStateException(
               s"writePartitions($name): concurrent schema change under a " +
                 "partition-scoped commit — rerun the model")
-          val carried = versionEntries(name, b)
+          val carried = manifestAt(name, b).entries
             .filter(e => !written.contains(e.leafKey) && !dropped.contains(e.leafKey))
           Some(("partitioned", partitionBy, newEntries ++ carried))
         case None => // table vanished mid-flight: commit our partitions alone
@@ -1709,8 +1608,7 @@ final class RelationStore(
     * so a partition-scoped commit against it would silently drop every
     * untouched row; callers must full-write once to re-layout.
     */
-  def isPartitionedLayout(name: String): Boolean =
-    currentVersion(name).exists(manifestAt(name, _).layout == "partitioned")
+  def isPartitionedLayout(name: String): Boolean = headLayout(name).contains("partitioned")
 
   /** Whether `schema` is byte-identical to the current version's stored
     * schema (the precondition for a partition-scoped commit).
@@ -2114,24 +2012,19 @@ final class RelationStore(
     if (isView(name)) Some(readStr(viewFile(name))) else None
 
   /** SQL-addressable reference to this relation usable from ANOTHER
-    * session/store (defer/clone): a direct parquet path for
-    * directory-layout tables, per-file selects for manifest versions
-    * whose files span dirs, an inline subquery for views.
+    * session/store (defer/clone): a direct parquet path for a version
+    * whose files all live in its own dir, per-file selects for
+    * manifest versions whose files span dirs, an inline subquery for
+    * views.
     */
   def addressable(name: String): Option[String] =
     if (isView(name)) viewSql(name).map(sql => s"(\n$sql\n)")
-    else if (isBucketed(name)) Some(ensureBucketedRegistered(name))
     else {
       def dirSel(p: String) = s"SELECT * FROM parquet.`$p`"
       val live = liveDeltaIds(name).map(id => dirSel(deltaDirOf(name, id).toString))
       val base: Seq[String] = currentVersion(name).toSeq.flatMap { v =>
         val m = manifestAt(name, v)
         m.layout match {
-          case "files" =>
-            if (m.entries.isEmpty) Nil
-            else if (m.entries.forall(_.rel.startsWith(s"v$v/")))
-              Seq(dirSel(verDir(name, v).toString)) // self-contained
-            else m.entries.map(e => dirSel(new HPath(tableDir(name), e.rel).toString))
           case "partitioned" =>
             // partition columns don't live in the data files: project
             // each entry's leaf values back as typed literals, in the
@@ -2156,7 +2049,11 @@ final class RelationStore(
               s"SELECT ${cols.mkString(", ")} FROM parquet.`" +
                 s"${new HPath(tableDir(name), e.rel)}`"
             }
-          case _ => Seq(dirSel(verDir(name, v).toString)) // bucketed: self-contained dir
+          case _ =>
+            if (m.entries.isEmpty) Nil
+            else if (m.entries.forall(_.rel.startsWith(s"v$v/")))
+              Seq(dirSel(verDir(name, v).toString)) // self-contained
+            else m.entries.map(e => dirSel(new HPath(tableDir(name), e.rel).toString))
         }
       }
       (base ++ live) match {
@@ -2184,11 +2081,12 @@ final class RelationStore(
   def health(name: String): Map[String, Any] = {
     if (isView(name)) return Map("kind" -> "view")
     val cur = currentVersion(name)
-    val entries = cur.toSeq.flatMap(v => versionEntries(name, v))
+    val m = cur.map(manifestAt(name, _))
+    val entries = m.toSeq.flatMap(_.entries)
     val pool = dataFilesUnder(tableDir(name))
     val mark = currentMark(name)
     Map(
-      "kind" -> (if (isBucketed(name)) "bucketed" else "table"),
+      "kind" -> (if (m.exists(_.layout == "bucketed")) "bucketed" else "table"),
       "versions_retained" -> versions(name).size,
       "current_version" -> cur.getOrElse(-1),
       "live_files" -> entries.size,

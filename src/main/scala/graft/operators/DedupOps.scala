@@ -892,9 +892,9 @@ object DedupOps {
     store.writeBucketed(idx.sizes, s"${prefix}_sizes", Seq("doc_id"), buckets)
   }
 
-  /** Reload a bucketed index written by [[persistDedupIndex]] — reads
-    * go through the catalog relation so the bucket spec survives and
-    * probe joins keep their shuffle-free index side.
+  /** Reload a bucketed index written by [[persistDedupIndex]] — each
+    * read scans the version's manifest with its recorded bucket spec,
+    * so probe joins keep their shuffle-free index side.
     */
   def loadDedupIndex(store: graft.exec.RelationStore, prefix: String): DedupIndex =
     DedupIndex(

@@ -29,6 +29,12 @@ object TextOps {
   /** lower + strip non-alphanumerics + collapse runs → canonical text. */
   def normalized(c: Column): Column = trim(regexp_replace(lower(c), "[^a-z0-9]+", " "))
 
+  /** floor(log2 c) for c ≥ 1 as a long — the floored-bits device
+    * (`length(bin(c)) - 1`) the idf and PMI scores share, exact
+    * integer arithmetic in every engine.
+    */
+  private def flog2(c: Column): Column = (length(bin(c)) - lit(1)).cast("long")
+
   /** Token/char statistics per document. */
   def txtStats(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(
@@ -717,7 +723,6 @@ object TextOps {
 
   private def txtBm25TopKUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    def flog2(c: Column): Column = (length(bin(c)) - lit(1)).cast("long")
     val toks = docs(s, dir)
       .select(col("doc_id"),
         explode(filter(split(normalized(col("text")), " "), t => t =!= "")).as("term"))
@@ -803,7 +808,6 @@ object TextOps {
     * to the driver). No window, no broadcast of anything corpus-sized.
     */
   def txtPmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    def flog2(c: Column): Column = (length(bin(c)) - lit(1)).cast("long")
     val words = docs(s, dir)
       .select(filter(split(normalized(col("text")), " "), t => t =!= "").as("w"))
     val uni = words
@@ -903,7 +907,6 @@ object TextOps {
     * the streaming scorer broadcasts (never retrained in the hot path).
     */
   def tfidfIdf(documents: DataFrame): DataFrame = {
-    def flog2(c: Column): Column = (length(bin(c)) - lit(1)).cast("long")
     val tf = shingleTf(documents)
     val nDocs = tf.select(col("doc_id")).distinct().agg(count(lit(1)).as("n_docs"))
     tf.groupBy(col("term")).agg(count(lit(1)).as("df"))

@@ -97,6 +97,30 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sweeper.read("t").count() == head.size)
   }
 
+  test("concurrent bucketed writes: linear chain, no writer throws, every version bucketed") {
+    val root = newRoot()
+    val writers = (0 until 3).map(_ => new RelationStore(spark, root, retainVersions = 10))
+    // a bucketed commit that loses the race re-slots above the new head
+    // like any other write: its staged files stay put
+    inParallel(writers.zipWithIndex.map { case (w, i) =>
+      () => w.writeBucketed(df((0L until 20L).map(k => (k, s"w$i"))), "t", Seq("id"), 4)
+    }: _*)
+    val fresh = new RelationStore(spark, root)
+    val vs = fresh.versions("t")
+    assert(vs.size == 3 && vs == vs.sorted, s"non-linear chain: $vs")
+    assert(fresh.isBucketed("t"))
+    val owners = vs.map { v =>
+      val agg = fresh.read("t", Some(v)).groupBy(col("id")).agg(max(col("v")).as("w"))
+      val rows = agg.collect()
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(plan.contains("SelectedBucketsCount: 4 out of 4") && !plan.contains("Exchange"), plan)
+      assert(rows.length == 20, s"v$v: ${rows.length} keys")
+      rows.map(_.getString(1)).toSet
+    }
+    assert(owners.toSet == Set(Set("w0"), Set("w1"), Set("w2")), s"torn versions: $owners")
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_")))
+  }
+
   test("concurrent delta landings + racing folds: both writers' rows all present") {
     val root = newRoot()
     val a = new RelationStore(spark, root, deltaFoldEvery = 3)

@@ -661,7 +661,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rc2.forall(_.status == "success"), rc2.mkString("\n"))
   }
 
-  test("29 bucket_by config materializes a catalog-bucketed table") {
+  test("29 bucket_by config materializes a bucketed table") {
     val db = Files.createTempDirectory("graft_bucket_proj")
     def wb(rel: String, c: String): Unit = {
       val p = db.resolve(rel); Files.createDirectories(p.getParent); Files.writeString(p, c)
@@ -677,10 +677,13 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rb.forall(_.status == "success"), rb.mkString("\n"))
     assert(stb.isBucketed("facts"))
     assert(stb.read("facts").count() == 100)
-    // the catalog relation carries the bucket spec into downstream plans
-    val cat = stb.addressable("facts").get
-    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $cat").collect().map(_.mkString("|")).mkString("\n")
-    assert(desc.contains("Num Buckets") && desc.contains("4"), desc)
+    // the read carries the bucket spec into downstream plans: an
+    // aggregate on the bucket key scans 4 buckets and never shuffles
+    val agg = stb.read("facts").groupBy("k").count()
+    assert(agg.collect().map(_.getLong(1)).sum == 100)
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(plan.contains("SelectedBucketsCount: 4 out of 4"), plan)
+    assert(!plan.contains("Exchange"), plan)
   }
 
   test("30 fail-fast aborts unscheduled nodes; warn-error escalates warnings") {

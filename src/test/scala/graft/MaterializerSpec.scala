@@ -464,23 +464,31 @@ class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the store reads only the manifest shape it writes: a stripped
     // field is corruption to surface, never a value to guess
     val root = java.nio.file.Files.createTempDirectory("strict_wh").toString
-    new graft.exec.RelationStore(spark, root).write(df(Seq((1L, "a"), (2L, "b"))), "t_strict")
+    val writer = new graft.exec.RelationStore(spark, root)
+    writer.write(df(Seq((1L, "a"), (2L, "b"))), "t_strict")
+    // a bucketed manifest also requires its spec: read as entry-less,
+    // retention would reclaim the files the version scans
+    writer.writeBucketed(df(Seq((1L, "a"), (2L, "b"))), "t_bstrict", Seq("id"), 2)
     val fresh = new graft.exec.RelationStore(spark, root)
-    val mf = java.nio.file.Paths.get(fresh.currentPath("t_strict").get).resolve("_manifest.json")
-    val raw = java.nio.file.Files.readString(mf)
-    val fields = graft.artifacts.Json.parse(raw).asInstanceOf[Map[String, Any]]
-    // rewritten outside Hadoop: drop the checksum sibling so the read
-    // sees the edited content, not a checksum mismatch
-    java.nio.file.Files.deleteIfExists(mf.resolveSibling("._manifest.json.crc"))
-    for (k <- Seq("sizes", "ts")) {
-      assert(fields.contains(k), raw)
-      java.nio.file.Files.writeString(mf, graft.artifacts.Json.write(fields - k))
-      val err = intercept[IllegalStateException](fresh.read("t_strict"))
-      assert(err.getMessage.contains(mf.toString) && err.getMessage.contains(s"'$k'"),
-        err.getMessage)
+    for ((t, keys) <- Seq("t_strict" -> Seq("sizes", "ts"), "t_bstrict" -> Seq("buckets", "bucket_by"))) {
+      val mf = java.nio.file.Paths.get(fresh.currentPath(t).get).resolve("_manifest.json")
+      val raw = java.nio.file.Files.readString(mf)
+      val fields = graft.artifacts.Json.parse(raw).asInstanceOf[Map[String, Any]]
+      // rewritten outside Hadoop: drop the checksum sibling so the read
+      // sees the edited content, not a checksum mismatch
+      java.nio.file.Files.deleteIfExists(mf.resolveSibling("._manifest.json.crc"))
+      for (k <- keys) {
+        assert(fields.contains(k), raw)
+        java.nio.file.Files.writeString(mf, graft.artifacts.Json.write(fields - k))
+        for (op <- Seq(() => fresh.read(t), () => fresh.vacuum(t, keepLast = 1))) {
+          val err = intercept[IllegalStateException](op())
+          assert(err.getMessage.contains(mf.toString) && err.getMessage.contains(s"'$k'"),
+            err.getMessage)
+        }
+      }
+      java.nio.file.Files.writeString(mf, raw)
+      assert(fresh.read(t).count() == 2)
     }
-    java.nio.file.Files.writeString(mf, raw)
-    assert(fresh.read("t_strict").count() == 2)
   }
 
   test("vacuum reclaims torn (uncommitted) versions, never committed history") {

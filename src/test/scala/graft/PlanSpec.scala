@@ -261,32 +261,37 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("l_orderkey"), col("l_quantity"))
     store.writeBucketed(orders, "ord_b", Seq("o_orderkey"), 8)
     store.writeBucketed(items, "li_b", Seq("l_orderkey"), 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = store.read("ord_b").join(store.read("li_b"),
-        col("o_orderkey") === col("l_orderkey"))
+    def assertCoBucketedJoin(ord: org.apache.spark.sql.DataFrame,
+        li: org.apache.spark.sql.DataFrame): Unit = {
+      val joined = ord.join(li, col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderkey")).agg(sum(col("l_quantity")).as("q"))
       val plan = executedPhysical(joined)
       assert(plan.contains("SortMergeJoin"), plan.take(1500))
+      // both sides scan bucketed, with the spec the manifest recorded
+      assert("SelectedBucketsCount: 8 out of 8".r.findAllIn(plan).size == 2, plan.take(2500))
       // the whole point of co-bucketing: neither side shuffles, and the
       // groupBy on the bucket key reuses the layout too
       assert(!plan.contains("Exchange"), s"unexpected shuffle:\n${plan.take(2500)}")
       assert(joined.count() > 0)
+    }
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assertCoBucketedJoin(store.read("ord_b"), store.read("li_b"))
+      // the spec lives in the manifests alone: a fresh handle on the
+      // same root (a new process attaching the warehouse) and a
+      // time-travel read of the bucketed versions plan the same way
+      val fresh = new RelationStore(spark, store.root)
+      assertCoBucketedJoin(fresh.read("ord_b"), fresh.read("li_b"))
+      assertCoBucketedJoin(store.read("ord_b", Some(store.versions("ord_b").max)),
+        store.read("li_b", Some(store.versions("li_b").max)))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    // a fresh attach still reads through the catalog (bucket spec intact)
-    store.registerView("ord_b")
+    // the session view a commit registers serves the same rows, and no
+    // catalog table is left behind by the bucketed writes
     assert(spark.table("ord_b").count() == orders.count())
-    // fresh-JVM simulation: the in-memory catalog forgot the table, but
-    // the on-disk marker re-registers it (bucket ids live in file names)
-    val cat = store.addressable("ord_b").get
-    spark.sql(s"DROP TABLE IF EXISTS $cat")
-    assert(store.read("ord_b").count() == orders.count())
-    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED ${store.addressable("ord_b").get}")
-      .collect().map(_.mkString("|")).mkString("\n")
-    assert(desc.contains("Num Buckets"), desc)
-    // a plain write over a bucketed relation clears the stale catalog
-    // binding instead of serving the old version
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_")),
+      spark.catalog.listTables().collect().mkString("\n"))
+    // a plain write over a bucketed relation commits a flat version
     store.write(orders.limit(10), "ord_b")
     assert(!store.isBucketed("ord_b"))
     assert(store.read("ord_b").count() == 10)
