@@ -40,13 +40,15 @@ object GraftOps {
     * declared source/ref is the operator's input table (operators that
     * need several take them in declaration order). `modelId` keys any
     * per-model memoization — two drift models over different sources
-    * must never share trained centroids.
+    * must never share trained centroids — and the input's file listing
+    * stamps it, so a new input version retrains.
     */
   def impl(op: String, modelId: String): Option[PythonModels.Impl] = op match {
     case "sim_index_drift" => Some { (s, inputs) =>
       val emb = one(op, inputs)
-      graft.operators.SimilarityOps.simIndexDriftOf(
-        s, graft.operators.SimilarityOps.quantizedOf(emb), s"drift@graft_op:$modelId")
+      graft.operators.SimilarityOps.simIndexDriftOf(s,
+        graft.operators.SimilarityOps.quantizedOf(emb), s"drift@graft_op:$modelId",
+        graft.sources.Tables.planFingerprint(emb))
     }
     case _ => None
   }

@@ -53,7 +53,7 @@ object CurateOps {
       .select(col("source"), split(TextOps.normalized(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
       .select(col("source"),
-        explode(expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")).as("g"))
+        explode(TextOps.wordNgrams(n)).as("g"))
       .repartition(s.sparkContext.defaultParallelism, col("g"))
       .dropDuplicates("source", "g")
     val sizes = grams.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
@@ -217,7 +217,7 @@ object CurateOps {
     d.select(col("doc_id"), split(TextOps.normalized(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"),
-        explode(expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")).as("g"))
+        explode(TextOps.wordNgrams(n)).as("g"))
       .distinct()
 
   /** 8-gram decontamination of ANY train-docs DataFrame against a fixed
@@ -284,7 +284,7 @@ object CurateOps {
     val n = 8
     val grams = tokens(s, dir).filter(size(col("w")) >= n)
       .select(col("doc_id"),
-        explode(expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")).as("g"))
+        explode(TextOps.wordNgrams(n)).as("g"))
       .distinct()
     val isEval = pmod(col("doc_id"), lit(20)) === 0
     val evalGrams = grams.filter(isEval).select(col("g")).distinct()
@@ -1073,8 +1073,9 @@ object CurateOps {
     // (the IVF-centroid discipline) so re-invocations skip the full
     // token-explode training pass and every downstream plan stays
     // sameResult-stable
-    val wtab = ResidentCache.localModel(s, s"dsir_wtab@$dir")(dsirModel(d)._1)
-    val norm = ResidentCache.localModel(s, s"dsir_norm@$dir")(dsirModel(d)._2)
+    val stamp = Tables.listingFingerprint(s, dir, "documents")
+    val wtab = ResidentCache.localModel(s, s"dsir_wtab@$dir", stamp)(dsirModel(d)._1)
+    val norm = ResidentCache.localModel(s, s"dsir_norm@$dir", stamp)(dsirModel(d)._2)
     dsirScore(d, wtab, norm)
   }
 

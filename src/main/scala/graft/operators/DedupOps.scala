@@ -46,6 +46,23 @@ object DedupOps {
   private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesRaw(s, dir).distinct()
 
+  /** The resident distinct (doc_id, h) 3-gram shingle postings the
+    * exact-Jaccard family shares (jaccard, containment, ppjoin, the
+    * edge miners). One def builds the slot's plan, so no two sites can
+    * install different plans under one name (each install would
+    * unpersist the other's).
+    */
+  private def ngramShingles(s: SparkSession, dir: String): DataFrame =
+    ResidentCache(s, "dedup_ngram_sh",
+      shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h")))
+
+  /** The resident (doc_id, h) shingle multiset of the MinHash family, by
+    * md5-derived hash (the oracle replays it).
+    */
+  private def minhashShingles(s: SparkSession, dir: String): DataFrame =
+    ResidentCache(s, "dedup_minhash_sh",
+      shinglesRaw(s, dir).select(col("doc_id"), md5Hash64(col("s")).as("h")))
+
   /** Exact dedup: md5-fingerprint groups; keeper = min doc_id per group.
     * One shuffle on the 16-byte fingerprint — the cheapest possible
     * exact-dedup plan at any scale.
@@ -289,10 +306,7 @@ object DedupOps {
     */
   def shingleShareEdges(s: SparkSession, dir: String,
       minShared: Long = 2L): DataFrame =
-    shingleShareEdgesOf(
-      ResidentCache(s, "dedup_ngram_sh",
-        shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h"))),
-      minShared, HotShingleMaxDf)
+    shingleShareEdgesOf(ngramShingles(s, dir), minShared, HotShingleMaxDf)
 
   /** Kernel over a distinct (doc_id, h) shingle-posting table — split
     * out so the spec can drive it with a planted-hot-shingle fixture.
@@ -365,8 +379,7 @@ object DedupOps {
     // normalize + explode + distinct passes per invocation. Values are
     // unchanged (same postings, same frozen-reference df rule); the
     // streaming twin keeps [[edgeProbeWith]] for true arrivals.
-    val sh = ResidentCache(s, "dedup_ngram_sh",
-      shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h")))
+    val sh = ngramShingles(s, dir)
     val isNew = pmod(col("doc_id"), lit(10)) >= 8
     val ref = sh.filter(!isNew)
     val refPostings = ref.join(
@@ -386,35 +399,26 @@ object DedupOps {
     * per-document set sizes. Returns (intersections (doc_a < doc_b,
     * n_inter), sizes (doc_id, n)).
     */
-  /** Memoized [[shingleIntersections]] hot-shingle probe verdicts per
-    * (context, dir, maxDf): the probe is deterministic for a given
-    * corpus + guard cap, and re-running its scan-and-aggregate job on
-    * every invocation of every consumer (jaccard, containment, the
-    * threshold histogram — × bench reps) re-paid a fixed job for a
-    * boolean that cannot change within a session. Keyed by the same
-    * concrete file listing as [[graft.sources.Tables.rowCount]] so an
-    * in-place rewrite re-probes.
-    */
-  private val hotProbeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), java.lang.Boolean]()
-
   private def shingleIntersections(s: SparkSession, dir: String,
       maxDf: Int): (DataFrame, DataFrame) = {
     // join on the 64-bit shingle hash, not the string: same counts
     // (collision odds ~1e-8 at 1M shingles), ~10x less shuffle volume
-    val sh = ResidentCache(s, "dedup_ngram_sh",
-      shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h")))
+    val sh = ngramShingles(s, dir)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // the guard's two-phase plan (candidate join on rare shingles +
     // exact re-score over candidate docs) costs ~2x the single-pass
     // join — only pay it when hot shingles actually exist. The probe
     // is one partial-aggregated scan of the cached shingles; at scale
     // this is the same metadata-cost decision AQE makes at runtime.
-    val probeKey = (s.sparkContext,
-      s"${Tables.listingFingerprint(s, dir, "documents")}#$maxDf")
-    val hasHot = maxDf > 0 && hotProbeMemo.computeIfAbsent(probeKey, _ =>
+    // The verdict is memoized per corpus listing and guard cap: it
+    // cannot change until the table is rewritten, and re-running the
+    // probe job in every consumer (jaccard, containment, the threshold
+    // histogram — × bench reps) re-paid a fixed job for one boolean.
+    val hasHot = maxDf > 0 && ResidentCache.value(s, s"dedup_hot_probe_$maxDf@$dir",
+        Tables.listingFingerprint(s, dir, "documents")) {
       !sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDf).isEmpty).booleanValue()
+        .filter(col("df") > maxDf).isEmpty
+    }
     if (!hasHot) {
       // no hot shingles → the single self-join is already df-bounded
       val inter = sh.select(col("doc_id").as("doc_a"), col("h"))
@@ -529,23 +533,8 @@ object DedupOps {
   def dedupPpjoinAt(s: SparkSession, dir: String, p: Long, q: Long): DataFrame = {
     require(p > 0 && p <= q, s"threshold p/q must be in (0,1]: $p/$q")
     val pq = p + q
-    val sh = ResidentCache(s, "dedup_ngram_sh",
-      shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h")))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(df, Seq("h"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      .join(sizes, Seq("doc_id"))
-    // pinned resident: the prefix table is ~p/q-reduced and feeds BOTH
-    // sides of the candidate self-join — without the pin the per-doc
-    // ranking window (a corpus-sized sort) runs once per join side per
-    // execution (the same re-aliased-subtree reuse failure as dedupCdc)
-    val prefix = ResidentCache(s, s"dedup_ppjoin_prefix_${p}_$q",
-      ranked.filter(
-        col("r") <= col("n") - expr(s"($p * n + ${q - 1}) div $q") + 1L)
-        .select(col("doc_id"), col("h"), col("r"), col("n")))
-    val cand = ppjoinPrefixCandidates(prefix, p, q)
+    val sh = ngramShingles(s, dir)
+    val cand = ppjoinPrefixCandidates(s, sh, p, q)
     // Verification, the distributed-PPJoin way (Vernica, Carey & Li
     // SIGMOD'10): ship each CANDIDATE doc's sorted shingle-hash array
     // onto its pairs, then everything per pair is row-local inside one
@@ -581,8 +570,23 @@ object DedupOps {
   /** Prefix-principle candidate pairs with the length + positional
     * filters (PPJoin proper) — the stage the suffix filter then prunes.
     */
-  private def ppjoinPrefixCandidates(prefix: DataFrame, p: Long, q: Long): DataFrame = {
+  private def ppjoinPrefixCandidates(s: SparkSession, sh: DataFrame,
+      p: Long, q: Long): DataFrame = {
     val pq = p + q
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+    val ranked = sh.join(df, Seq("h"))
+      .withColumn("r", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
+      .join(sizes, Seq("doc_id"))
+    // pinned resident: the prefix table is ~p/q-reduced and feeds BOTH
+    // sides of the candidate self-join — without the pin the per-doc
+    // ranking window (a corpus-sized sort) runs once per join side per
+    // execution (the same re-aliased-subtree reuse failure as dedupCdc)
+    val prefix = ResidentCache(s, s"dedup_ppjoin_prefix_${p}_$q",
+      ranked.filter(
+        col("r") <= col("n") - expr(s"($p * n + ${q - 1}) div $q") + 1L)
+        .select(col("doc_id"), col("h"), col("r"), col("n")))
     prefix.select(col("doc_id").as("doc_a"), col("h"),
         col("r").as("r_a"), col("n").as("n_a"))
       .join(prefix.select(col("doc_id").as("doc_b"), col("h"),
@@ -602,19 +606,8 @@ object DedupOps {
     */
   def ppjoinCandidateCounts(s: SparkSession, dir: String, p: Long, q: Long): (Long, Long) = {
     val pq = p + q
-    val sh = ResidentCache(s, "dedup_ngram_sh",
-      shingles(s, dir).select(col("doc_id"), xxhash64(col("s")).as("h")))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ranked = sh.join(df, Seq("h"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      .join(sizes, Seq("doc_id"))
-    val prefix = ResidentCache(s, s"dedup_ppjoin_prefix_${p}_$q",
-      ranked.filter(
-        col("r") <= col("n") - expr(s"($p * n + ${q - 1}) div $q") + 1L)
-        .select(col("doc_id"), col("h"), col("r"), col("n")))
-    val cand = ppjoinPrefixCandidates(prefix, p, q)
+    val sh = ngramShingles(s, dir)
+    val cand = ppjoinPrefixCandidates(s, sh, p, q)
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val arrs = sh.join(candDocs, Seq("doc_id"), "left_semi")
@@ -644,8 +637,7 @@ object DedupOps {
     // shingles by 64-bit hash, WITH duplicates: min-hash is multiset-
     // invariant, so the signature pipeline skips the corpus-wide
     // distinct (a full shuffle of the largest intermediate) entirely
-    val sh = ResidentCache(s, "dedup_minhash_sh",
-      shinglesRaw(s, dir).select(col("doc_id"), md5Hash64(col("s")).as("h")))
+    val sh = minhashShingles(s, dir)
     // one-pass signature via the custom Aggregator: one long[32] buffer
     // per document instead of 32 min() columns (graft.functions.MinHashAgg)
     val sigs = sh.groupBy(col("doc_id"))
@@ -711,8 +703,7 @@ object DedupOps {
     * signature/band arithmetic.
     */
   def dedupRecallEval(s: SparkSession, dir: String): DataFrame =
-    recallEvalCore(s, ResidentCache(s, "dedup_minhash_sh",
-      shinglesRaw(s, dir).select(col("doc_id"), md5Hash64(col("s")).as("h"))))
+    recallEvalCore(s, minhashShingles(s, dir))
 
   /** Sampled recall evaluation — the 100 TB spelling of
     * [[dedupRecallEval]]: exact ground truth is computed only over a
@@ -730,8 +721,7 @@ object DedupOps {
     */
   def dedupRecallEvalSampled(s: SparkSession, dir: String,
       pct: Int = 50, seed: Int = 42): DataFrame = {
-    val sh = ResidentCache(s, "dedup_minhash_sh",
-      shinglesRaw(s, dir).select(col("doc_id"), md5Hash64(col("s")).as("h")))
+    val sh = minhashShingles(s, dir)
     val keep = pmod(
       md5Hash64(concat_ws(":", col("doc_id").cast("string"), lit(seed.toString))),
       lit(100L)) < lit(pct.toLong)
@@ -966,11 +956,13 @@ object DedupOps {
         .join(idx.bands.alias("y"), col("x.bk") === col("y.bk"))
         .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_idx"))
         .distinct())
-    // verify join restricted to candidate documents on BOTH sides
+    // verify join restricted to candidate documents on BOTH sides; the
+    // index side's candidate list is broadcast, so its h-bucketed scan
+    // reaches the h-join without a re-exchange by doc_id
     val shNew = shNewRaw.distinct()
       .join(cand.select(col("doc_new").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-    val shIdx = idx.shingles
-      .join(cand.select(col("doc_idx").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+    val shIdx = idx.shingles.join(
+      broadcast(cand.select(col("doc_idx").as("doc_id")).distinct()), Seq("doc_id"), "left_semi")
     val sizesNew = shNewRaw.distinct().groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = shNew.select(col("doc_id").as("doc_new"), col("h"))
       .join(shIdx.select(col("doc_id").as("doc_idx"), col("h")), Seq("h"))
@@ -1046,7 +1038,8 @@ object DedupOps {
     // The pair table is near-dup-density-bounded (orders smaller than
     // the corpus), so pinning it is the in-memory analogue of the
     // persisted bucketed dedup index.
-    ResidentCache.memo(s, s"simhash_pairs@$dir") {
+    ResidentCache.memo(s, s"simhash_pairs@$dir",
+        Tables.listingFingerprint(s, dir, "documents")) {
       val sigs = ResidentCache(s, "dedup_simhash_sigs",
         dedupSimHash(s, dir).select(col("doc_id"), col("simhash")))
       hammingPairs(sigs, "simhash", SimHashMaxHamming,
@@ -1354,12 +1347,8 @@ object DedupOps {
     */
   def dedupSubstringSpans(s: SparkSession, dir: String): DataFrame = {
     val n = 8
-    val toks = docs(s, dir)
-      .select(col("doc_id"), split(TextOps.normalized(col("text")), " ").as("w"))
-    val starts = toks.filter(size(col("w")) >= n)
-      .select(col("doc_id"), posexplode(
-        expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"))
-        .as(Seq("i", "g")))
+    val toks = tokensOf(docs(s, dir))
+    val starts = gramStringStartsOf(toks, n)
     val dupGrams = starts.select(col("g"), col("doc_id")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("ndocs"))
       .filter(col("ndocs") > 1)
@@ -1401,12 +1390,12 @@ object DedupOps {
     * arithmetic (the [[shinglesOf]] convention).
     */
   private def gramStartsOf(d: DataFrame, n: Int = 8): DataFrame =
-    d.select(col("doc_id"), split(TextOps.normalized(col("text")), " ").as("w"))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"), posexplode(
-        expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"))
-        .as(Seq("i", "g")))
+    gramStringStartsOf(tokensOf(d), n)
       .select(col("doc_id"), col("i").cast("long").as("i"), xxhash64(col("g")).as("h"))
+
+  /** The span family's resident gram starts over the corpus. */
+  private def spanGrams(s: SparkSession, dir: String): DataFrame =
+    ResidentCache(s, "dedup_span_grams", gramStartsOf(docs(s, dir)))
 
   /** Diagonal-islands aggregate shared by [[dedupSpanPairs]] and
     * [[spanProbeWith]]: distinct gram matches (pa, pb, ia, ib) → per
@@ -1431,7 +1420,7 @@ object DedupOps {
     // the positional gram table feeds this operator AND the span probe
     // (and three bench reps each) — resident, one gram-build pass per
     // corpus
-    val starts = ResidentCache(s, "dedup_span_grams", gramStartsOf(docs(s, dir)))
+    val starts = spanGrams(s, dir)
     // df guard on DISTINCT docs per gram (a repeated gram inside one
     // doc is one "document occurrence" for rarity)
     val rareGrams = starts.select(col("h"), col("doc_id")).distinct()
@@ -1490,7 +1479,7 @@ object DedupOps {
     // [[shingleShareEdgesIncremental]]: positional grams are
     // per-document, so filtering the shared table ≡ gram-building each
     // sub-corpus; [[spanProbeWith]] stays for true streaming arrivals
-    val starts = ResidentCache(s, "dedup_span_grams", gramStartsOf(docs(s, dir)))
+    val starts = spanGrams(s, dir)
     val isNew = pmod(col("doc_id"), lit(10)) >= 8
     val ref = starts.filter(!isNew)
     val refPostings = ref.join(
@@ -1552,9 +1541,7 @@ object DedupOps {
     */
   private def gramStringStartsOf(toks: DataFrame, n: Int): DataFrame =
     toks.filter(size(col("w")) >= n)
-      .select(col("doc_id"), posexplode(
-        expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"))
-        .as(Seq("i", "g")))
+      .select(col("doc_id"), posexplode(TextOps.wordNgrams(n)).as(Seq("i", "g")))
 
   /** Reassemble each document without the marked positions, with token
     * accounting — shared by the batch and clean-on-ingest removers.

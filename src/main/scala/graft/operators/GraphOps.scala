@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Distributed graph operators for corpus curation. The one that
   * matters at 100 TB is connected components: near-dup PAIRS (from
   * MinHash/SimHash banding) are only half of dedup — "keep one copy
@@ -103,7 +105,8 @@ object GraphOps {
     // FIVE operators consume this table (cluster sizes, canonical
     // quality, leak-free split, dedup weights, the capstone); without
     // the memo each re-runs banding + the whole checkpointed fixpoint
-    ResidentCache.memo(s, s"dedup_clusters@$dir") {
+    ResidentCache.memo(s, s"dedup_clusters@$dir",
+        Tables.listingFingerprint(s, dir, "documents")) {
       val pairs = DedupOps.dedupSimHashPairs(s, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val cc = connectedComponents(pairs)
@@ -248,7 +251,7 @@ object GraphOps {
     * materialization.
     */
   def dedupCanonicalQuality(s: SparkSession, dir: String): DataFrame = {
-    val quality = graft.sources.Tables.load(s, dir, "documents")
+    val quality = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         size(filter(split(TextOps.normalized(col("text")), " "), t => t =!= ""))
           .cast("long").as("n_toks"),
@@ -367,7 +370,7 @@ object GraphOps {
     val reliable = s.sparkContext.getCheckpointDir.isDefined
     def save(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
-    val docs = graft.sources.Tables.load(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val pairs = DedupOps.dedupSimHashPairs(s, dir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     // materialize ONCE: edges appear in every round's plan (and seeds /
@@ -448,11 +451,14 @@ object GraphOps {
     * over; the topical shingle-share graph does.
     */
   def graphLinkPred(s: SparkSession, dir: String,
-      minCn: Long = 2L, maxDeg: Long = 64L): DataFrame = {
-    val pairs = ResidentCache(s, "graph_lp_edges",
-      DedupOps.shingleShareEdges(s, dir))
-    linkPredScores(pairs, minCn, maxDeg)
-  }
+      minCn: Long = 2L, maxDeg: Long = 64L): DataFrame =
+    linkPredScores(lpEdges(s, dir), minCn, maxDeg)
+
+  /** The resident shingle-share edge list link prediction and
+    * modularity score over — one def builds the slot's plan.
+    */
+  private def lpEdges(s: SparkSession, dir: String): DataFrame =
+    ResidentCache(s, "graph_lp_edges", DedupOps.shingleShareEdges(s, dir))
 
   /** Kernel over a canonical (a < b) undirected edge list — split out
     * so the spec can drive it with a brute-forceable fixture.
@@ -518,9 +524,8 @@ object GraphOps {
     * graph totals (m, Σd) ride in on a broadcast 1-row cross join.
     */
   def graphModularity(s: SparkSession, dir: String): DataFrame = {
-    val pairs = ResidentCache(s, "graph_lp_edges",
-      DedupOps.shingleShareEdges(s, dir))
-    val src = graft.sources.Tables.load(s, dir, "documents")
+    val pairs = lpEdges(s, dir)
+    val src = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"))
     modularityTerms(pairs, src)
   }

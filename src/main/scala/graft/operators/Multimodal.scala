@@ -271,7 +271,8 @@ object Multimodal {
   def mmCanonical(s: SparkSession, dir: String): DataFrame = {
     // memo (not a sameResult slot): the CC fixpoint's lineage ends in
     // per-invocation checkpoint RDDs — see GraphOps.dedupClusters
-    val labels = ResidentCache.memo(s, s"mm_cc@$dir") {
+    val labels = ResidentCache.memo(s, s"mm_cc@$dir",
+        Tables.listingFingerprint(s, dir, "documents")) {
       val pairs = mmPhashPairs(s, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       graft.operators.GraphOps.connectedComponents(pairs)

@@ -27,10 +27,17 @@ object SimilarityOps {
     * work and dominate the scan).
     */
   private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
-    Tables.loadFanout(s, dir, "embeddings").select(
-      col("vec_id"),
-      expr("transform(embedding, x -> cast(round(cast(x as double) * 1000.0) as bigint))").as("q"))
-      .withColumn("nq", expr("dot_i64(q, q)")) // native codegen'd dot (functions.DotI64)
+    quantizedOf(Tables.loadFanout(s, dir, "embeddings"))
+
+  /** The corpus's resident [[quantized]] vectors, shared by the IVF, PQ
+    * and diversity families — one def builds the slot's plan.
+    */
+  private def residentQuantized(s: SparkSession, dir: String): DataFrame =
+    ResidentCache(s, "sim_quantized", quantized(s, dir))
+
+  /** The listing stamp of the corpus's embeddings, for keyed memos. */
+  private def embStamp(s: SparkSession, dir: String): String =
+    Tables.listingFingerprint(s, dir, "embeddings")
 
   /** Brute-force cosine top-5 neighbors for the first 10 query vectors.
     *
@@ -268,14 +275,16 @@ object SimilarityOps {
     * it is scanned once per Lloyd iteration).
     */
   private def kmeansCells(s: SparkSession, e: DataFrame, dir: String): (DataFrame, DataFrame) =
-    kmeansCellsOf(s, e, dir)
+    kmeansCellsOf(s, e, dir, embStamp(s, dir))
 
   /** Same, keyed by an explicit cache tag — lets the drift monitor
     * train a FROZEN index on a corpus subset without colliding with
-    * the full-corpus IVF family's resident slots.
+    * the full-corpus IVF family's resident slots. `stamp` is the
+    * listing stamp of the tables `e` reads: the trained centroids are
+    * reused until it changes.
     */
-  private def kmeansCellsOf(s: SparkSession, e: DataFrame, cacheTag: String)
-      : (DataFrame, DataFrame) = {
+  private def kmeansCellsOf(s: SparkSession, e: DataFrame, cacheTag: String,
+      stamp: String): (DataFrame, DataFrame) = {
     val nCentroids = 16
     // deterministic strided sample over the ID RANGE (no LIMIT — order-
     // independent and replayable by the SQL oracle; anchored at min so
@@ -294,7 +303,7 @@ object SimilarityOps {
     // downstream plans are sameResult-stable — the Lloyd chain itself
     // carries lambda expressions that defeat plan-cache canonical
     // matching, which would silently retrain per consumer
-    val centroids = ResidentCache.localModel(s, s"sim_ivf_centroids@$cacheTag") {
+    val centroids = ResidentCache.localModel(s, s"sim_ivf_centroids@$cacheTag", stamp) {
       kmeansRefine(s, e, seed, iters = 3)
     }
     // assign every vector to its nearest centroid (broadcast centroids)
@@ -304,7 +313,7 @@ object SimilarityOps {
 
   def simIvfTopK(s: SparkSession, dir: String): DataFrame = {
     val nProbe = 4
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     val cells = e.join(assigned, Seq("vec_id"))
     // queries probe their nProbe nearest cells
@@ -362,7 +371,7 @@ object SimilarityOps {
     */
   def simIvfRadius(s: SparkSession, dir: String, tauMilli: Long = 300L,
       nProbe: Int = 4): DataFrame = {
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     val cells = e.join(assigned, Seq("vec_id"))
     val probes = pairScoresAgainst(s, e.filter(col("vec_id") < 10), centroids, topPerProbe = nProbe)
@@ -399,8 +408,9 @@ object SimilarityOps {
     * persist the exact model [[simIndexDrift]] scores against.
     */
   def driftCentroids(s: SparkSession, dir: String): DataFrame = {
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
-    kmeansCellsOf(s, e.filter(pmod(col("vec_id"), lit(10)) < 8), s"drift@$dir")._1
+    val e = residentQuantized(s, dir)
+    kmeansCellsOf(s, e.filter(pmod(col("vec_id"), lit(10)) < 8), s"drift@$dir",
+      embStamp(s, dir))._1
   }
 
   /** Scored assignment of raw (vec_id, embedding) rows against frozen
@@ -409,26 +419,23 @@ object SimilarityOps {
     * aggregates derive from exactly these values.
     */
   def driftAssignWith(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val e = vectors.select(col("vec_id"),
-      expr("transform(embedding, x -> cast(round(cast(x as double) * 1000.0) as bigint))").as("q"))
-      .withColumn("nq", expr("dot_i64(q, q)"))
-    assignCellsScored(e, centroids)
+    assignCellsScored(quantizedOf(vectors), centroids)
       .select(col("vec_id"), col("cell"),
         expr("CAST(FLOOR(cos * 1000000) AS BIGINT)").as("cos_ppm"))
   }
 
   def simIndexDrift(s: SparkSession, dir: String): DataFrame =
-    simIndexDriftOf(s,
-      ResidentCache(s, "sim_quantized", quantized(s, dir)), s"drift@$dir")
+    simIndexDriftOf(s, residentQuantized(s, dir), s"drift@$dir", embStamp(s, dir))
 
   /** [[simIndexDrift]] over an ALREADY-QUANTIZED (vec_id, q, nq) input —
     * the model-callable surface ([[graft.exec.GraftOps]] routes a
     * `graft_op: sim_index_drift` model here over its declared
-    * embeddings input).
+    * embeddings input). `stamp` is the listing stamp of what `e` reads.
     */
-  def simIndexDriftOf(s: SparkSession, e: DataFrame, cacheTag: String): DataFrame = {
+  def simIndexDriftOf(s: SparkSession, e: DataFrame, cacheTag: String,
+      stamp: String): DataFrame = {
     val isNew = pmod(col("vec_id"), lit(10)) >= 8
-    val (centroids, _) = kmeansCellsOf(s, e.filter(!isNew), cacheTag)
+    val (centroids, _) = kmeansCellsOf(s, e.filter(!isNew), cacheTag, stamp)
     def scored(side: DataFrame): DataFrame =
       assignCellsScored(side, centroids)
         .select(col("cell"), expr("CAST(FLOOR(cos * 1000000) AS BIGINT)").as("cos_ppm"))
@@ -449,7 +456,7 @@ object SimilarityOps {
     * skewed at 100 TB).
     */
   def simClusterSample(s: SparkSession, dir: String, budget: Long = 800L): DataFrame = {
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (_, assigned) = kmeansCells(s, e, dir)
     val perCell = (budget + 15L) / 16L
     val picked = assigned.groupBy(col("cell"))
@@ -467,7 +474,7 @@ object SimilarityOps {
     vectors.select(
       col("vec_id"),
       expr("transform(embedding, x -> cast(round(cast(x as double) * 1000.0) as bigint))").as("q"))
-      .withColumn("nq", expr("dot_i64(q, q)"))
+      .withColumn("nq", expr("dot_i64(q, q)")) // native codegen'd dot (functions.DotI64)
 
   /** The drift monitor's aggregate tail over two (cell, cos_ppm) sides
     * — shared by the corpus operator and the persisted-index CLI report.
@@ -525,7 +532,7 @@ object SimilarityOps {
     * PartitionFilters and the pruned-scan equality).
     */
   def persistIvfIndex(s: SparkSession, dir: String, path: String): Unit = {
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     e.join(assigned, Seq("vec_id"))
@@ -1119,15 +1126,16 @@ object SimilarityOps {
     * [[simIvfPqTopK]] (cell residuals). Returns (subvector table,
     * trained codebook, per-(vector, subspace) codes). `slot` keys the
     * subvector table's resident cache (it is scanned once per Lloyd
-    * iteration plus the final encode).
+    * iteration plus the final encode); the codebook is reused until
+    * `stamp`, the listing stamp of what `vecs` reads, changes.
     */
-  private def pqTrainEncode(s: SparkSession, vecs: DataFrame, m: Int,
-      subDim: Int, k: Int, iters: Int, slot: String): (DataFrame, DataFrame, DataFrame) = {
+  private def pqTrainEncode(s: SparkSession, vecs: DataFrame, m: Int, subDim: Int,
+      k: Int, iters: Int, slot: String, stamp: String): (DataFrame, DataFrame, DataFrame) = {
     val subs0 = pqSubs(s, vecs, m, subDim, slot)
     // the 64-row codebook memoizes driver-side (see kmeansCells) so the
     // corpus encode below is sameResult-stable and its resident slot
     // actually warms across invocations
-    val cb = ResidentCache.localModel(s, s"${slot}_cb") {
+    val cb = ResidentCache.localModel(s, s"${slot}_cb", stamp) {
       pqTrainLoop(s, vecs, subs0, m, k, iters)
     }
     val codes = ResidentCache(s, s"${slot}_codes", nearestCode(subs0, cb))
@@ -1186,9 +1194,9 @@ object SimilarityOps {
     val subDim = Dim / m
     val k = 8
     val iters = 2
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (subs, cb, codes) = pqTrainEncode(s, e.select(col("vec_id"), col("q")),
-      m, subDim, k, iters, slot = s"sim_pq_subs@$dir")
+      m, subDim, k, iters, slot = s"sim_pq_subs@$dir", stamp = embStamp(s, dir))
     // per-probe ADC lookup table: exact distance from each probe
     // subvector to every codeword (probes × M × K rows — bounded)
     val lut = subs.filter(col("vec_id") < 10)
@@ -1229,7 +1237,7 @@ object SimilarityOps {
     val m = 8
     val subDim = Dim / m
     val k = 8
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     val centCells = centroids.select(col("centroid_id").as("cell"), col("cq"))
     // integer residuals r = q − centroid(cell) — the PQ training set
@@ -1237,7 +1245,7 @@ object SimilarityOps {
       .join(broadcast(centCells), Seq("cell"))
       .select(col("vec_id"), expr("zip_with(q, cq, (a, b) -> a - b)").as("q"))
     val (_, cb, codes) = pqTrainEncode(s, resid, m, subDim, k, iters = 2,
-      slot = s"sim_ivfpq_subs@$dir")
+      slot = s"sim_ivfpq_subs@$dir", stamp = embStamp(s, dir))
     // probes pick their nProbe nearest cells (the IVF probe step)
     val probes = pairScoresAgainst(s, e.filter(col("vec_id") < 10), centroids,
         topPerProbe = nProbe)
@@ -1278,14 +1286,14 @@ object SimilarityOps {
   def persistIvfPqIndex(s: SparkSession, dir: String, path: String): Unit = {
     val m = 8
     val subDim = Dim / m
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     val centCells = centroids.select(col("centroid_id").as("cell"), col("cq"))
     val resid = e.join(assigned, Seq("vec_id"))
       .join(broadcast(centCells), Seq("cell"))
       .select(col("vec_id"), expr("zip_with(q, cq, (a, b) -> a - b)").as("q"))
     val (_, cb, codes) = pqTrainEncode(s, resid, m, subDim, k = 8, iters = 2,
-      slot = s"sim_ivfpq_subs@$dir")
+      slot = s"sim_ivfpq_subs@$dir", stamp = embStamp(s, dir))
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     cb.write.mode("overwrite").parquet(s"$path/codebook")
     codes.join(assigned, Seq("vec_id"))
@@ -1424,7 +1432,7 @@ object SimilarityOps {
     */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
     val theta = 0.3
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (_, assigned) = kmeansCells(s, e, dir)
     val cells = e.join(assigned, Seq("vec_id"))
     val a = cells.select(col("vec_id").as("ida"), col("q").as("qa"), col("nq").as("na"), col("cell"))
@@ -1706,7 +1714,7 @@ object SimilarityOps {
     */
   def simKcenterSelect(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
     import s.implicits._
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val seed = e.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("q"), col("nq")).head()
     // (round, id, d2-at-selection, quantized vector, |c|²)
@@ -1785,7 +1793,7 @@ object SimilarityOps {
     * Flag = distance bit-length strictly above the cell's p90 bucket.
     */
   def embOutliers(s: SparkSession, dir: String): DataFrame = {
-    val e = ResidentCache(s, "sim_quantized", quantized(s, dir))
+    val e = residentQuantized(s, dir)
     val (centroids, assigned) = kmeansCells(s, e, dir)
     val centCells = centroids.select(col("centroid_id").as("cell"), col("cq"), col("cn"))
     val dists = e.join(assigned, Seq("vec_id"))

@@ -19,15 +19,15 @@ object TextOps {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadFanout(s, dir, "documents")
 
-  /** Bounded resident caching for two-pass operators — see
-    * [[graft.operators.ResidentCache]] (context-keyed so
-    * `newSession()`-per-job servers hold bounded cache storage).
-    */
-  private def cacheResident(s: SparkSession, slot: String, df: DataFrame): DataFrame =
-    ResidentCache(s, slot, df)
-
   /** lower + strip non-alphanumerics + collapse runs → canonical text. */
   def normalized(c: Column): Column = trim(regexp_replace(lower(c), "[^a-z0-9]+", " "))
+
+  /** Word n-grams of the token-array column `w`, space-joined in
+    * position order — one spelling, so every n-gram operator builds the
+    * same plan. Callers keep only rows with `size(w) >= n` first.
+    */
+  private[graft] def wordNgrams(n: Int): Column =
+    expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")
 
   /** floor(log2 c) for c ≥ 1 as a long — the floored-bits device
     * (`length(bin(c)) - 1`) the idf and PMI scores share, exact
@@ -286,9 +286,8 @@ object TextOps {
     // trained tokenizer re-paid `rounds` driver-blocking argmax jobs
     // per invocation (three queries × three reps = 72 argmax jobs per
     // sweep for one 8-row table)
-    val key = (s.sparkContext,
-      s"${graft.sources.Tables.listingFingerprint(s, dir, "documents")}#$rounds")
-    val merges = bpeMergeMemo.computeIfAbsent(key, _ => {
+    val merges = ResidentCache.value(s, s"bpe_merges_$rounds@$dir",
+        Tables.listingFingerprint(s, dir, "documents")) {
       var cur = words
       val out = Seq.newBuilder[(Int, String, String, String, Long)]
       var r = 1
@@ -315,7 +314,7 @@ object TextOps {
         }
       }
       out.result()
-    })
+    }
     // the segmented table rebuilds lazily from the resident histogram
     // by re-applying the frozen merges in rank order — one projection,
     // identical to the table the training loop ended with
@@ -324,9 +323,6 @@ object TextOps {
     }
     (merges, cur)
   }
-
-  private val bpeMergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), Seq[(Int, String, String, String, Long)]]()
 
   def txtBpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -410,7 +406,7 @@ object TextOps {
     * slot forcing DoReMi to retrain for its own columns.
     */
   private[graft] def charLmScoredResident(s: SparkSession, dir: String): DataFrame =
-    cacheResident(s, "ccnet_scored", txtCharLmScore(s, dir))
+    ResidentCache(s, "ccnet_scored", txtCharLmScore(s, dir))
 
   /** The trained char-LM: bigram → floored-bits surprisal — the
     * alphabet-bounded (≤ 37² rows) artifact a production pipeline
@@ -604,7 +600,7 @@ object TextOps {
     // the candidate pair table is near-dup-density-bounded and feeds
     // BOTH this query and the aligner (which re-ran the whole miner
     // per invocation) — resident output, the mmPhashPairs discipline
-    cacheResident(s, s"bitext_pairs_$maxDf", txtBitextMineUncached(s, dir, maxDf))
+    ResidentCache(s, s"bitext_pairs_$maxDf", txtBitextMineUncached(s, dir, maxDf))
   }
 
   private def txtBitextMineUncached(s: SparkSession, dir: String, maxDf: Int): DataFrame = {
@@ -615,7 +611,7 @@ object TextOps {
     // both the df guard and the pair join scan the gram postings —
     // resident slot (the DedupOps shingle-table discipline), one
     // cached copy per JVM however often the miner runs
-    val postings = cacheResident(s, "bitext_postings", toks
+    val postings = ResidentCache(s, "bitext_postings", toks
       .filter(size(col("toks")) >= 5)
       .select(col("doc_id"), col("lang"), col("n_tok"),
         explode(array_distinct(
@@ -719,7 +715,7 @@ object TextOps {
     // bounded output (|queries| × top-5 rows) consumed by this query
     // AND the hybrid fusion — resident so the postings/stats pipeline
     // runs once per corpus
-    cacheResident(s, "bm25_topk", txtBm25TopKUncached(s, dir))
+    ResidentCache(s, "bm25_topk", txtBm25TopKUncached(s, dir))
 
   private def txtBm25TopKUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1004,7 +1000,7 @@ object TextOps {
     * reps): one idf training + normalization pass per corpus.
     */
   private def tfidfUnitResident(s: SparkSession, dir: String): DataFrame =
-    cacheResident(s, "tfidf_unit",
+    ResidentCache(s, "tfidf_unit",
       tfidfUnitVecs(docs(s, dir), tfidfIdf(docs(s, dir))))
 
   /** Non-overlapping `width`-token segments of each document —
@@ -1223,7 +1219,7 @@ object TextOps {
       .select(col("doc_id"), split(normalized(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"),
-        explode(expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")).as("g"))
+        explode(wordNgrams(n)).as("g"))
       .repartition(s.sparkContext.defaultParallelism, col("g"))
       .dropDuplicates("g", "doc_id")
       .withColumn("first_doc",
@@ -1256,7 +1252,7 @@ object TextOps {
     // vocabulary-sized (bounded) table consumed by both the histogram
     // collect and the returned projection — cached so the corpus scan
     // + term shuffle run once; resident slot frees the previous copy
-    val counts = cacheResident(s, "vocab_counts", docs(s, dir)
+    val counts = ResidentCache(s, "vocab_counts", docs(s, dir)
       .select(explode(filter(split(normalized(col("text")), " "), t => t =!= ""))
         .as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt")))

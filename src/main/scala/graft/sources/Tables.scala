@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
@@ -77,37 +78,45 @@ object Tables {
   private[graft] val memo =
     new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), Entry]()
 
-  /** The read's own listing — sorted (file, length, mtime) from its file
-    * index, driver-side, no Spark job — plus the parquet read settings
-    * the inferred schema depends on (e.g. `nanosAsLong`).
+  /** The read's own listing — sorted (file, length, mtime) from the
+    * file index of every relation it scans, driver-side, no Spark job
+    * (a versioned store's files, never rewritten in place, by name) —
+    * plus the parquet read settings the inferred schema depends on
+    * (e.g. `nanosAsLong`).
     */
   private def stampOf(spark: SparkSession, df: DataFrame): String = {
-    val files = df.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation => r.location } match {
-      case Some(ix: PartitioningAwareFileIndex) => ix.allFiles()
-      case other => throw new IllegalStateException(s"not a file-index parquet read: $other")
-    }
+    val files = df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .flatMap {
+        case ix: PartitioningAwareFileIndex =>
+          ix.allFiles().toSeq.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+        case ix => ix.inputFiles.toSeq
+      }
     val conf = spark.conf.getAll.toSeq.collect {
       case (k, v) if k.startsWith("spark.sql.parquet.") ||
           k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
     }
-    (conf.sorted ++ files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted)
-      .mkString("\n")
+    (conf.sorted ++ files.sorted).mkString("\n")
   }
 
   private def read(spark: SparkSession, path: String,
       options: Map[String, String]): (DataFrame, Entry) = {
     val key = (path, options)
-    val hit = Option(memo.get(key)).flatMap { e =>
-      val df = spark.read.options(options).schema(e.schema).parquet(path)
-      if (stampOf(spark, df) == e.stamp) Some((df, e)) else None
-    }
-    hit.getOrElse {
-      val df = spark.read.options(options).parquet(path)
-      val e = new Entry(stampOf(spark, df), df.schema)
-      memo.put(key, e)
-      (df, e)
+    val prior = Option(memo.get(key))
+      .map(e => (e, spark.read.options(options).schema(e.schema).parquet(path)))
+    prior match {
+      case Some((e, df)) if stampOf(spark, df) == e.stamp => (df, e)
+      case _ =>
+        // Spark's cache matches a read by its path, not its listing:
+        // drop every cached plan over the old listing, so none of them
+        // (operator resident slots included) serves the previous files
+        prior.foreach { case (_, stale) =>
+          spark.sharedState.cacheManager.uncacheQuery(castToImpl(stale), cascade = true)
+        }
+        val df = spark.read.options(options).parquet(path)
+        val e = new Entry(stampOf(spark, df), df.schema)
+        memo.put(key, e)
+        (df, e)
     }
   }
 
@@ -136,14 +145,21 @@ object Tables {
     */
   private[graft] val RowsPerGramFanoutTask = 512L
 
-  /** SHA-256 of a source table's memo stamp, for operator-side memos
-    * (e.g. the hot-shingle probe) that must re-derive when the table is
-    * rewritten in place.
+  private def sha256(text: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+
+  /** SHA-256 of a source table's memo stamp: the stamp of the operator
+    * memos ([[graft.operators.ResidentCache]] keyed entries) built from
+    * the table, which re-derive when it is rewritten in place.
     */
   private[graft] def listingFingerprint(spark: SparkSession, dir: String,
-      name: String): String = java.security.MessageDigest.getInstance("SHA-256")
-    .digest(loaded(spark, dir, name)._2.stamp.getBytes("UTF-8"))
-    .map(b => f"$b%02x").mkString
+      name: String): String = sha256(loaded(spark, dir, name)._2.stamp)
+
+  /** The same stamp for an arbitrary read — a model's declared ref or
+    * source rather than a named test table.
+    */
+  private[graft] def planFingerprint(df: DataFrame): String = sha256(stampOf(df.sparkSession, df))
 
   /** Row count of a source table, one parquet count per listing per JVM. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {

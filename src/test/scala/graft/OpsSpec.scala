@@ -1785,47 +1785,81 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketed dedup index: probe equals in-memory index, index side never re-exchanges") {
-    import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("graft_bidx").toString
-    val store = new graft.exec.RelationStore(spark, work)
-    val d = graft.sources.Tables.load(spark, sf, "documents")
-    val isNew = pmod(col("doc_id"), lit(10)) >= 8
-    val mem = DedupOps.buildDedupIndex(d.filter(!isNew))
-    DedupOps.persistDedupIndex(mem, store, "idx", buckets = 8)
-    val disk = DedupOps.loadDedupIndex(store, "idx")
-    val fromMem = DedupOps.probeAgainstIndex(d.filter(isNew), mem).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val probe = DedupOps.probeAgainstIndex(d.filter(isNew), disk)
-    val fromDisk = probe.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(fromDisk == fromMem, "bucketed index changed probe verdicts")
-    // the bucketed layout must show up as bucket-pruned scans, and no
-    // Exchange may sit directly above an index-table file scan — the
-    // probe side is the only thing allowed to shuffle
-    val plan = probe.queryExecution.executedPlan.toString
-    val cut = plan.indexOf("== Initial Plan ==")
-    val fp = if (cut >= 0) plan.substring(0, cut) else plan
-    assert(fp.contains("SelectedBucketsCount"), "index scans should be bucketed")
-    val exchangesOverIndexScan =
-      "Exchange hashpartitioning[^\\n]*\\n[^\\n]*Scan parquet[^\\n]*idx_".r
-        .findAllIn(fp).size
-    assert(exchangesOverIndexScan == 0,
-      s"index side re-exchanged:\n${fp.take(3000)}")
-    // and the bucketing must not COST shuffles vs the in-memory
-    // (unbucketed) index. NOTE: the probe's multi-consumer candidate
-    // table is resident-cached since r8, so its interior band-join
-    // exchanges print as InMemoryTableScan leaves in BOTH plans — the
-    // strict saving is pinned by the zero-exchange-over-index-scan
-    // assertion above; this comparison guards against a regression
-    // that ADDS visible exchanges to the bucketed path
-    val memProbe = DedupOps.probeAgainstIndex(d.filter(isNew), mem)
-    memProbe.collect()
-    val mp = memProbe.queryExecution.executedPlan.toString
-    val mcut = mp.indexOf("== Initial Plan ==")
-    val mfp = if (mcut >= 0) mp.substring(0, mcut) else mp
-    def nExch(p: String) = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(nExch(fp) <= nExch(mfp),
-      s"bucketed probe must not shuffle more: ${nExch(fp)} vs ${nExch(mfp)}")
+    // no broadcast joins: the test-sized index tables would otherwise be
+    // broadcast, and a broadcast index side never shuffles bucketed or not
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      import org.apache.spark.sql.functions._
+      val work = java.nio.file.Files.createTempDirectory("graft_bidx").toString
+      val store = new graft.exec.RelationStore(spark, work)
+      val d = graft.sources.Tables.load(spark, sf, "documents")
+      val isNew = pmod(col("doc_id"), lit(10)) >= 8
+      val mem = DedupOps.buildDedupIndex(d.filter(!isNew))
+      DedupOps.persistDedupIndex(mem, store, "idx", buckets = 8)
+      val disk = DedupOps.loadDedupIndex(store, "idx")
+      val fromMem = DedupOps.probeAgainstIndex(d.filter(isNew), mem).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val probe = DedupOps.probeAgainstIndex(d.filter(isNew), disk)
+      val fromDisk = probe.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(fromDisk == fromMem, "bucketed index changed probe verdicts")
+      // the bucketed layout must show up as bucket-pruned scans, and no
+      // shuffle exchange may read an index-table file scan through
+      // single-input operators only (a re-partitioning of the index table
+      // itself) — the probe side is the only thing allowed to shuffle.
+      // The walk descends through adaptive stages and cached relations'
+      // plans, which a string match on the printed plan cannot see
+      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+      import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
+      def below(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case other => other.children
+      }
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: below(p).flatMap(nodes)
+      def isIndexScan(p: SparkPlan): Boolean = p match {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName.startsWith("idx_"))
+        case _ => false
+      }
+      def readsIndex(p: SparkPlan): Boolean = p match {
+        case _: Exchange | _: QueryStageExec => false
+        case f if isIndexScan(f) => true
+        case other => other.children match {
+          case Seq(c) => readsIndex(c)
+          case _ => false
+        }
+      }
+      val executed = probe.queryExecution.executedPlan
+      assert(nodes(executed).exists(isIndexScan), "the walk must reach the index scans")
+      val exchangesOverIndexScan = nodes(executed).collect {
+        case e: ShuffleExchangeLike if readsIndex(e.child) => e
+      }
+      val plan = executed.toString
+      val cut = plan.indexOf("== Initial Plan ==")
+      val fp = if (cut >= 0) plan.substring(0, cut) else plan
+      assert(fp.contains("SelectedBucketsCount"), "index scans should be bucketed")
+      assert(exchangesOverIndexScan.isEmpty,
+        s"index side re-exchanged:\n${exchangesOverIndexScan.map(_.treeString).mkString("\n").take(3000)}")
+      // and the bucketing must not COST shuffles vs the in-memory
+      // (unbucketed) index. NOTE: the probe's multi-consumer candidate
+      // table is resident-cached since r8, so its interior band-join
+      // exchanges print as InMemoryTableScan leaves in BOTH plans — the
+      // strict saving is pinned by the zero-exchange-over-index-scan
+      // assertion above; this comparison guards against a regression
+      // that ADDS visible exchanges to the bucketed path
+      val memProbe = DedupOps.probeAgainstIndex(d.filter(isNew), mem)
+      memProbe.collect()
+      val mp = memProbe.queryExecution.executedPlan.toString
+      val mcut = mp.indexOf("== Initial Plan ==")
+      val mfp = if (mcut >= 0) mp.substring(0, mcut) else mp
+      def nExch(p: String) = "Exchange hashpartitioning".r.findAllIn(p).size
+      assert(nExch(fp) <= nExch(mfp),
+        s"bucketed probe must not shuffle more: ${nExch(fp)} vs ${nExch(mfp)}")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
   test("persisted IVF index: probe equals in-memory IVF, scan pruned to probed cells") {
@@ -1951,14 +1985,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     sweep(spark)
     val rddsAfterFirst = spark.sparkContext.getPersistentRDDs.size
-    val slotsAfterFirst = ResidentCache.liveSlots(spark.sparkContext)
+    val slotsAfterFirst = ResidentCache.liveEntries(spark.sparkContext)
     // second sweep from the SAME session: identical plans must reuse
     // the warm entries — zero growth in either the slot map or the
     // materialized RDD cache
     sweep(spark)
     assert(spark.sparkContext.getPersistentRDDs.size == rddsAfterFirst,
       "same-session re-sweep must not grow the persisted-RDD set")
-    assert(ResidentCache.liveSlots(spark.sparkContext) == slotsAfterFirst,
+    assert(ResidentCache.liveEntries(spark.sparkContext) == slotsAfterFirst,
       "same-session re-sweep must not grow the resident slot map")
     // session-per-job server: newSession() children share the context's
     // CacheManager, so per-job sessions must not pin per-session copies
@@ -1966,7 +2000,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (_ <- 1 to 3) sweep(spark.newSession())
     assert(spark.sparkContext.getPersistentRDDs.size == rddsAfterFirst,
       "session-per-job sweeps must not accumulate cached plans per dead session")
-    assert(ResidentCache.liveSlots(spark.sparkContext) == slotsAfterFirst,
+    assert(ResidentCache.liveEntries(spark.sparkContext) == slotsAfterFirst,
       "slot count must stay one per (context, slot) across sessions")
   }
 
@@ -1975,33 +2009,31 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     // a long-lived server sweeping many dataset dirs: slot names embed
-    // the dir, so without a cap the maps grow one corpus-sized resident
-    // plan per dir for the JVM lifetime
+    // the dir, so without a cap the registry grows one entry per dir
+    // for the JVM lifetime
     val s2 = spark.newSession()
-    s2.conf.set("spark.graft.residentCache.maxSlots", "3")
+    val sc = spark.sparkContext
     def build(i: Int) = Seq((i.toLong, s"dir$i")).toDF("id", "dir")
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
-    (1 to 8).foreach(i => ResidentCache.memo(s2, s"lru-test@dir$i")(build(i)).collect())
-    assert(ResidentCache.liveMemos(spark.sparkContext) <= 3,
-      s"memo map exceeded the cap: ${ResidentCache.liveMemos(spark.sparkContext)}")
-    // eviction unpersisted — the 8 inserts can net at most cap new RDDs
-    assert(spark.sparkContext.getPersistentRDDs.size <= rddsBefore + 3,
-      "evicted memos left their cached RDDs behind")
-    // an evicted slot re-memoizes: same data, re-cached, no staleness
-    val r1 = ResidentCache.memo(s2, "lru-test@dir1")(build(1)).collect()
-    assert(r1.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "dir1")),
+    val m = ResidentCache.memo(s2, "lru-test@dir1", "v1")(build(1))
+    assert(m.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    // one cap over every kind: cheap driver values push the memo out
+    var runs = 0
+    (1 to ResidentCache.MaxEntries).foreach(i =>
+      ResidentCache.value(s2, s"lru-value@dir$i", "v1") { runs += 1; i })
+    assert(ResidentCache.liveEntries(sc) <= ResidentCache.MaxEntries,
+      s"registry exceeded the cap: ${ResidentCache.liveEntries(sc)}")
+    assert(m.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the evicted LRU memo must be unpersisted")
+    // an evicted memo re-memoizes: same data, re-cached, no staleness
+    val r1 = ResidentCache.memo(s2, "lru-test@dir1", "v1")(build(1))
+    assert(!(r1 eq m), "an evicted memo must rebuild")
+    assert(r1.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "dir1")),
       "re-memoized slot returned wrong data")
-    // driver-held models mirror the same cap + rebuild-on-miss
-    (1 to 8).foreach(i => ResidentCache.localModel(s2, s"lru-model@dir$i")(build(i)))
-    assert(ResidentCache.liveModels(spark.sparkContext) <= 3,
-      s"model map exceeded the cap: ${ResidentCache.liveModels(spark.sparkContext)}")
-    val m1 = ResidentCache.localModel(s2, "lru-model@dir1")(build(1)).collect()
-    assert(m1.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "dir1")),
-      "re-trained model returned wrong data")
-    // the resident slot cache trims the same way
-    (1 to 8).foreach(i => ResidentCache(s2, s"lru-slot@dir$i", build(i)).collect())
-    assert(ResidentCache.liveSlots(spark.sparkContext) <= 3,
-      s"slot map exceeded the cap: ${ResidentCache.liveSlots(spark.sparkContext)}")
+    // a live value hits; the evicted LRU value recomputes
+    val n = runs
+    assert(ResidentCache.value(s2, s"lru-value@dir${ResidentCache.MaxEntries}", "v1")(-1) ==
+      ResidentCache.MaxEntries && runs == n)
+    assert(ResidentCache.value(s2, "lru-value@dir1", "v1") { runs += 1; 1 } == 1 && runs == n + 1)
   }
 
   test("resident cache: byte budget yields residency, never results") {
