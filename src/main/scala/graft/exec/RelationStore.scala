@@ -30,9 +30,11 @@ import graft.core.Relation
   * coordinator. Same-JVM writers additionally arbitrate on a process
   * lock.
   *
-  * Every committed version is a MANIFEST (`_manifest.json` listing
-  * table-relative data-file paths with their sizes and column stats),
-  * not a directory of copies: data files live where they were first
+  * Every committed version is ONE FILE, its MANIFEST (`_manifest.json`
+  * listing table-relative data-file paths with their sizes and column
+  * stats, plus the written schema, the delta-absorption marks and the
+  * merge-sink batch tag), not a directory of copies or of sidecar
+  * metadata files: data files live where they were first
   * written (a full write's own version dir, or a streaming delta dir)
   * and later versions reference them. The manifests are the store's
   * only state — no session-catalog table mirrors a version. Every
@@ -173,10 +175,11 @@ final class RelationStore(
 
   /** Read a metadata file, distinguishing ABSENCE (None — the normal
     * "never written" case) from a FAILED READ of a present file (loud).
-    * Collapsing the two is how bookkeeping silently degrades: e.g. an
-    * absorbed-set read hiccup re-listing absorbed deltas as live would
-    * union their files on top of the manifest entries that already
-    * carry them — silent row duplication. A FileNotFoundException IS
+    * Collapsing the two is how bookkeeping silently degrades: e.g. a
+    * manifest read hiccup taken as "no absorbed deltas" would re-list
+    * absorbed deltas as live and union their files on top of the
+    * entries that already carry them — silent row duplication. A
+    * FileNotFoundException IS
     * absence (exists+read is TOCTOU under concurrent GC); any other
     * IOException on a file that still exists rethrows.
     */
@@ -342,7 +345,7 @@ final class RelationStore(
   //  1. RESERVE a slot: atomically create `_rsv_v{N}` (rename WITHOUT
   //     the OVERWRITE option — fails if the marker exists). The winner
   //     owns verDir(N) exclusively; losers probe upward.
-  //  2. Stage data + per-version metadata into the owned slot.
+  //  2. Stage the data files into the owned slot.
   //  3. COMMIT: rename the manifest into place (atomic visibility) and
   //     verify the slot became the table head. If a competitor
   //     committed ABOVE meanwhile, withdraw the manifest, reserve a
@@ -466,27 +469,30 @@ final class RelationStore(
   /** Atomic-visibility manifest write into an OWNED slot: readers see
     * the full file or nothing — the rename is the commit.
     */
-  private def writeManifestCommit(name: String, v: Int, layout: String,
-      partitionBy: Seq[String], entries: Seq[MEntry], base: Option[Int],
-      bucketing: Option[BucketSpec]): Unit = {
+  private def writeManifestCommit(name: String, v: Int, c: ManifestContent,
+      base: Option[Int]): Unit = {
     val tmp = new HPath(verDir(name, v), "._manifest.json.tmp")
     val fields = Map(
-      "layout" -> layout,
-      "partition_by" -> partitionBy,
+      "layout" -> c.layout,
+      "partition_by" -> c.partitionBy,
       // commit wall-clock — what timestamp time travel ([[readAsOf]])
       // and age-based retention resolve against. Writer-clock skew is
       // inherent to the contract (same as Delta/Iceberg snapshot
       // timestamps); resolution clamps to the version ORDER below.
       "ts" -> System.currentTimeMillis(),
       // the version this commit was BUILT AGAINST (carried entries,
-      // watermark) — what crash ADOPTION checks: an orphan whose base
+      // delta marks) — what crash ADOPTION checks: an orphan whose base
       // is no longer the head would have failed verification, so
       // publishing it would lose the competitor's update
       "base" -> base.getOrElse(-1),
-      "files" -> entries.map(_.rel),
-      "sizes" -> entries.map(_.size),
-      "stats" -> entries.map(_.stats.map(FileStats.toJsonValue).orNull))
-    writeStr(tmp, graft.artifacts.Json.write(bucketing.fold(fields)(b =>
+      "files" -> c.entries.map(_.rel),
+      "sizes" -> c.entries.map(_.size),
+      "stats" -> c.entries.map(_.stats.map(FileStats.toJsonValue).orNull),
+      "schema" -> c.schema.json,
+      "watermark" -> c.mark.wm,
+      "absorbed" -> c.mark.above.map { case (lo, hi) => Seq(lo, hi) },
+      "batch" -> c.batch)
+    writeStr(tmp, graft.artifacts.Json.write(c.bucketing.fold(fields)(b =>
       fields ++ Map("bucket_by" -> b.bucketColumnNames, "buckets" -> b.numBuckets))))
     fctx.rename(tmp, manifestFile(name, v), Options.Rename.OVERWRITE)
   }
@@ -494,21 +500,20 @@ final class RelationStore(
   /** Commit a staged slot as the new table HEAD, retrying on conflict.
     *
     * `build(slot, base)` recomputes everything base-dependent for the
-    * attempt — carried entries, watermark files — and returns the
-    * manifest content, or None to ABORT (the staged slot is discarded;
-    * compaction uses this when its inputs vanished under it). The
-    * head check after the manifest rename closes the remaining window:
-    * a competitor that committed ABOVE us never saw our manifest, so
-    * letting ours stand would silently drop it from the history — we
-    * withdraw, re-slot above the new head (data stays put, the manifest
-    * re-references it cross-dir), and rebuild against the new base.
-    * `bucketing` is recorded in the manifest of a bucketed write.
+    * attempt — carried entries, delta marks — from the base's manifest
+    * and returns the new manifest's content, or None to ABORT (the
+    * staged slot is discarded; compaction uses this when its inputs
+    * vanished under it). The head check after the manifest rename
+    * closes the remaining window: a competitor that committed ABOVE us
+    * never saw our manifest, so letting ours stand would silently drop
+    * it from the history — we withdraw, re-slot above the new head
+    * (data stays put, the manifest re-references it cross-dir), and
+    * rebuild against the new base.
     *
     * @return the committed head version, or None when `build` aborted
     */
   private def commitHead(name: String, firstSlot: Int,
-      build: (Int, Option[Int]) => Option[(String, Seq[String], Seq[MEntry])],
-      bucketing: Option[BucketSpec] = None): Option[Int] = {
+      build: (Int, Option[Int]) => Option[ManifestContent]): Option[Int] = {
     def committedBelow(n: Int): Option[Int] =
       physicalVersionDirs(name).filter(v => v < n && hasManifest(name, v))
         .maxOption orElse pointerFloor(name).filter(_ < n)
@@ -534,7 +539,6 @@ final class RelationStore(
         // head would be silently invisible — re-slot above it (staged
         // data stays put; the new manifest references it cross-dir)
         val m = reserveVersion(name, head.get + 1)
-        carryVersionMeta(name, n, m)
         priorSlots ::= n
         n = m
       } else {
@@ -557,8 +561,8 @@ final class RelationStore(
             // committed competitor head ([[demoteSlot]]).
             (n :: priorSlots).foreach(demoteSlot(name, _))
             return None
-          case Some(Some((layout, pby, entries))) =>
-            writeManifestCommit(name, n, layout, pby, entries, base, bucketing)
+          case Some(Some(content)) =>
+            writeManifestCommit(name, n, content, base)
             // linearizability check (RAW view): we are the head AND
             // nobody slipped a commit in between our base and our slot —
             // otherwise our carried state is stale (lost update) and
@@ -611,20 +615,34 @@ final class RelationStore(
     def leafKey: String = ManifestFileIndex.leafKeyOf(rel)
   }
 
-  /** A committed version's manifest ([[writeManifestCommit]] writes
-    * every field). `layout`: "files" (flat), "partitioned" (entries
-    * carry `col=value` leaf keys in their paths), or "bucketed"
-    * (entry file names carry bucket ids; `bucketing` is the spec).
+  /** What a commit publishes ([[writeManifestCommit]] writes every
+    * field): the whole state of a version. `layout`: "files" (flat),
+    * "partitioned" (entries carry `col=value` leaf keys in their paths),
+    * or "bucketed" (entry file names carry bucket ids; `bucketing` is
+    * the spec).
     */
-  private[exec] final case class VersionManifest(
+  private[exec] final case class ManifestContent(
       layout: String, partitionBy: Seq[String], entries: Seq[MEntry],
+      bucketing: Option[BucketSpec],
+      /** The written schema: the read's column order and types, and
+        * what per-file stats re-type against.
+        */
+      schema: StructType,
+      /** Which delta landings the version absorbed ([[DeltaMark]]). */
+      mark: DeltaMark,
+      /** The batch id a merge-style streaming sink applied ([[lastBatchTag]]). */
+      batch: Option[Long])
+
+  /** A committed version's manifest: its content plus what the commit
+    * stamped on it.
+    */
+  private[exec] final case class VersionManifest(content: ManifestContent,
       /** The committed version this manifest was built against: -1 for
         * a first commit, what crash adoption checks against the head.
         */
       baseVersion: Int,
       /** Commit wall-clock (epoch ms). */
-      commitTs: Long,
-      bucketing: Option[BucketSpec])
+      commitTs: Long)
 
   private def manifestFile(name: String, v: Int): HPath =
     new HPath(verDir(name, v), "_manifest.json")
@@ -657,13 +675,26 @@ final class RelationStore(
           s"tableDir=$state pointer=${pointerFloor(name).getOrElse("<none>")}")
     }
 
+  private def contentAt(name: String, v: Int): ManifestContent = manifestAt(name, v).content
+
+  /** The head version's manifest content, None before the first commit.
+    * A head that expires between its resolution and the read (a
+    * concurrent commit's retention pass) re-resolves: a newer head
+    * exists then.
+    */
+  private def headContent(name: String, attempt: Int = 0): Option[ManifestContent] =
+    try currentVersion(name).map(contentAt(name, _))
+    catch {
+      case _: java.io.FileNotFoundException if attempt < 7 => headContent(name, attempt + 1)
+    }
+
   /** Parse a manifest [[writeManifestCommit]] wrote. Every field is
     * required (`bucket_by` and `buckets` for a bucketed layout):
     * content that does not parse, or lacks a field, fails loudly and
-    * names the file (as [[markAt]] does for `_delta_watermark`) — a
-    * guessed default could skip live files or adopt a conflicted
-    * orphan, and a bucketed version read as entry-less would let GC
-    * reclaim the files it scans.
+    * names the file — a guessed default could skip live files, re-list
+    * absorbed deltas as live (silent row duplication) or adopt a
+    * conflicted orphan, and a bucketed version read as entry-less would
+    * let GC reclaim the files it scans.
     */
   private def parseManifest(name: String, v: Int, raw: String): VersionManifest = {
     val file = manifestFile(name, v)
@@ -675,34 +706,47 @@ final class RelationStore(
       case _ => throw corrupt("not a JSON object")
     }
     def field(k: String): Any = m.getOrElse(k, throw corrupt(s"missing field '$k'"))
-    def list(k: String): Seq[Any] = field(k) match {
+    def seq(k: String, x: Any): Seq[Any] = x match {
       case s: Seq[Any @unchecked] => s
       case _ => throw corrupt(s"field '$k' is not a list")
     }
-    def num(k: String, x: Any): Double =
-      try String.valueOf(x).toDouble
-      catch { case e: NumberFormatException => throw corrupt(s"field '$k' is not a number", e) }
+    def list(k: String): Seq[Any] = seq(k, field(k))
+    def long(k: String, x: Any): Long = x match {
+      case l: Long => l
+      case _ => throw corrupt(s"field '$k' is not an integer")
+    }
     val files = list("files").map(String.valueOf(_))
-    val sizes = list("sizes").map(num("sizes", _).toLong)
+    val sizes = list("sizes").map(long("sizes", _))
     val rawStats = list("stats")
     if (sizes.size != files.size || rawStats.size != files.size)
       throw corrupt(s"${files.size} files, ${sizes.size} sizes, ${rawStats.size} stats")
-    // per-file stats re-type against the version's stored schema; a
-    // null entry is a file without stats — never skipped
-    lazy val st = org.apache.spark.sql.types.DataType
-      .fromJson(readStr(new HPath(verDir(name, v), "_graft_schema.json"))).asInstanceOf[StructType]
-    val stats = rawStats.map(x => if (x == null) None else FileStats.fromJsonValue(x, st))
+    val schema =
+      try org.apache.spark.sql.types.DataType.fromJson(String.valueOf(field("schema")))
+        .asInstanceOf[StructType]
+      catch { case scala.util.control.NonFatal(e) => throw corrupt("field 'schema' is not a schema", e) }
+    // per-file stats re-type against the version's schema; a null
+    // entry is a file without stats — never skipped
+    val stats = rawStats.map(x => if (x == null) None else FileStats.fromJsonValue(x, schema))
     val layout = String.valueOf(field("layout"))
     if (!Set("files", "partitioned", "bucketed")(layout)) throw corrupt(s"unknown layout '$layout'")
     val bucketing = if (layout != "bucketed") None else {
       val keys = list("bucket_by").map(String.valueOf(_))
-      val n = num("buckets", field("buckets")).toInt
+      val n = long("buckets", field("buckets")).toInt
       if (keys.isEmpty || n <= 0) throw corrupt(s"bucket spec $keys into $n buckets")
       Some(BucketSpec(n, keys, keys))
     }
-    VersionManifest(layout, list("partition_by").map(String.valueOf(_)),
-      files.lazyZip(sizes).lazyZip(stats).map(MEntry(_, _, _)).toSeq,
-      num("base", field("base")).toInt, num("ts", field("ts")).toLong, bucketing)
+    val above = list("absorbed").map { r =>
+      seq("absorbed", r).map(long("absorbed", _)) match {
+        case Seq(lo, hi) if lo <= hi => (lo, hi)
+        case other => throw corrupt(s"absorbed range $other is not a [lo, hi] pair")
+      }
+    }
+    val batch = Option(field("batch")).map(long("batch", _))
+    VersionManifest(
+      ManifestContent(layout, list("partition_by").map(String.valueOf(_)),
+        files.lazyZip(sizes).lazyZip(stats).map(MEntry(_, _, _)).toSeq, bucketing, schema,
+        DeltaMark(long("watermark", field("watermark")), RelationStore.mergeRanges(above)), batch),
+      long("base", field("base")).toInt, long("ts", field("ts")))
   }
 
   /** Physical data files under a version dir as manifest entries.
@@ -824,7 +868,7 @@ final class RelationStore(
       return spark.sql(readStr(viewFile(name)))
     }
     val cur = currentVersion(name)
-    val (baseVer, live): (Option[Int], Seq[Long]) = asOfVersion match {
+    val (m, live): (Option[ManifestContent], Seq[Long]) = asOfVersion match {
       case Some(v) =>
         // time travel addresses committed versions only: v ≤ head AND
         // manifest present (a dir above the head is a torn leftover
@@ -834,21 +878,20 @@ final class RelationStore(
           throw new IllegalStateException(
             s"version $v of $schema.$name not found (have: " +
               s"${versions(name).filter(_ <= cur.getOrElse(-1)).mkString(",")})")
-        (Some(v), Nil)
+        (Some(contentAt(name, v)), Nil)
       case None =>
         // reuse the head resolution above instead of re-listing
-        val l = liveDeltaIdsAt(name, markAt(name, cur))
+        val head = cur.map(contentAt(name, _))
+        val l = liveDeltaIdsAt(name, markOf(head))
         if (cur.isEmpty && l.isEmpty)
           throw new IllegalStateException(s"relation not found: $schema.$name")
-        (cur, l)
+        (head, l)
     }
-    val stored = schemaIn(baseVer.map(verDir(name, _)).toSeq ++ live.map(deltaDirOf(name, _)))
-      .getOrElse(throw new IllegalStateException(s"relation $schema.$name has no stored schema"))
+    val stored = m.fold(deltaSchema(name, live.head))(_.schema)
     // ONE manifest-index scan over the base version's entries plus the
     // live deltas' files: no directory listing of the base, no stat
     // calls, partition values/pruning and per-file skipping served from
     // the manifest itself
-    val m = baseVer.map(manifestAt(name, _))
     val byLeaf = (m.toSeq.flatMap(_.entries) ++ live.flatMap(deltaEntries(name, _, Some(stored))))
       .groupBy(_.leafKey).toSeq.sortBy(_._1)
       .map { case (k, es) => k -> es.map(e => (entryStatus(name, e), e.stats)) }
@@ -993,7 +1036,7 @@ final class RelationStore(
       minKeepTs.fold(Set.empty[Int])(ts =>
         committed.filter(v => commitTimestamp(name, v).exists(_ >= ts)).toSet)
     val referenced: Set[String] =
-      retained.flatMap(v => manifestOf(name, v).toSeq.flatMap(_.entries.map(_.rel)))
+      retained.flatMap(v => manifestOf(name, v).toSeq.flatMap(_.content.entries.map(_.rel)))
     var reclaimed = 0
     // NEVER gut a PUBLISHED manifest above this pass's head snapshot
     // (manifest, marker gone): it is a commit that landed while we were
@@ -1023,9 +1066,7 @@ final class RelationStore(
       try {
         if (fsExists(dir) && !fsExists(new HPath(dir, "_gutted")))
           writeStr(new HPath(dir, "_gutted"), "")
-        Seq("_manifest.json", "_graft_schema.json", "_delta_watermark",
-          "_delta_absorbed", "_graft_batch", "_SUCCESS")
-          .foreach(m => fs.delete(new HPath(dir, m), false))
+        Seq("_manifest.json", "_SUCCESS").foreach(m => fs.delete(new HPath(dir, m), false))
         dataFilesUnder(dir).foreach { st =>
           if (!referenced.contains(relTo(td, st.getPath))) fs.delete(st.getPath, false)
         }
@@ -1058,8 +1099,10 @@ final class RelationStore(
     // set) are reclaimable only when no retained manifest references a
     // file inside them. Absorbed as of THIS pass's head: a fold that
     // commits during the pass absorbs deltas its new manifest
-    // references, which `referenced` (retained ≤ cur) never saw
-    val mark = markAt(name, Some(cur))
+    // references, which `referenced` (retained ≤ cur) never saw. A head
+    // swept meanwhile by a competitor's pass marks nothing absorbed:
+    // this pass then reclaims no delta
+    val mark = markOf(manifestOf(name, cur).map(_.content))
     listNames(deltaRoot(name)).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("b") && n.drop(1).forall(_.isDigit) &&
@@ -1091,16 +1134,16 @@ final class RelationStore(
   // Every `deltaFoldEvery` landings the live deltas FOLD into a new base
   // version: ONE manifest file naming the previous base's entries plus
   // the delta files — zero data bytes written, on any filesystem. The
-  // fold records a `_delta_watermark` in the version dir: deltas with
-  // id ≤ watermark are absorbed (excluded from reads, reclaimed when no
-  // retained manifest references them), so a crash between
-  // pointer-commit and delta-reap never double-counts.
+  // fold's manifest records the delta marks ([[DeltaMark]]): absorbed
+  // deltas are excluded from reads and reclaimed when no retained
+  // manifest references them, so a crash between pointer-commit and
+  // delta-reap never double-counts.
 
   /** Batch ids of COMMITTED, not-yet-absorbed delta landings, ascending. */
   def landedBatchIds(name: String): Seq[Long] = liveDeltaIds(name)
 
   private def liveDeltaIds(name: String): Seq[Long] =
-    liveDeltaIdsAt(name, currentMark(name))
+    liveDeltaIdsAt(name, markOf(headContent(name)))
 
   /** [[liveDeltaIds]] against an already-resolved absorption mark —
     * callers that hold a head resolution avoid re-listing the table dir
@@ -1130,13 +1173,13 @@ final class RelationStore(
     * Size bound: the RANGE encoding makes the set O(#open gaps), not
     * O(absorbed ids) — a PERMANENTLY dead producer lane (the worst
     * case: every surviving landing adds one id above the oldest gap
-    * forever) costs one range endpoint per gap, so the serialized
-    * `_delta_absorbed` file and every fold's metadata stay O(1) for a
+    * forever) costs one range endpoint per gap, so the manifest's
+    * `absorbed` list and every fold's metadata stay O(1) for a
     * single dead lane no matter how many ids land past it. Ranges
     * DRAIN as gaps fill: the watermark catches up and absorbs the
     * leading range.
     */
-  private final case class DeltaMark(wm: Long, above: Seq[(Long, Long)]) {
+  private[exec] final case class DeltaMark(wm: Long, above: Seq[(Long, Long)]) {
     def absorbed(id: Long): Boolean = id <= wm || {
       // binary search the sorted disjoint ranges
       var lo = 0; var hi = above.length - 1; var found = false
@@ -1152,43 +1195,11 @@ final class RelationStore(
     def maxAbsorbed: Long = above.lastOption.map(_._2).getOrElse(wm)
   }
 
-  private def currentMark(name: String): DeltaMark =
-    markAt(name, currentVersion(name))
-
-  private def markAt(name: String, cur: Option[Int]): DeltaMark =
-    cur.map { v =>
-      val d = verDir(name, v)
-      // a MISSING watermark/absorbed file is normal (no fold / no gap
-      // yet) and reads as empty; a PRESENT one that cannot be READ or
-      // PARSED must fail LOUDLY, not degrade — treating absorbed ids
-      // as live would union their delta dirs on top of the manifest
-      // entries that already carry the same files (silent row
-      // duplication), and treating unknown ids as absorbed would
-      // swallow unlanded batches. Neither silent direction is safe, so
-      // name the file and stop ([[readStrIfExists]] rethrows read
-      // failures of present files; parse failures throw here).
-      val wmFile = new HPath(d, "_delta_watermark")
-      val wm = readStrIfExists(wmFile).map { raw =>
-        try raw.trim.toLong
-        catch {
-          case e: NumberFormatException => throw new IllegalStateException(
-            s"corrupt $wmFile: '${raw.take(120)}' — restore it or full-write " +
-              "the table to reset delta bookkeeping", e)
-        }
-      }.getOrElse(-1L)
-      val abFile = new HPath(d, "_delta_absorbed")
-      val above = readStrIfExists(abFile) match {
-        case None => Nil
-        case Some(raw) =>
-          try RelationStore.parseRanges(raw)
-          catch {
-            case e: NumberFormatException => throw new IllegalStateException(
-              s"corrupt $abFile: '${raw.take(120)}' — restore it or " +
-                "full-write the table to reset delta bookkeeping", e)
-          }
-      }
-      DeltaMark(wm, above)
-    }.getOrElse(DeltaMark(-1L, Nil))
+  /** The delta marks of a base version's manifest; nothing absorbed
+    * without a base.
+    */
+  private def markOf(base: Option[ManifestContent]): DeltaMark =
+    base.fold(DeltaMark(-1L, Nil))(_.mark)
 
   /** Whether `batchId` has already been durably landed (committed delta
     * dir, or absorbed below the base watermark). The replay guard:
@@ -1197,7 +1208,10 @@ final class RelationStore(
     * and [[appendDelta]] skips it.
     */
   def batchLanded(name: String, batchId: Long): Boolean =
-    currentMark(name).absorbed(batchId) || fsExists(deltaDirOf(name, batchId))
+    landedAgainst(name, markOf(headContent(name)), batchId)
+
+  private def landedAgainst(name: String, mark: DeltaMark, batchId: Long): Boolean =
+    mark.absorbed(batchId) || fsExists(deltaDirOf(name, batchId))
 
   /** Land one micro-batch as an immutable delta directory. Returns false
     * (and evaluates NOTHING — `df` stays lazy) when `batchId` already
@@ -1209,8 +1223,10 @@ final class RelationStore(
     // replay guard FIRST: an epoch that already landed must skip
     // quietly even if the table has since changed shape (e.g. a
     // bucketed CTAS superseded the landing loop) — crashing the stream
-    // on a replayed old epoch would wedge recovery
-    if (batchLanded(name, batchId)) return false
+    // on a replayed old epoch would wedge recovery. The head manifest
+    // is resolved once: its marks, layout and schema guard the landing
+    val head = headContent(name)
+    if (landedAgainst(name, markOf(head), batchId)) return false
     // delta landings are COMMITS too: two sessions replaying one epoch
     // arbitrate on the delta dir's no-overwrite rename, which is only
     // atomic where the coordinator says reservations are — on a plain
@@ -1225,16 +1241,18 @@ final class RelationStore(
           "concurrentWriters=false if exactly one writer process lands here, " +
           "or supply an external CommitCoordinator.")
     require(!isView(name), s"cannot land deltas into view $schema.$name")
-    headLayout(name).foreach(l =>
-      require(l == "files", s"cannot land deltas into $l-layout relation $schema.$name"))
-    // same column names + types as the landed content — the read path
+    head.foreach(m =>
+      require(m.layout == "files", s"cannot land deltas into ${m.layout}-layout relation $schema.$name"))
+    // same column names + types as the landed content (the base's, or
+    // the oldest live delta's for a delta-only table) — the read path
     // unions the files, so drift would surface as torn schemas later
-    storedSchemaOf(name).foreach { stored =>
-      val landed = stored.fields.toSeq.map(f => (f.name, f.dataType))
-      val incoming = df.schema.fields.toSeq.map(f => (f.name, f.dataType))
-      require(landed == incoming,
-        s"appendDelta($name): schema drift — landed $landed vs incoming $incoming")
-    }
+    head.map(_.schema)
+      .orElse(liveDeltaIdsAt(name, markOf(head)).headOption.map(deltaSchema(name, _)))
+      .foreach { stored =>
+        require(sameColumns(stored, df.schema),
+          s"appendDelta($name): schema drift — landed ${stored.simpleString} " +
+            s"vs incoming ${df.schema.simpleString}")
+      }
     fs.mkdirs(deltaRoot(name))
     // tmp name carries a nonce: two sessions replaying the SAME epoch
     // must not share a staging dir; the no-OVERWRITE rename below then
@@ -1309,7 +1327,7 @@ final class RelationStore(
       // head yet when our fold was a no-op behind a competitor's fold
       // that is committed but not yet published: nothing to compact.
       if (currentVersion(name).flatMap(manifestOf(name, _))
-          .exists(_.entries.size >= autoCompactMinFiles))
+          .exists(_.content.entries.size >= autoCompactMinFiles))
         compact(name, autoCompactTargetBytes)
     }
     true
@@ -1336,7 +1354,8 @@ final class RelationStore(
       // fold already absorbed some deltas into the base entries, and
       // re-listing those as live would duplicate their files in the
       // manifest
-      val baseMark = markAt(name, base)
+      val baseM = base.map(contentAt(name, _))
+      val baseMark = markOf(baseM)
       val live = liveDeltaIdsAt(name, baseMark)
       if (live.isEmpty) None // superseded mid-flight: no-op
       else {
@@ -1345,7 +1364,7 @@ final class RelationStore(
         // replay guard's contract — raising it over a GAP in the landed
         // sequence would make the gap id's late landing read as
         // already-landed and silently swallow its batch); absorbed ids
-        // beyond a gap are recorded explicitly in `_delta_absorbed` as
+        // beyond a gap are recorded explicitly in the `absorbed` list as
         // merged RANGES, so one stalled producer never wedges folding
         // for the other (before the set, every fold past a gap was a
         // no-op — version churn plus unboundedly growing live-delta
@@ -1359,43 +1378,30 @@ final class RelationStore(
           w = above.head._2
           above = above.tail
         }
-        val prevEntries = base.toSeq.flatMap(manifestAt(name, _).entries)
-        val schemaSrc = (base.map(verDir(name, _)).toSeq ++ live.map(deltaDirOf(name, _)))
-          .map(d => new HPath(d, "_graft_schema.json")).find(fsExists)
-        val foldSchema = schemaSrc.map(s =>
-          org.apache.spark.sql.types.DataType.fromJson(readStr(s)).asInstanceOf[StructType])
+        val prevEntries = baseM.toSeq.flatMap(_.entries)
+        val foldSchema = baseM.fold(deltaSchema(name, live.head))(_.schema)
         // delta files carry the column stats their LANDING collected
         // (the `_graft_stats.json` sidecar) into the manifest — the
         // fold reads one tiny sidecar per delta and ZERO parquet
         // footers, and still writes zero data bytes
-        val landed = live.flatMap(deltaEntries(name, _, foldSchema))
-        schemaSrc.foreach(s =>
-          writeStr(new HPath(verDir(name, n), "_graft_schema.json"), readStr(s)))
-        writeStr(new HPath(verDir(name, n), "_delta_watermark"), w.toString)
-        if (above.nonEmpty)
-          writeStr(new HPath(verDir(name, n), "_delta_absorbed"),
-            RelationStore.formatRanges(above))
+        val landed = live.flatMap(deltaEntries(name, _, Some(foldSchema)))
         folded = live.size
         // belt-and-braces: never list one physical file twice even if
         // a future base/watermark skew slips through
         val prevRels = prevEntries.map(_.rel).toSet
-        Some(("files", Nil, prevEntries ++ landed.filterNot(e => prevRels(e.rel))))
+        // a fold changes no row a read sees: the base's batch tag stays
+        Some(ManifestContent("files", Nil, prevEntries ++ landed.filterNot(e => prevRels(e.rel)),
+          None, foldSchema, DeltaMark(w, above), baseM.flatMap(_.batch)))
       }
     }).fold(0)(_ => folded)
   }
 
-  /** The stored schema of the current landed content (base version's, or
-    * the oldest live delta's for a delta-only table).
+  /** The schema a delta landing recorded (its own `_graft_schema.json`:
+    * a delta commits by directory rename, not by manifest).
     */
-  private def storedSchemaOf(name: String): Option[StructType] =
-    schemaIn(currentVersion(name).map(verDir(name, _)).toSeq ++
-      liveDeltaIds(name).map(deltaDirOf(name, _)))
-
-  /** The `_graft_schema.json` of the first of `dirs` that has one. */
-  private def schemaIn(dirs: Seq[HPath]): Option[StructType] =
-    dirs.map(d => new HPath(d, "_graft_schema.json")).find(fsExists).map { f =>
-      org.apache.spark.sql.types.DataType.fromJson(readStr(f)).asInstanceOf[StructType]
-    }
+  private def deltaSchema(name: String, id: Long): StructType =
+    org.apache.spark.sql.types.DataType.fromJson(
+      readStr(new HPath(deltaDirOf(name, id), "_graft_schema.json"))).asInstanceOf[StructType]
 
   /** Write a new version and commit it (stage into a reserved slot,
     * publish the manifest, verify headship — [[commitHead]]).
@@ -1412,8 +1418,8 @@ final class RelationStore(
         */
       validate: Option[DataFrame => Unit] = None,
       /** Exactly-once marker for merge-style streaming sinks: the batch
-        * id this commit applies, persisted IN the version dir so the
-        * marker and the data commit atomically together (pointer swap).
+        * id this commit applies, recorded in the version's manifest so
+        * the marker and the data commit atomically together.
         * A replayed foreachBatch epoch checks [[lastBatchTag]] ≥ its id
         * and skips the non-idempotent merge.
         */
@@ -1442,9 +1448,6 @@ final class RelationStore(
           (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
             .parquet(dest.toString)
       }
-      // leading "_" files are invisible to parquet FileIndex (like _SUCCESS)
-      writeStr(new HPath(dest, "_graft_schema.json"), df.schema.json)
-      batchTag.foreach(t => writeStr(new HPath(dest, "_graft_batch"), t.toString))
       // validation runs pre-commit over the STAGED files: a throw
       // releases the slot and the previous version stays current
       validate.foreach(v => v(spark.read.parquet(dest.toString)))
@@ -1452,31 +1455,26 @@ final class RelationStore(
     val entries = physicalEntries(name, slot, statsSchema = Some(df.schema))
     val layout =
       if (bucketing.isDefined) "bucketed" else if (partitionBy.nonEmpty) "partitioned" else "files"
-    commitHead(name, slot, { (n, base) =>
+    commitHead(name, slot, { (_, base) =>
       // a full write REPLACES the table's content: every delta landed
       // up to the commit moment is superseded — re-derived per attempt
-      // (against the BASE watermark, raw view: see foldDeltas) so a
-      // delta landing concurrently with a slow commit still gets
-      // superseded rather than unioned onto the replaced content
-      val baseMark = markAt(name, base)
+      // (against the BASE marks, raw view: see foldDeltas) so a delta
+      // landing concurrently with a slow commit still gets superseded
+      // rather than unioned onto the replaced content
+      val baseMark = markOf(base.map(contentAt(name, _)))
       // a single watermark (no absorbed set) is right here: a full
       // write supersedes EVERYTHING at or below it — including a gap
       // id's late landing, which would be stale against the replaced
       // content (the documented supersede semantics)
       val supersededWm =
         (baseMark.maxAbsorbed +: liveDeltaIdsAt(name, baseMark): Seq[Long]).max
-      if (supersededWm >= 0)
-        writeStr(new HPath(verDir(name, n), "_delta_watermark"), supersededWm.toString)
-      Some((layout, partitionBy, entries))
-    }, bucketing)
+      Some(ManifestContent(layout, partitionBy, entries, bucketing, df.schema,
+        DeltaMark(supersededWm, Nil), batchTag))
+    })
   }
 
   /** Batch tag recorded by the current version's commit, if any. */
-  def lastBatchTag(name: String): Option[Long] =
-    currentVersion(name).flatMap { v =>
-      val f = new HPath(verDir(name, v), "_graft_batch")
-      scala.util.Try(readStr(f).trim.toLong).toOption
-    }
+  def lastBatchTag(name: String): Option[Long] = headContent(name).flatMap(_.batch)
 
   /** Bucketed CTAS (reference: warehouse clustering/bucketing DDL the
     * adapters render; Spark-side this is `CLUSTERED BY … INTO n BUCKETS`):
@@ -1494,8 +1492,7 @@ final class RelationStore(
   /** Whether the head version is bucketed (its manifest's layout). */
   def isBucketed(name: String): Boolean = headLayout(name).contains("bucketed")
 
-  private def headLayout(name: String): Option[String] =
-    currentVersion(name).map(manifestAt(name, _).layout)
+  private def headLayout(name: String): Option[String] = headContent(name).map(_.layout)
 
   /** Partition-scoped commit: `df` holds the FULL replacement content of
     * the partitions it touches (and nothing else); every leaf partition
@@ -1542,7 +1539,6 @@ final class RelationStore(
     val (newEntries, written, dropped) =
       try withStagingHeartbeat(name, slot) {
         df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(dest.toString)
-        writeStr(new HPath(dest, "_graft_schema.json"), df.schema.json)
         val dr: Set[String] = touchedValues match {
           case Some(vals) if vals.nonEmpty => touchedLeafDirs(df.schema, partitionBy, vals)
           case _ => Set.empty
@@ -1554,19 +1550,18 @@ final class RelationStore(
       // carry every BASE entry whose leaf was neither re-written
       // (present among the new physical files) nor touched-to-empty —
       // recomputed per attempt so a competitor's commits to OTHER
-      // partitions carry through rather than being lost
-      base match {
-        case Some(b) =>
-          if (!schemaMatches(name, df.schema))
-            throw new IllegalStateException(
-              s"writePartitions($name): concurrent schema change under a " +
-                "partition-scoped commit — rerun the model")
-          val carried = manifestAt(name, b).entries
-            .filter(e => !written.contains(e.leafKey) && !dropped.contains(e.leafKey))
-          Some(("partitioned", partitionBy, newEntries ++ carried))
-        case None => // table vanished mid-flight: commit our partitions alone
-          Some(("partitioned", partitionBy, newEntries))
-      }
+      // partitions carry through rather than being lost. The base's
+      // delta marks carry too: absorbed deltas stay absorbed. (A table
+      // that vanished mid-flight commits our partitions alone.)
+      val baseM = base.map(contentAt(name, _))
+      if (baseM.exists(b => !sameColumns(b.schema, df.schema)))
+        throw new IllegalStateException(
+          s"writePartitions($name): concurrent schema change under a " +
+            "partition-scoped commit — rerun the model")
+      val carried = baseM.toSeq.flatMap(_.entries)
+        .filter(e => !written.contains(e.leafKey) && !dropped.contains(e.leafKey))
+      Some(ManifestContent("partitioned", partitionBy, newEntries ++ carried, None,
+        df.schema, markOf(baseM), None))
     })
   }
 
@@ -1610,21 +1605,17 @@ final class RelationStore(
     */
   def isPartitionedLayout(name: String): Boolean = headLayout(name).contains("partitioned")
 
-  /** Whether `schema` is byte-identical to the current version's stored
-    * schema (the precondition for a partition-scoped commit).
+  /** Whether `schema` has the current version's columns (the
+    * precondition for a partition-scoped commit).
     */
   def schemaMatches(name: String, schema: StructType): Boolean =
-    currentVersion(name).exists { v =>
-      val f = new HPath(verDir(name, v), "_graft_schema.json")
-      fsExists(f) && {
-        val stored = org.apache.spark.sql.types.DataType
-          .fromJson(readStr(f)).asInstanceOf[StructType]
-        // nullability is read-compatible either way (parquet fills nulls);
-        // names + types + order are what carried files must agree on
-        stored.fields.toSeq.map(x => (x.name, x.dataType)) ==
-          schema.fields.toSeq.map(x => (x.name, x.dataType))
-      }
-    }
+    headContent(name).exists(h => sameColumns(h.schema, schema))
+
+  /** Nullability is read-compatible either way (parquet fills nulls);
+    * names + types + order are what files scanned together must agree on.
+    */
+  private def sameColumns(a: StructType, b: StructType): Boolean =
+    a.fields.toSeq.map(x => (x.name, x.dataType)) == b.fields.toSeq.map(x => (x.name, x.dataType))
 
   /** Leaf partition dirs (depth = #partition cols) relative to `base`,
     * as '/'-joined `col=value` strings — used only on the DRIVER-LOCAL
@@ -1690,18 +1681,23 @@ final class RelationStore(
       throw new IllegalStateException(s"relation not found: $schema.$name"))
     // a head expiring under a concurrent commit's retention pass leaves
     // nothing to compact: the next trigger re-plans on the fresh head
-    manifestOf(name, cur) match {
+    manifestOf(name, cur).map(_.content) match {
       case None => 0
       case Some(m) if m.layout == "partitioned" =>
-        compactPartitioned(name, cur, m.partitionBy, m.entries, targetBytes, clusterColumns)
-      case Some(m) => compactFlat(name, cur, m.entries, targetBytes, clusterColumns)
+        compactPartitioned(name, cur, m, targetBytes, clusterColumns)
+      case Some(m) => compactFlat(name, cur, m, targetBytes, clusterColumns)
     }
   }
 
+  // Compaction rewrites entries only: its manifest is the head's with
+  // the new entries — delta marks, schema and batch tag carry unchanged
+  // (live deltas stay live, absorbed stay absorbed).
+
   private def compactFlat(
-      name: String, cur: Int, entries: Seq[MEntry], targetBytes: Long,
+      name: String, cur: Int, m: ManifestContent, targetBytes: Long,
       clusterColumns: Seq[String]): Int = {
     val td = tableDir(name)
+    val entries = m.entries
     // small-file cutoff at HALF the target (the Delta OPTIMIZE
     // convention): coalesce outputs average just UNDER targetBytes, so
     // classifying by `< targetBytes` would re-rewrite prior compaction
@@ -1734,12 +1730,11 @@ final class RelationStore(
         if (isStaleReadRace(e)) return 0
         throw e
     }
-    carryVersionMeta(name, cur, slot)
-    val outEntries = big ++ physicalEntries(name, slot, statsSchema = storedSchemaOf(name))
+    val outEntries = big ++ physicalEntries(name, slot, statsSchema = Some(m.schema))
     commitHead(name, slot, { (_, base) =>
       // compaction is an OPTIMIZATION: if a competitor committed under
       // it, the rewritten content is stale — abort rather than resurrect
-      if (base.contains(cur)) Some(("files", Nil, outEntries)) else None
+      if (base.contains(cur)) Some(m.copy(entries = outEntries)) else None
     }).fold(0) { _ => compactedBytes.addAndGet(smallBytes); 1 }
   }
 
@@ -1832,9 +1827,10 @@ final class RelationStore(
     }
   }
 
-  private def compactPartitioned(name: String, cur: Int, partitionBy: Seq[String],
-      entries: Seq[MEntry], targetBytes: Long, clusterColumns: Seq[String]): Int = {
+  private def compactPartitioned(name: String, cur: Int, m: ManifestContent,
+      targetBytes: Long, clusterColumns: Seq[String]): Int = {
     val td = tableDir(name)
+    val entries = m.entries
     val byLeaf = entries.groupBy(_.leafKey)
     val fragmented = byLeaf.filter { case (_, es) =>
       val ideal = math.max(1L, (es.map(_.size).sum + targetBytes - 1) / targetBytes)
@@ -1856,7 +1852,7 @@ final class RelationStore(
         // case-insensitively, like cluster-column resolution itself)
         clusterBy(spark.read.parquet(es.map(e => new HPath(td, e.rel).toString): _*),
           ideal.toInt,
-          clusterColumns.filterNot(c => partitionBy.exists(_.equalsIgnoreCase(c))))
+          clusterColumns.filterNot(c => m.partitionBy.exists(_.equalsIgnoreCase(c))))
           .write.mode(SaveMode.Overwrite).parquet(new HPath(dest, leaf).toString)
         rewrittenBytes += bytes
       }
@@ -1867,25 +1863,14 @@ final class RelationStore(
         if (isStaleReadRace(e)) return 0
         throw e
     }
-    carryVersionMeta(name, cur, slot)
     // well-sized leaves carry by reference, fragmented ones re-list
     val carried = entries.filterNot(e => fragmented.contains(e.leafKey))
     val outEntries =
-      physicalEntries(name, slot, statsSchema = storedSchemaOf(name)) ++ carried
+      physicalEntries(name, slot, statsSchema = Some(m.schema)) ++ carried
     commitHead(name, slot, { (_, base) =>
-      if (base.contains(cur)) Some(("partitioned", partitionBy, outEntries)) else None
+      if (base.contains(cur)) Some(m.copy(entries = outEntries)) else None
     }).fold(0) { _ => compactedBytes.addAndGet(rewrittenBytes); fragmented.size }
   }
-
-  /** Compaction rewrites the BASE only; carry the delta bookkeeping
-    * forward unchanged (live deltas stay live, absorbed stay absorbed).
-    */
-  private def carryVersionMeta(name: String, from: Int, to: Int): Unit =
-    Seq("_graft_schema.json", "_delta_watermark", "_delta_absorbed",
-      "_graft_batch").foreach { meta =>
-      val f = new HPath(verDir(name, from), meta)
-      if (fsExists(f)) writeStr(new HPath(verDir(name, to), meta), readStr(f))
-    }
 
   /** Store a logical view (SQL text) and register it in the session. */
   def writeView(name: String, sql: String): Unit = {
@@ -2023,21 +2008,19 @@ final class RelationStore(
       def dirSel(p: String) = s"SELECT * FROM parquet.`$p`"
       val live = liveDeltaIds(name).map(id => dirSel(deltaDirOf(name, id).toString))
       val base: Seq[String] = currentVersion(name).toSeq.flatMap { v =>
-        val m = manifestAt(name, v)
+        val m = contentAt(name, v)
         m.layout match {
           case "partitioned" =>
             // partition columns don't live in the data files: project
             // each entry's leaf values back as typed literals, in the
             // stored column order
-            val st = storedSchemaOf(name).getOrElse(
-              throw new IllegalStateException(s"no stored schema for $schema.$name"))
             m.entries.map { e =>
               val vals = e.leafKey.split('/').filter(_.contains('=')).map { seg =>
                 val eq = seg.indexOf('=')
                 ManifestFileIndex.unescapePathName(seg.take(eq)) ->
                   ManifestFileIndex.unescapePathName(seg.drop(eq + 1))
               }.toMap
-              val cols = st.fields.map { f =>
+              val cols = m.schema.fields.map { f =>
                 vals.get(f.name) match {
                   case Some("__HIVE_DEFAULT_PARTITION__") =>
                     s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`"
@@ -2081,10 +2064,10 @@ final class RelationStore(
   def health(name: String): Map[String, Any] = {
     if (isView(name)) return Map("kind" -> "view")
     val cur = currentVersion(name)
-    val m = cur.map(manifestAt(name, _))
+    val m = cur.map(contentAt(name, _))
     val entries = m.toSeq.flatMap(_.entries)
     val pool = dataFilesUnder(tableDir(name))
-    val mark = currentMark(name)
+    val mark = markOf(m)
     Map(
       "kind" -> (if (m.exists(_.layout == "bucketed")) "bucketed" else "table"),
       "versions_retained" -> versions(name).size,
@@ -2133,7 +2116,7 @@ final class RelationStore(
 object RelationStore {
 
   /** Merge id intervals into sorted, disjoint, NON-ADJACENT inclusive
-    * ranges — the `_delta_absorbed` encoding. Adjacency coalesces
+    * ranges — the manifest's `absorbed` encoding. Adjacency coalesces
     * ((1,3),(4,6) → (1,6)) so the watermark advance over the leading
     * range is complete and the serialized form is canonical: O(#gaps)
     * entries no matter how many ids were absorbed.
@@ -2150,28 +2133,6 @@ object RelationStore {
       }
       out.toSeq
     }
-
-  /** Serialize merged ranges: `lo-hi` per range, singletons as the bare
-    * id, comma-separated.
-    */
-  private[graft] def formatRanges(rs: Seq[(Long, Long)]): String =
-    rs.map { case (a, b) => if (a == b) a.toString else s"$a-$b" }.mkString(",")
-
-  /** Parse `_delta_absorbed` content ([[formatRanges]]) into merged
-    * ranges. Throws NumberFormatException on malformed content — the
-    * caller surfaces it loudly.
-    */
-  private[graft] def parseRanges(raw: String): Seq[(Long, Long)] =
-    mergeRanges(raw.trim.split(',').filter(_.nonEmpty).toSeq.map { tok =>
-      // a leading '-' is a (malformed) negative id, not a separator
-      val cut = tok.indexOf('-', 1)
-      if (cut < 0) { val v = tok.trim.toLong; (v, v) }
-      else {
-        val (a, b) = (tok.take(cut).trim.toLong, tok.drop(cut + 1).trim.toLong)
-        if (a > b) throw new NumberFormatException(s"inverted range '$tok'")
-        (a, b)
-      }
-    })
 
   /** Per-slot arbitration for SAME-JVM concurrent writers, keyed by the
     * qualified reservation-marker path. One object per slot ever

@@ -113,12 +113,6 @@ final class Runner(
     "run_started_at" -> Timestamps.sql(opts.now),
     "invocation_id" -> invocationId)
 
-  private def substContext(sql: String): String =
-    runContext.foldLeft(sql) { case (acc, (k, v)) =>
-      acc.replaceAll(raw"\{\{\s*" + k + raw"\s*\}\}",
-        java.util.regex.Matcher.quoteReplacement(v))
-    }
-
   private def compiler(
       eventWindow: Option[(Instant, Instant)] = None,
       withContext: Boolean = true) = new Compiler(
@@ -298,10 +292,8 @@ final class Runner(
     */
   private def queryCommentFor(id: String): String =
     project.queryComment match {
-      case Some(tpl) => tpl
-        .replace("{{ node_id }}", id).replace("{{node_id}}", id)
-        .replace("{{ invocation_id }}", invocationId)
-        .replace("{{invocation_id}}", invocationId)
+      case Some(tpl) =>
+        Template.substitute(tpl, Map("node_id" -> id, "invocation_id" -> invocationId))
       case None => s"graft|${opts.cmd}|$invocationId|$id"
     }
 
@@ -407,7 +399,7 @@ final class Runner(
             thisNameOf = Some((n: Node) => materializer.sqlName(n)))
           val defSql = defCompiler.compile(m, m.rawCode).executable
           val msg = materializer.materializedView(m, defSql,
-            s2 => spark.sql(substContext(s2)),
+            s2 => spark.sql(Template.substitute(s2, runContext)),
             fullRefresh = opts.fullRefresh || m.config.fullRefresh.contains(true))
           RunResult(m.uniqueId, "success", elapsed, msg)
         case Materialized.Incremental if m.config.incrementalStrategy.contains("microbatch") =>

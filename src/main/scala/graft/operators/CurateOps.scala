@@ -43,18 +43,11 @@ object CurateOps {
     // fanout 64 docs/task: the 8-gram explode is ~2k grams per doc, so
     // the default scan granularity leaves the whole explode on one
     // task (same rowsPerTask discipline as the mm byte-gram kernels).
-    // The gram exchange pins defaultParallelism partitions (an
-    // explicit count opts out of AQE coalescing): the dedup + self-
-    // join + count downstream of it are gram-volume work AQE's byte
-    // estimate under-sizes — unpinned it coalesced the whole self-join
-    // onto one 1.3 s task (measured; the candidateJoinPlan estimator
-    // blind spot again).
-    val grams = Tables.loadFanout(s, dir, "documents", rowsPerTask = 64)
+    val grams = TextOps.pinnedByGram(Tables.loadFanout(s, dir, "documents", rowsPerTask = 64)
       .select(col("source"), split(TextOps.normalized(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
       .select(col("source"),
-        explode(TextOps.wordNgrams(n)).as("g"))
-      .repartition(s.sparkContext.defaultParallelism, col("g"))
+        explode(TextOps.wordNgrams(n)).as("g")))
       .dropDuplicates("source", "g")
     val sizes = grams.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val inter = grams.select(col("source").as("src_a"), col("g"))

@@ -1931,8 +1931,12 @@ object SimilarityOps {
     * selected set ⇒ redundancy term 0).
     *
     * Scale shape: candidate generation is the distributed part — one
-    * corpus pass against the broadcast probe, `TakeOrderedAndProject`
-    * for the top-nCand (no global sort). The MMR loop then runs
+    * corpus pass crossed with the one-row probe, `TakeOrderedAndProject`
+    * for the top-nCand (no global sort), all in ONE Spark job: the
+    * probe side is coalesced to one partition and joined as a
+    * cartesian product (no broadcast, whose collection is a job of its
+    * own), so each corpus task pairs its rows with the probe row
+    * without a shuffle. The MMR loop then runs
     * driver-side over the COLLECTED candidates, which is correct at
     * any corpus size because the candidate list is bounded by
     * construction (nCand rows of dim-64 integer vectors — the same
@@ -1944,14 +1948,12 @@ object SimilarityOps {
     import s.implicits._
     val e = quantized(s, dir)
     val probe = e.filter(col("vec_id") === 0L)
-      .select(col("q"), col("nq")).head()
-    val pq = probe.getSeq[Long](0).toArray
-    val lits = pq.map(v => s"${v}L").mkString(", ")
-    val sqrtNp = math.sqrt(probe.getLong(1).toDouble)
-    val cand = e.filter(col("vec_id") =!= 0L)
-      .withColumn("dot", expr(s"dot_i64(q, array($lits))"))
+      .select(col("q").as("pq"), sqrt(col("nq").cast("double")).as("sqrt_np"))
+      .coalesce(1).hint("shuffle_replicate_nl")
+    val cand = e.filter(col("vec_id") =!= 0L).crossJoin(probe)
+      .withColumn("dot", expr("dot_i64(q, pq)"))
       .withColumn("cos",
-        col("dot").cast("double") / (sqrt(col("nq").cast("double")) * sqrtNp))
+        col("dot").cast("double") / (sqrt(col("nq").cast("double")) * col("sqrt_np")))
       .orderBy(col("cos").desc, col("vec_id")).limit(nCand)
       .select(col("vec_id"), col("q"), col("nq"), col("cos"))
       .collect()

@@ -29,6 +29,17 @@ object TextOps {
   private[graft] def wordNgrams(n: Int): Column =
     expr(s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))")
 
+  /** Hash-partition a word-gram table (column `g`) into
+    * defaultParallelism partitions. The explicit count opts the
+    * exchange out of AQE coalescing: the dedup, window, self-join and
+    * aggregates downstream of a gram exchange are gram-volume work that
+    * AQE's byte estimate under-sizes — unpinned, curate_source_overlap's
+    * whole self-join coalesced onto one 1.3 s task (measured; the
+    * candidateJoinPlan estimator blind spot).
+    */
+  private[graft] def pinnedByGram(grams: DataFrame): DataFrame =
+    grams.repartition(grams.sparkSession.sparkContext.defaultParallelism, col("g"))
+
   /** floor(log2 c) for c ≥ 1 as a long — the floored-bits device
     * (`length(bin(c)) - 1`) the idf and PMI scores share, exact
     * integer arithmetic in every engine.
@@ -1211,16 +1222,11 @@ object TextOps {
     // runs in place of the former groupBy(g) + join-back (which
     // re-shuffled the gram table twice more). Values unchanged: min
     // over the gram partition IS the joined first_doc.
-    // partition count pinned (opts out of AQE coalescing): the dedup +
-    // per-gram window + aggregate downstream are gram-volume work that
-    // AQE's byte estimate under-sizes onto one task (same estimator
-    // blind spot as curateSourceOverlap — measured there)
-    Tables.loadFanout(s, dir, "documents", rowsPerTask = 64)
+    pinnedByGram(Tables.loadFanout(s, dir, "documents", rowsPerTask = 64)
       .select(col("doc_id"), split(normalized(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"),
-        explode(wordNgrams(n)).as("g"))
-      .repartition(s.sparkContext.defaultParallelism, col("g"))
+        explode(wordNgrams(n)).as("g")))
       .dropDuplicates("g", "doc_id")
       .withColumn("first_doc",
         min(col("doc_id")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("g"))))

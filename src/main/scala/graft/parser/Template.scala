@@ -185,11 +185,15 @@ object Template {
     })
     out = thisRe.replaceAllIn(out,
       Regex.quoteReplacement(thisRelation.getOrElse("__this__")))
-    context.foreach { case (k, v) =>
-      out = out.replaceAll(
-        raw"\{\{\s*" + java.util.regex.Pattern.quote(k) + raw"\s*\}\}",
+    substitute(out, context).trim
+  }
+
+  /** Replace every bare `{{ name }}` use (any spacing inside the braces)
+    * with its value in `context`.
+    */
+  def substitute(text: String, context: Map[String, String]): String =
+    context.foldLeft(text) { case (out, (k, v)) =>
+      out.replaceAll(raw"\{\{\s*" + java.util.regex.Pattern.quote(k) + raw"\s*\}\}",
         Regex.quoteReplacement(v))
     }
-    out.trim
-  }
 }

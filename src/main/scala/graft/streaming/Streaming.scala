@@ -358,11 +358,10 @@ object Streaming {
     * specs follow. The tick re-evaluates each plan per micro-batch, so
     * a live plan over the corpus would re-derive the reference every
     * tick (O(corpus) per tick instead of O(batch)) and could drift
-    * mid-stream if the corpus moves. The contract is EXECUTABLE: with
-    * `spark.graft.ingest.validateFrozen=true` each reference plan must
-    * analyze to a bare relation scan (projections/filters over a
-    * file/local relation) or the tick fails fast naming the offender —
-    * see [[requireFrozen]].
+    * mid-stream if the corpus moves. The contract is EXECUTABLE: each
+    * reference plan must analyze to a bare relation scan
+    * (projections/filters over a file/local relation) or the tick fails
+    * fast naming the offender — see [[requireFrozen]].
     */
   def runIngestTick(
       newDocs: DataFrame,
@@ -379,12 +378,10 @@ object Streaming {
       prefix: String,
       checkpointDir: String,
       quota: Long = 1000L): Unit = {
-    if (newDocs.sparkSession.conf
-        .getOption("spark.graft.ingest.validateFrozen").contains("true"))
-      Seq("charLm" -> charLm, "langThresholds" -> langThresholds,
-        "boiler" -> boiler, "centroids" -> centroids, "codebook" -> codebook,
-        "cdcRef" -> cdcRef, "edgeRef" -> edgeRef, "spanGrams" -> spanGrams)
-        .foreach { case (n, df) => requireFrozen(n, df) }
+    Seq("charLm" -> charLm, "langThresholds" -> langThresholds,
+      "boiler" -> boiler, "centroids" -> centroids, "codebook" -> codebook,
+      "cdcRef" -> cdcRef, "edgeRef" -> edgeRef, "spanGrams" -> spanGrams)
+      .foreach { case (n, df) => requireFrozen(n, df) }
     import graft.operators.{CurateOps, DedupOps, SimilarityOps, TextOps}
     drive(newDocs, checkpointDir) { (batch0, batchId) =>
       val batch = batch0.cache()
@@ -456,9 +453,9 @@ object Streaming {
     * a reference DataFrame must analyze to a BARE relation scan —
     * projections/filters/aliases over a file or local relation — never
     * a plan with joins/aggregates that would re-derive the artifact per
-    * micro-batch (O(corpus) per tick) and drift mid-stream. Enabled via
-    * `spark.graft.ingest.validateFrozen=true` (debug mode; the check
-    * walks analyzed plans, so it costs an analysis pass per reference).
+    * micro-batch (O(corpus) per tick) and drift mid-stream. Every
+    * [[runIngestTick]] runs it once per reference (one analysis pass
+    * each, before the stream starts).
     */
   private[graft] def requireFrozen(name: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.catalyst.plans.logical._

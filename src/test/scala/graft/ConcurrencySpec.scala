@@ -443,26 +443,18 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.read("t").count() == 1) // and the commit still lands
   }
 
-  test("absorbed-range encoding stays O(#gaps) at 10k+ landed ids and round-trips") {
-    // the pure encoding kernel at dead-lane scale: 20k absorbed ids
+  test("absorbed-range merging stays O(#gaps) at 10k+ landed ids") {
+    // the pure merge kernel at dead-lane scale: 20k absorbed ids
     // around two permanent gaps cost TWO ranges, not 20k entries
     val ids = ((1L to 10000L) ++ (20001L to 30000L)).reverse
     val merged = RelationStore.mergeRanges(ids.map(i => (i, i)))
     assert(merged == Seq((1L, 10000L), (20001L, 30000L)))
-    val s = RelationStore.formatRanges(merged)
-    assert(s == "1-10000,20001-30000" && s.length < 25, s)
-    assert(RelationStore.parseRanges(s) == merged)
-    // overlap + adjacency coalesce; singletons serialize bare, which
-    // makes legacy single-id files a valid instance of the format
+    // overlap + adjacency coalesce
     assert(RelationStore.mergeRanges(Seq((1L, 3L), (4L, 6L), (5L, 9L), (12L, 12L))) ==
       Seq((1L, 9L), (12L, 12L)))
-    assert(RelationStore.formatRanges(Seq((7L, 7L), (9L, 11L))) == "7,9-11")
-    assert(RelationStore.parseRanges("3,4,5,9") == Seq((3L, 5L), (9L, 9L)))
-    intercept[NumberFormatException](RelationStore.parseRanges("5-2"))
-    intercept[NumberFormatException](RelationStore.parseRanges("1,x"))
   }
 
-  test("a dead producer lane keeps _delta_absorbed interval-encoded and tiny") {
+  test("a dead producer lane keeps the manifest's absorbed list tiny") {
     val root = newRoot()
     val store = new RelationStore(spark, root, deltaFoldEvery = 4)
     // lane id 0 never lands; survivors land a dense band and a far band
@@ -470,26 +462,29 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1L to 24L).foreach(i => store.appendDelta(df(Seq((i, s"x$i"))), "t", i))
     (100000L to 100011L).foreach(i => store.appendDelta(df(Seq((i, s"y$i"))), "t", i))
     store.foldDeltas("t")
-    def absorbedFile(): String = {
+    // (watermark, absorbed ranges) as the head's manifest records them
+    def marks(): (Any, Any) = {
       val v = store.versions("t").max
-      val p = java.nio.file.Paths.get(root, "main", "t", s"v$v", "_delta_absorbed")
-      if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).trim else ""
+      val p = java.nio.file.Paths.get(root, "main", "t", s"v$v", "_manifest.json")
+      val m = graft.artifacts.Json.parse(java.nio.file.Files.readString(p))
+        .asInstanceOf[Map[String, Any]]
+      (m("watermark"), m("absorbed"))
     }
     // 36 absorbed ids above the open gap → exactly two ranges, O(1) bytes
-    assert(absorbedFile() == "1-24,100000-100011", absorbedFile())
+    assert(marks() == ((-1L, Seq(Seq(1L, 24L), Seq(100000L, 100011L)))), marks())
     assert(store.read("t").count() == 36)
     // replay of an absorbed id skips; the gap id itself still lands
     assert(!store.appendDelta(df(Seq((24L, "dup"))), "t", 24L))
     assert(store.appendDelta(df(Seq((0L, "late"))), "t", 0L))
     store.foldDeltas("t")
     // the filled gap drains the leading range into the watermark
-    assert(absorbedFile() == "100000-100011", absorbedFile())
+    assert(marks() == ((24L, Seq(Seq(100000L, 100011L)))), marks())
     assert(store.read("t").count() == 37)
     assert((0L to 24L).forall(store.batchLanded("t", _)))
     assert(store.batchLanded("t", 100011L) && !store.batchLanded("t", 50000L))
   }
 
-  test("a failed read of a PRESENT _delta_absorbed fails loudly, never as row duplication") {
+  test("a failed read of a PRESENT manifest fails loudly, never as row duplication") {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.flaky.impl", classOf[FlakyReadFs].getName)
     hc.set("fs.AbstractFileSystem.flaky.impl", classOf[FlakyReadAbstractFs].getName)
@@ -497,17 +492,17 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     // flaky is an unknown scheme (declared non-atomic) → single-writer
     val store = new RelationStore(spark, root,
       deltaFoldEvery = 3, concurrentWriters = false)
-    // land with a gap so the fold writes a real _delta_absorbed
+    // land with a gap so the fold's manifest records absorbed ranges
     Seq(0L, 1L, 3L).foreach(i => store.appendDelta(df(Seq((i, s"x$i"))), "t", i))
     assert(store.read("t").count() == 3)
-    FlakyReadFs.failSubstring = "_delta_absorbed"
+    FlakyReadFs.failSubstring = "_manifest.json"
     try {
-      // treating the unreadable set as EMPTY would re-list absorbed
-      // deltas as live and union their files over the manifest entries
-      // that already carry them — silent duplication; the store must
-      // name the file and stop instead
+      // treating the unreadable manifest as ABSENT would read no delta
+      // as absorbed, and a fallback to the live deltas would union their
+      // files over the entries that already carry them — silent
+      // duplication; the store must name the file and stop instead
       val e = intercept[IllegalStateException](store.read("t").count())
-      assert(e.getMessage.contains("_delta_absorbed") &&
+      assert(e.getMessage.contains("_manifest.json") &&
         e.getMessage.contains("refusing"), e.getMessage)
     } finally FlakyReadFs.failSubstring = ""
     // with reads healthy again the table is intact

@@ -1239,7 +1239,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     wq("dbt_project.yml",
       """name: qcdemo
-        |query-comment: "run by qcdemo node={{ node_id }} inv={{ invocation_id }}"
+        |query-comment: "run by qcdemo node={{ node_id }} inv={{ invocation_id }} id={{node_id }}"
         |""".stripMargin)
     wq("models/attributed.sql", "{{ config(materialized='table') }}\nSELECT 42 AS v")
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -1267,9 +1267,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(_._1 == "model.qcdemo.attributed")
       assert(forNode.nonEmpty,
         s"no job attributed to the model; saw groups: ${seen.toArray.mkString(", ")}")
-      // the custom template interpolates node and invocation ids
-      assert(forNode.forall(_._2 ==
-        s"run by qcdemo node=model.qcdemo.attributed inv=${runner.invocationId}"),
+      // the custom template interpolates node and invocation ids, at
+      // any spacing inside the braces
+      assert(forNode.forall(_._2 == s"run by qcdemo node=model.qcdemo.attributed " +
+        s"inv=${runner.invocationId} id=model.qcdemo.attributed"),
         forNode.mkString(", "))
     } finally spark.sparkContext.removeSparkListener(listener)
     // default header (no query-comment config): graft|cmd|inv|node

@@ -470,7 +470,9 @@ class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // retention would reclaim the files the version scans
     writer.writeBucketed(df(Seq((1L, "a"), (2L, "b"))), "t_bstrict", Seq("id"), 2)
     val fresh = new graft.exec.RelationStore(spark, root)
-    for ((t, keys) <- Seq("t_strict" -> Seq("sizes", "ts"), "t_bstrict" -> Seq("buckets", "bucket_by"))) {
+    val versionState = Seq("schema", "watermark", "absorbed", "batch")
+    for ((t, keys) <- Seq("t_strict" -> (Seq("sizes", "ts") ++ versionState),
+        "t_bstrict" -> Seq("buckets", "bucket_by"))) {
       val mf = java.nio.file.Paths.get(fresh.currentPath(t).get).resolve("_manifest.json")
       val raw = java.nio.file.Files.readString(mf)
       val fields = graft.artifacts.Json.parse(raw).asInstanceOf[Map[String, Any]]
@@ -489,6 +491,54 @@ class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.writeString(mf, raw)
       assert(fresh.read(t).count() == 2)
     }
+  }
+
+  test("every committed version dir holds its manifest and data files only") {
+    // the manifest is a version's one metadata file: schema, delta
+    // marks and batch tag included, through every commit path
+    val root = java.nio.file.Files.createTempDirectory("layout_wh").toString
+    val st = new RelationStore(spark, root, retainVersions = 100, deltaFoldEvery = 100)
+    st.write(df((0L until 40L).map(i => (i, s"r$i"))).repartition(4), "t", batchTag = Some(7L))
+    assert(st.appendDelta(df(Seq((40L, "d0"))), "t", 0L))
+    assert(st.appendDelta(df(Seq((41L, "d1"))), "t", 1L))
+    assert(st.foldDeltas("t") == 2)
+    assert(st.compact("t") == 1)
+    // fold and compaction carry the batch tag and the delta marks
+    assert(st.lastBatchTag("t").contains(7L) && st.landedBatchIds("t").isEmpty)
+    assert(!st.appendDelta(df(Seq((1L, "replay"))), "t", 1L))
+    // forced re-slot: a competitor commits while this write stages, so
+    // the write re-commits above it, referencing its staged files
+    val competitor = new RelationStore(spark, root, retainVersions = 100)
+    st.write(df(Seq((1L, "mine"))), "t",
+      validate = Some(_ => competitor.write(df(Seq((2L, "theirs"))), "t")))
+    assert(st.read("t").collect().map(_.getString(1)).toSeq == Seq("mine"))
+    assert(st.lastBatchTag("t").isEmpty)
+    import spark.implicits._
+    val parts = Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "v", "p")
+    st.write(parts, "tp", Seq("p"))
+    st.writePartitions(Seq((3L, "c", 2)).toDF("id", "v", "p"), "tp", Seq("p"))
+    assert(st.read("tp").count() == 2)
+    import scala.jdk.CollectionConverters._
+    def filesUnder(d: java.nio.file.Path): Seq[String] =
+      java.nio.file.Files.walk(d).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).map(_.getFileName.toString)
+        // filesystem checksum siblings (.crc) are not store files
+        .filterNot(_.endsWith(".crc")).toSeq
+    for (t <- Seq("t", "tp")) {
+      val table = java.nio.file.Paths.get(root, "main", t)
+      val committed = st.versions(t).map(v => table.resolve(s"v$v"))
+      assert(committed.size == (if (t == "t") 5 else 2), committed)
+      for (d <- committed) {
+        val files = filesUnder(d)
+        // `_SUCCESS` is the Spark writer's job marker, not store state
+        val meta = files.filterNot(f => f.startsWith("part-") || f == "_SUCCESS")
+        assert(meta == Seq("_manifest.json"), s"$d: $files")
+      }
+    }
+    // the re-slotted head wrote no data of its own: its manifest names
+    // the files staged in the slot it lost
+    val head = java.nio.file.Paths.get(st.currentPath("t").get)
+    assert(filesUnder(head) == Seq("_manifest.json"), filesUnder(head))
   }
 
   test("vacuum reclaims torn (uncommitted) versions, never committed history") {

@@ -1618,6 +1618,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = SimilarityOps.simMmrSelect(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
+    // the probe rides the candidate query: a warm build runs one job
+    val (_, jobs) = JobCount(spark)(SimilarityOps.simMmrSelect(spark, sf))
+    assert(jobs == 1, s"$jobs Spark jobs per build")
     assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L))
     assert(out.map(_._2).distinct.length == 4, "selections must be distinct")
     val top = SimilarityOps.simTopK(spark, sf).collect()

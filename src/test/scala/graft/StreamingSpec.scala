@@ -28,6 +28,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     src.write.mode("overwrite").parquet(s"$work/in")
   }
 
+  /** Persist a reference artifact and re-read it: the ingest tick's
+    * frozen-artifact contract takes parquet reads, never live plans
+    * over the corpus ([[Streaming.requireFrozen]]).
+    */
+  private def frozen(df: org.apache.spark.sql.DataFrame, dir: String) = {
+    df.write.mode("overwrite").parquet(s"$work/$dir")
+    spark.read.parquet(s"$work/$dir")
+  }
+
   test("available-now windowed aggregate matches the batch result") {
     val store = new RelationStore(spark, s"$work/wh")
     val agg = Streaming.dailyCounts(Streaming.eventStream(spark, s"$work/in"))
@@ -427,27 +436,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val isNew = pmod(col("doc_id"), lit(10)) >= 8
     // frozen artifacts trained on the already-ingested slice
     val index = DedupOps.buildDedupIndex(docs.filter(!isNew))
-    val charLm = TextOps.charLmModel(spark, sf)
+    val charLm = frozen(TextOps.charLmModel(spark, sf), "tick_charlm")
     val scored = TextOps.txtCharLmScore(spark, sf)
       .select(col("doc_id"), col("avg_millibits"))
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-    val thr = TextOps.ccnetLangThresholds(scored)
-    val boiler = TextOps.boilerplateHashes(docs.filter(!isNew))
+    val thr = frozen(TextOps.ccnetLangThresholds(scored), "tick_thr")
+    val boiler = frozen(TextOps.boilerplateHashes(docs.filter(!isNew)), "tick_boiler")
     val idxPath = s"$work/tick_ivfpq"
     SimilarityOps.persistIvfPqIndex(spark, sf, idxPath)
     val centroids = spark.read.parquet(s"$idxPath/centroids")
     val codebook = spark.read.parquet(s"$idxPath/codebook")
-    // frozen-artifact contract: reference sides are PERSISTED tables
-    // re-read per micro-batch (never a live plan over the corpus)
-    DedupOps.cdcChunkIndexOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tick_cdc_idx")
-    val cdcRef = spark.read.parquet(s"$work/tick_cdc_idx")
-    DedupOps.shinglePostingsIndexOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tick_edge_idx")
-    val edgeRef = spark.read.parquet(s"$work/tick_edge_idx")
-    DedupOps.spanGramSetOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tick_span_idx")
-    val spanGrams = spark.read.parquet(s"$work/tick_span_idx")
+    val cdcRef = frozen(DedupOps.cdcChunkIndexOf(docs.filter(!isNew)), "tick_cdc_idx")
+    val edgeRef = frozen(DedupOps.shinglePostingsIndexOf(docs.filter(!isNew)), "tick_edge_idx")
+    val spanGrams = frozen(DedupOps.spanGramSetOf(docs.filter(!isNew)), "tick_span_idx")
     def tick(): Unit =
       Streaming.runIngestTick(Streaming.enrichedDocumentStream(spark, newIn),
         index, charLm, thr, boiler, centroids, codebook, cdcRef, edgeRef, spanGrams,
@@ -517,24 +518,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     live.write.mode("overwrite").parquet(s"$work/frozen_ok")
     Streaming.requireFrozen("spanGrams",
       spark.read.parquet(s"$work/frozen_ok").filter(col("g") =!= "").select(col("g")))
-    // and the tick enforces the contract under the debug flag, failing
-    // fast (before any stream starts) naming the offending reference
+    // and the tick enforces the contract, failing fast (before any
+    // stream starts) naming the offending reference
     val idx = DedupOps.buildDedupIndex(docs.limit(5))
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").as("doc_id"), col("embedding"))
     docs.select(col("doc_id"), col("lang"), col("source"), col("text"))
       .join(emb, Seq("doc_id")).limit(3)
       .write.mode("overwrite").parquet(s"$work/fz_input")
-    spark.conf.set("spark.graft.ingest.validateFrozen", "true")
-    try {
-      val err = intercept[IllegalArgumentException] {
-        Streaming.runIngestTick(
-          Streaming.enrichedDocumentStream(spark, s"$work/fz_input"),
-          idx, live, live, live, live, live, live, live, live,
-          new RelationStore(spark, s"$work/wh_frozen"), "fz", s"$work/cp_fz")
-      }
-      assert(err.getMessage.contains("charLm"), err.getMessage)
-    } finally spark.conf.unset("spark.graft.ingest.validateFrozen")
+    val err = intercept[IllegalArgumentException] {
+      Streaming.runIngestTick(
+        Streaming.enrichedDocumentStream(spark, s"$work/fz_input"),
+        idx, live, live, live, live, live, live, live, live,
+        new RelationStore(spark, s"$work/wh_frozen"), "fz", s"$work/cp_fz")
+    }
+    assert(err.getMessage.contains("charLm"), err.getMessage)
   }
 
   test("streaming multimodal dedup probes the bucketed phash index; stream equals batch") {
@@ -1319,25 +1317,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .join(emb, Seq("doc_id"))
     val isNew = pmod(col("doc_id"), lit(10)) >= 8
     val index = DedupOps.buildDedupIndex(docs.filter(!isNew))
-    val charLm = TextOps.charLmModel(spark, sf)
+    val charLm = frozen(TextOps.charLmModel(spark, sf), "tickr_charlm")
     val scored = TextOps.txtCharLmScore(spark, sf)
       .select(col("doc_id"), col("avg_millibits"))
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-    val thr = TextOps.ccnetLangThresholds(scored)
-    val boiler = TextOps.boilerplateHashes(docs.filter(!isNew))
+    val thr = frozen(TextOps.ccnetLangThresholds(scored), "tickr_thr")
+    val boiler = frozen(TextOps.boilerplateHashes(docs.filter(!isNew)), "tickr_boiler")
     val idxPath = s"$work/tick_replay_ivfpq"
     SimilarityOps.persistIvfPqIndex(spark, sf, idxPath)
     val centroids = spark.read.parquet(s"$idxPath/centroids")
     val codebook = spark.read.parquet(s"$idxPath/codebook")
-    DedupOps.cdcChunkIndexOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tickr_cdc_idx")
-    val cdcRef = spark.read.parquet(s"$work/tickr_cdc_idx")
-    DedupOps.shinglePostingsIndexOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tickr_edge_idx")
-    val edgeRef = spark.read.parquet(s"$work/tickr_edge_idx")
-    DedupOps.spanGramSetOf(docs.filter(!isNew))
-      .write.mode("overwrite").parquet(s"$work/tickr_span_idx")
-    val spanGrams = spark.read.parquet(s"$work/tickr_span_idx")
+    val cdcRef = frozen(DedupOps.cdcChunkIndexOf(docs.filter(!isNew)), "tickr_cdc_idx")
+    val edgeRef = frozen(DedupOps.shinglePostingsIndexOf(docs.filter(!isNew)), "tickr_edge_idx")
+    val spanGrams = frozen(DedupOps.spanGramSetOf(docs.filter(!isNew)), "tickr_span_idx")
     def tick(cp: String): Unit =
       Streaming.runIngestTick(Streaming.enrichedDocumentStream(spark, newIn),
         index, charLm, thr, boiler, centroids, codebook, cdcRef, edgeRef, spanGrams,
